@@ -7,3 +7,9 @@ Spark DataFrames + Arrow-batched pandas UDFs throughout.
 """
 
 __version__ = "0.1.0"
+
+# Spark Python workers import this package when they unpickle an engine
+# kernel; make their per-task importlib.invalidate_caches() cheap there.
+from . import zipcache as _zipcache
+
+_zipcache.install()

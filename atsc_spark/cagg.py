@@ -433,19 +433,22 @@ class ContinuousRollups:
             # scheduling overhead dominated the one-dirty-day floor):
             # the grains are unioned under a `grain` partition column
             # and written partitionBy(grain, day) in one action.  The
-            # 1m subplan appears in every branch and the 1h subplan in
-            # two, but Spark's exchange reuse materializes each
-            # aggregation exchange once — the source tiers (and any
-            # tier-0/1/2 frame decode) are scanned once per refresh,
-            # not once per grain.  Commit renames are unchanged: per
-            # (grain, day), same staged-rename protocol.
+            # 1m subplan feeds every branch and the 1h subplan two, and
+            # exchange reuse does NOT dedupe them: the day filter is
+            # pushed below the 1m aggregate in the 1m branch only, so
+            # the branches differ.  r1m is therefore persisted for the
+            # write — the source tiers (and any tier-0/1/2 frame
+            # decode) are scanned and the 1m aggregate runs once per
+            # refresh, not once per grain; the 1h aggregate over the
+            # cached 1m rows still runs twice.  Commit renames are
+            # unchanged: per (grain, day), same staged-rename protocol.
             t_group = _time_mod.time()
             # re-attach the partition day from the bucket (buckets at
             # 1m/1h/1d granularity never straddle a UTC day boundary)
             r1m = rollup(
                 src.select("conv_id", "metric", "bucket_ts", "value"),
                 GRAINS["1m"],
-            ).withColumn("day", F.to_date("bucket_ts"))
+            ).withColumn("day", F.to_date("bucket_ts")).persist()
             r1h = rollup_cascade_step(r1m.drop("day"), GRAINS["1h"]).withColumn(
                 "day", F.to_date("bucket_ts")
             )
@@ -459,13 +462,16 @@ class ContinuousRollups:
                 )
                 union = part if union is None else union.unionByName(part)
             staging = f"{self.base}/_staging/all"
-            (
-                union.repartition(max(len(compute) // 8, 1), "grain", "day")
-                .sortWithinPartitions("grain", "day", "conv_id", "metric", "bucket_ts")
-                .write.mode("overwrite")
-                .partitionBy("grain", "day")
-                .parquet(staging)
-            )
+            try:
+                (
+                    union.repartition(max(len(compute) // 8, 1), "grain", "day")
+                    .sortWithinPartitions("grain", "day", "conv_id", "metric", "bucket_ts")
+                    .write.mode("overwrite")
+                    .partitionBy("grain", "day")
+                    .parquet(staging)
+                )
+            finally:
+                r1m.unpersist()
             written = self.spark.read.parquet(staging)
             counts = {
                 (r["grain"], r["day"]): r["n"]

@@ -207,7 +207,10 @@ def rle_compress_batch(
     if len(flat):
         change[0] = True
         change[1:] = bits_all[1:] != bits_all[:-1]
-        change[off[1:-1]] = True  # frame boundaries always start a run
+        # frame boundaries always start a run; an empty trailing frame
+        # puts a boundary at len(flat), past the last sample
+        bounds = off[1:-1]
+        change[bounds[bounds < len(flat)]] = True
     rstart_g = np.flatnonzero(change)
     rid = fid_all[rstart_g]  # frame of each run (non-decreasing)
     rbits = bits_all[rstart_g]

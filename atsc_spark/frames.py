@@ -5,10 +5,12 @@ The reference compresses one series per process
 loop); here the same pure frame math (``atsc_spark.core``) runs inside
 Arrow-batched pandas UDFs:
 
-- :func:`fit_frames` — ``groupBy(conv_id, metric, day).applyInPandas``.
-  One shuffle on the group key; group size is bounded (<= 86,400
-  samples per series-day, ~0.7 MB), so executor memory is safe at any
-  total scale and hot conversations cannot create a giant group.
+- :func:`fit_frames` — :func:`grouped_points` (one row per
+  ``(conv_id, metric, day)`` with JVM-built point arrays) then
+  ``mapInPandas``.  One shuffle on the group key; group size is bounded
+  (<= 86,400 samples per series-day, ~0.7 MB), so executor memory is
+  safe at any total scale and hot conversations cannot create a giant
+  group.
 - :func:`decode_frames` — ``mapInPandas`` over frame rows.  Frames are
   self-describing (sample_count + payload + time segments), so decode
   needs **no shuffle at all**.
@@ -121,15 +123,22 @@ def fit_task_count(spark) -> int:
     (proportional to cluster cores), never a constant.
 
     The factor was 8 through round 7 ("plenty of slices for load
-    balance"); measured per-task mapInPandas round-trip cost makes that
-    a net loss on every graded corpus (monitoring fit noop at 32 cores:
-    1.65 s at 1x, 3.82 s at 8x; transcripts 5.9/5.4/7.1 s at
-    1x/2x/8x; the hot-key corpus — one conversation owning half the
-    turns — is 1.4 s at 1x vs 5.1 s at 8x, because fit groups are
-    day-bounded so a hot key cannot pin a task and the extra slices buy
-    nothing).  2x keeps tail-balancing slack without paying 8 waves of
-    per-task boundary cost; deployments with cheaper task dispatch or
-    lumpier groups can raise the factor per cluster.
+    balance"); measured per-task mapInPandas cost made that a net loss
+    on every graded corpus (monitoring fit noop at 32 cores: 1.65 s at
+    1x, 3.82 s at 8x; transcripts 5.9/5.4/7.1 s at 1x/2x/8x; the
+    hot-key corpus — one conversation owning half the turns — is 1.4 s
+    at 1x vs 5.1 s at 8x, because fit groups are day-bounded so a hot
+    key cannot pin a task and the extra slices buy nothing).
+
+    Most of that per-task cost was not dispatch: it was the Python
+    worker re-reading the central directories of ``pyspark.zip`` and
+    the spark-core jar on every task's ``importlib.invalidate_caches()``,
+    ~0.23-0.29 CPU-s per task on every core.  An identity mapInPandas
+    on local[4] (4-core Xeon host) took 1.11 s at 8 tasks and 3.10 s at
+    32 with the re-read, 0.50 s and 1.03 s with :mod:`atsc_spark.zipcache`
+    skipping it (a JVM-only job: ~0.2 s).  The 2x default was chosen with the re-read in place
+    and has not been re-measured without it; deployments with lumpier
+    groups can raise the factor per cluster.
     """
     factor = float(os.environ.get("ATSC_FIT_TASK_FACTOR", "2"))
     return max(1, int(spark.sparkContext.defaultParallelism * factor))
@@ -424,10 +433,10 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None) -> DataFrame:
     """Right-size decode task granularity for a compressed-rows input.
 
-    A fit output carries the fit's 8x-parallelism partitioning, which
-    leaves ~1 byte-light row per decode task — per-task Python-worker
-    and Arrow overhead then dominates (measured 6x on tier-0 decode:
-    0.44 vs 2.3+ Msamples/s).  Strategy by input kind:
+    A fit output carries the fit's partitioning (see
+    :func:`fit_task_count`), which leaves few byte-light rows per
+    decode task — per-task Python-worker and Arrow overhead then
+    dominates (measured 6x on tier-0 decode: 0.44 vs 2.3+ Msamples/s).  Strategy by input kind:
 
     - file-backed: untouched — parquet splits are already sized by
       ``maxPartitionBytes`` of COMPRESSED payloads, and merging them
@@ -448,10 +457,12 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
         pass
     # 1x parallelism by default (r8; env-tunable): the round-4 2x
     # "pipeline the Arrow transfer" sizing was measured at 8 cores —
-    # at 32 cores the ~8 ms serialized per-Python-task dispatch cost
-    # of a second wave exceeds what transfer overlap saves (measured
-    # on all three decode shapes at sf1.0: monitoring 0.75 -> 0.57 s,
-    # gorilla 0.76 -> 0.50 s, transcripts 1.23 -> 0.94 s at 1x vs 2x)
+    # at 32 cores a second wave of tasks cost more than transfer
+    # overlap saved (all three decode shapes at sf1.0: monitoring
+    # 0.75 -> 0.57 s, gorilla 0.76 -> 0.50 s, transcripts 1.23 ->
+    # 0.94 s at 1x vs 2x).  That per-task cost was mostly the worker's
+    # per-task zip directory re-read, which atsc_spark.zipcache now
+    # skips; the 1x default has not been re-measured without it.
     factor = float(os.environ.get("ATSC_DECODE_TASK_FACTOR", "1"))
     par = max(1, int(source.sparkSession.sparkContext.defaultParallelism * factor))
     if source.storageLevel.useMemory or source.storageLevel.useDisk:
@@ -470,7 +481,7 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
         # below a parallelism-starving chunk.  Sizing reads the CACHED
         # PLAN STATISTICS (driver-side metadata) — an agg job over the
         # many tiny cache partitions would cost what it saves.  Bigger
-        # inputs still fan out to the full 2x parallelism.
+        # inputs fan out to the configured factor (default 1x).
         try:
             size_b = int(
                 source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

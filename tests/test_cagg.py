@@ -476,3 +476,74 @@ def test_state_log_mixed_spark_and_pyarrow_files(spark, cagg_series, tmp_path):
     assert all(iso in rec for iso in refreshed)
     # nothing dirty on a second pass: the mixed log read back exactly
     assert cagg.refresh() == []
+
+
+def _count_nodes(spark, plan, name, seen_caches):
+    """``name`` nodes a physical plan executes: descends into adaptive
+    plans and query stages, and into each cached relation's plan once
+    (a cache is computed once, however many scans read it)."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif cls == "InMemoryTableScanExec":
+        key = spark._jvm.System.identityHashCode(plan.relation().cacheBuilder())
+        kids = [] if key in seen_caches else [plan.relation().cachedPlan()]
+        seen_caches.add(key)
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    return int(plan.nodeName() == name) + sum(
+        _count_nodes(spark, k, name, seen_caches) for k in kids
+    )
+
+
+def test_refresh_decodes_each_source_tier_once(
+    spark, cagg_series, tmp_path, monkeypatch
+):
+    """The one-job refresh write feeds all three grains from the same
+    1m rollup; the lossy-tier frame decode under it must run once per
+    refresh, not once per grain branch."""
+    from datetime import timedelta
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = TieredStore(
+        spark,
+        str(tmp_path / "caggonce"),
+        TierPolicy(t0_days=0, t1_days=1, t2_days=2, t3_days=30000),
+    )
+    store.write_raw(cagg_series)
+    max_day = max(
+        r.day
+        for r in cagg_series.select(F.to_date("bucket_ts").alias("day"))
+        .distinct()
+        .collect()
+    )
+    store.retention_pass(max_day + timedelta(days=1))
+    assert store.tier_days("tier1") and store.tier_days("tier2")
+
+    counts = []
+    original = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plan = self._df._jdf.queryExecution().executedPlan()
+        counts.append(_count_nodes(spark, plan, "MapInPandas", set()))
+        return original(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    cagg = ContinuousRollups(spark, store)
+    cagg.refresh()
+    monkeypatch.undo()
+    assert counts == [2]  # one decode per lossy tier (tier1, tier2)
+    # the shared 1m rollup is released once the write is done
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+    # lossy tiers keep every timestamp: buckets and counts are exact
+    for grain in GRAINS:
+        a = _pdf(cagg.read(grain))
+        b = _pdf(_recompute(cagg_series, grain))
+        assert len(a) == len(b) > 0
+        for c in ("conv_id", "metric", "bucket_ts", "cnt"):
+            assert np.array_equal(a[c].to_numpy(), b[c].to_numpy())

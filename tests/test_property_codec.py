@@ -329,3 +329,67 @@ def test_batchfit_zero_stop_fallback():
             s = compress_best(np.asarray(d, dtype=np.float64), e)
             assert (r.compressor, r.payload) == (s.compressor, s.payload)
             assert (r.error == s.error) or (np.isnan(r.error) and np.isnan(s.error))
+
+
+def _rle_batch_matches_sequential(datas, stats_list):
+    from atsc_spark.core.simple import rle_compress, rle_compress_batch
+
+    got = rle_compress_batch(datas, stats_list)
+    assert got == [rle_compress(d, s) for d, s in zip(datas, stats_list)]
+
+
+def test_rle_batch_equals_sequential_with_empty_frames():
+    """rle_compress_batch is byte-identical to per-frame rle_compress
+    on adversarial frames — NaN, -0.0, every bit-depth — with empty
+    frames first, between, last and alone."""
+    from atsc_spark.core.stats import F64, I16, I32, U8, DataStats, data_stats
+
+    nonempty = [
+        np.array([1.0, 1.0, 2.0, 255.0, 0.0]),               # u8
+        np.array([-3.0, -3.0, 700.0, -3.0]),                 # i16
+        np.array([70000.0, -70000.0, 70000.0]),              # i32
+        np.array([0.5, 0.5, -1.25, 1e300, 0.5]),             # f64
+        np.array([np.nan, np.nan, 1.5, np.nan]),             # NaN runs
+        np.array([-0.0, 0.0, -0.0, -0.0, 0.0]),              # signed zeros
+        np.array([7.0]),
+    ]
+    empty = np.empty(0, dtype=np.float64)
+    for depth in (U8, I16, I32, F64):
+        e_stats = DataStats(0.0, 0.0, 0, 0, 0.0, depth, False)
+
+        def stats_of(frames):
+            return [data_stats(d) if len(d) else e_stats for d in frames]
+
+        shapes = [
+            [empty],
+            [empty, empty, empty],
+            nonempty + [empty],                                   # trailing
+            nonempty + [empty, empty],
+            [empty] + nonempty,                                   # leading
+            nonempty[:3] + [empty] + nonempty[3:],                # middle
+            [f for d in nonempty for f in (d, empty)],            # alternating
+        ]
+        for frames in shapes:
+            _rle_batch_matches_sequential(frames, stats_of(frames))
+
+
+@given(
+    st.lists(
+        st.lists(
+            st.one_of(st.sampled_from([0.0, -0.0, 1.0, 300.0, -7.0]), finite_floats),
+            min_size=0,
+            max_size=40,
+        ),
+        min_size=1,
+        max_size=10,
+    )
+)
+@settings(max_examples=60, deadline=None)
+def test_rle_batch_equals_sequential(frame_lists):
+    from atsc_spark.core.stats import U8, DataStats, data_stats
+
+    datas = [np.asarray(f, dtype=np.float64) for f in frame_lists]
+    e_stats = DataStats(0.0, 0.0, 0, 0, 0.0, U8, False)
+    _rle_batch_matches_sequential(
+        datas, [data_stats(d) if len(d) else e_stats for d in datas]
+    )
