@@ -20,8 +20,8 @@ any writer to report what it touched.
 
 Refresh shape (scale notes):
 
-- only dirty day partitions are READ (``day`` is the partition column,
-  so the ``isin`` filter prunes directories at the scan);
+- only dirty day partitions are READ, each from its most faithful
+  tier, through the store's own reader (``TieredStore.read_days``);
 - the cascade re-aggregates the next-finer grain (1h from the fresh
   1m, 1d from the fresh 1h) — one shuffle per grain over already
   day-bounded data, mirroring ``rollup_cascade``;
@@ -47,13 +47,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointLog
-from .frames import decode_frames, prune_frames_to_range
-from .lossless import decode_lossless
+from .retention import _POINT_TIERS, _epoch_range
 from .rollup import rollup, rollup_cascade_step
 
 GRAINS: dict[str, str] = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
-
-_SOURCE_TIERS = ("raw", "tier0", "tier1", "tier2")
 
 _STATE_SCHEMA = "day string, fingerprint string, updated_at timestamp"
 
@@ -76,7 +73,7 @@ class ContinuousRollups:
         ``by_tier`` (from :meth:`_bulk_listing`) to fingerprint from an
         already-fetched listing instead of 4 per-day listStatus calls."""
         parts = []
-        for tier in _SOURCE_TIERS:
+        for tier in _POINT_TIERS:
             files = (
                 by_tier[tier].get(day, set())
                 if by_tier is not None
@@ -93,7 +90,7 @@ class ContinuousRollups:
         (`TieredStore._list_tier_files`) — the per-day listing was 6 s
         of a 12 s refresh at 30 days; at a year of days it would be
         the whole wall."""
-        return {t: self.store._list_tier_files(t) for t in _SOURCE_TIERS}
+        return {t: self.store._list_tier_files(t) for t in _POINT_TIERS}
 
     def _recorded_fingerprints(self) -> dict[str, str]:
         """Latest recorded fingerprint per day (append-only log; last
@@ -157,15 +154,15 @@ class ContinuousRollups:
         pq.write_table(tbl, tmp)
         os.replace(tmp, os.path.join(local, f"fp-{uuid.uuid4().hex}.parquet"))
 
-    def _dirty_map(self) -> dict[date, str]:
-        """{dirty day: its CURRENT fingerprint} — computed once so the
-        refresh can record exactly what it compared against (a second
-        fingerprint pass would double the per-day listStatus calls,
-        thousands of redundant object-store LISTs at year scale)."""
+    def _dirty_map(self, by_tier: dict) -> dict[date, str]:
+        """{dirty day: its CURRENT fingerprint} from a
+        :meth:`_bulk_listing` — computed once so the refresh can record
+        exactly what it compared against (a second fingerprint pass
+        would double the per-day listStatus calls, thousands of
+        redundant object-store LISTs at year scale)."""
         recorded = self._recorded_fingerprints()
-        by_tier = self._bulk_listing()
         seen: set[date] = set()
-        for tier in _SOURCE_TIERS:
+        for tier in _POINT_TIERS:
             seen.update(by_tier[tier])
         # recorded days absent from every source tier (fully aged away,
         # or dropped) must be re-checked too: their fingerprint flips to
@@ -183,79 +180,9 @@ class ContinuousRollups:
         """Days whose source file set changed since the last refresh
         (new days included; fully-aged-to-rollup days show as EMPTY and
         are handled by :meth:`refresh`)."""
-        return sorted(self._dirty_map())
+        return sorted(self._dirty_map(self._bulk_listing()))
 
     # ----------------------------------------------------------- read
-
-    def _read_days(self, days: list[date]) -> DataFrame:
-        """Union read of the given day partitions, each day served by
-        its MOST FAITHFUL holder tier only (ascending tier order, same
-        rule as ``retention_pass``): a crash mid-tier-move can leave a
-        day duplicated across two tiers, and unioning every tier's copy
-        would silently DOUBLE-COUNT the day's rows in the rollups.  The
-        ``day`` column is carried through so rows aggregate under the
-        partition they came from and a refresh rewrites exactly those
-        partitions.
-
-        Decoded tiers lose the partition column through the decoder, so
-        ``day`` is re-derived as ``to_date(bucket_ts)`` — the same
-        expression ``TieredStore.write_raw`` partitions by.  Both run
-        under the engine's pinned UTC session timezone (session.py), so
-        the re-derivation reproduces the partition value exactly; a
-        deployment that overrides the session TZ between write and
-        refresh would mis-bucket boundary rows and must not do that."""
-        holder: dict[date, str] = {}
-        for tier in _SOURCE_TIERS:  # ascending fidelity order
-            for day in self.store.tier_days(tier):
-                holder.setdefault(day, tier)
-        by_tier: dict[str, list[str]] = {}
-        for d in days:
-            if d in holder:
-                by_tier.setdefault(holder[d], []).append(d.isoformat())
-
-        t0_s = min(int(_midnight_s(d)) for d in days)
-        t1_s = max(int(_midnight_s(d)) for d in days) + 86_400 + 2 * 86_400
-        parts = []
-        if "raw" in by_tier:
-            raw = self.store._read_or_empty("raw")
-            if raw is not None:
-                parts.append(
-                    raw.filter(F.col("day").isin(by_tier["raw"])).select(
-                        "day", "conv_id", "metric", "bucket_ts", "value"
-                    )
-                )
-        if "tier0" in by_tier:
-            t0 = self.store._read_or_empty("tier0")
-            if t0 is not None:
-                sel = t0.filter(F.col("day").isin(by_tier["tier0"]))
-                parts.append(
-                    decode_lossless(sel.drop("day")).withColumn(
-                        "day", F.to_date("bucket_ts")
-                    ).filter(F.col("day").isin(by_tier["tier0"])).select(
-                        "day", "conv_id", "metric", "bucket_ts", "value"
-                    )
-                )
-        for tier in ("tier1", "tier2"):
-            if tier not in by_tier:
-                continue
-            t = self.store._read_or_empty(tier)
-            if t is not None:
-                sel = prune_frames_to_range(
-                    t.filter(F.col("day").isin(by_tier[tier])),
-                    t0_s - 2 * 86_400,
-                    t1_s,
-                )
-                parts.append(
-                    decode_frames(sel).withColumn("day", F.to_date("bucket_ts"))
-                    .filter(F.col("day").isin(by_tier[tier]))
-                    .select("day", "conv_id", "metric", "bucket_ts", "value")
-                )
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     def read(self, grain: str) -> DataFrame | None:
         """The materialized rollup table for ``grain`` ('1m'/'1h'/'1d')."""
@@ -294,7 +221,7 @@ class ContinuousRollups:
         rollup table has never been refreshed (``choose_resolution``
         never picks finer than 1m, so the materialized tables cover
         every grain it can return)."""
-        lo_s, hi_s = _epoch_bounds(t0, t1)
+        lo_s, hi_s = _epoch_range(t0, t1)
         interval = self.store.choose_resolution(max(hi_s - lo_s, 1), max_points)
         grain = _GRAIN_BY_INTERVAL.get(interval)
         tbl = self.read(grain) if grain else None
@@ -402,11 +329,12 @@ class ContinuousRollups:
 
     def _refresh_locked(self, days: list[date] | None) -> list[str]:
         self._recover_state()
+        # one listing serves the fingerprints and the source read
+        by_tier = self._bulk_listing()
         if days is None:
-            fps = self._dirty_map()  # one fingerprint pass, reused below
+            fps = self._dirty_map(by_tier)  # one fingerprint pass, reused below
             days = sorted(fps)
         else:
-            by_tier = self._bulk_listing()
             fps = {d: self._day_fingerprint(d, by_tier) for d in days}
         if not days:
             return []
@@ -414,7 +342,7 @@ class ContinuousRollups:
         # existing materialized rollups, just mark clean
         compute = [d for d in days if fps[d] != "EMPTY"]
         if compute:
-            src = self._read_days(compute)
+            src = self.store.read_days(compute, by_tier)
             if src is None:
                 # non-EMPTY fingerprints but nothing readable in any
                 # tier (e.g. zero-byte leftovers from a killed writer):
@@ -445,10 +373,9 @@ class ContinuousRollups:
             t_group = _time_mod.time()
             # re-attach the partition day from the bucket (buckets at
             # 1m/1h/1d granularity never straddle a UTC day boundary)
-            r1m = rollup(
-                src.select("conv_id", "metric", "bucket_ts", "value"),
-                GRAINS["1m"],
-            ).withColumn("day", F.to_date("bucket_ts")).persist()
+            r1m = rollup(src, GRAINS["1m"]).withColumn(
+                "day", F.to_date("bucket_ts")
+            ).persist()
             r1h = rollup_cascade_step(r1m.drop("day"), GRAINS["1h"]).withColumn(
                 "day", F.to_date("bucket_ts")
             )
@@ -463,22 +390,14 @@ class ContinuousRollups:
                 union = part if union is None else union.unionByName(part)
             staging = f"{self.base}/_staging/all"
             try:
-                (
+                counts, _ = self.store._stage(
                     union.repartition(max(len(compute) // 8, 1), "grain", "day")
-                    .sortWithinPartitions("grain", "day", "conv_id", "metric", "bucket_ts")
-                    .write.mode("overwrite")
-                    .partitionBy("grain", "day")
-                    .parquet(staging)
+                    .sortWithinPartitions("grain", "day", "conv_id", "metric", "bucket_ts"),
+                    staging,
+                    ("grain", "day"),
                 )
             finally:
                 r1m.unpersist()
-            written = self.spark.read.parquet(staging)
-            counts = {
-                (r["grain"], r["day"]): r["n"]
-                for r in written.groupBy("grain", "day")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
             wall_ms = int((_time_mod.time() - t_group) * 1000) // max(
                 3 * len(compute), 1
             )
@@ -508,21 +427,4 @@ class ContinuousRollups:
         self.store._commit_partition(staging, f"_rollups/{grain}", day)
 
 
-def _midnight_s(d: date) -> int:
-    from datetime import datetime, timezone
-
-    return int(datetime(d.year, d.month, d.day, tzinfo=timezone.utc).timestamp())
-
-
 _GRAIN_BY_INTERVAL = {v: k for k, v in GRAINS.items()}
-
-
-def _epoch_bounds(t0, t1):
-    from datetime import date as _date, datetime as _datetime
-
-    from .retention import _epoch_s
-
-    lo_s, hi_s = _epoch_s(t0), _epoch_s(t1)
-    if isinstance(t1, _date) and not isinstance(t1, _datetime):
-        hi_s += 86_400 - 1
-    return lo_s, hi_s

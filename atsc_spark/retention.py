@@ -24,11 +24,20 @@ source partitions.  A crash at any point leaves *both* copies, never
 neither, readers never observe a partially-written target partition,
 and the next pass re-stages idempotently and finishes the drop).
 
-Scale shape: one Spark job per (source_tier -> target_tier) pair, not
-one per day — a year of aged days is ONE fit job whose output is
-``partitionBy("day")``.  Partition drops go through the Hadoop
+Scale shape: per (source_tier -> target_tier) pair, not per day, one
+fit/write whose output is ``partitionBy("day")`` plus one count action
+that reads the staged files back and counts the source days with them
+(:meth:`TieredStore._stage`) — a year of aged days is the same handful
+of Spark jobs as one day.  Partition drops go through the Hadoop
 FileSystem API, so any object store with a Hadoop connector works (no
 local-FS ``shutil`` assumptions).
+
+The store owns every tier decision the engine makes — which tier holds
+a day (:meth:`TieredStore.holders`), how a tier's rows become points
+(:meth:`TieredStore.tier_points`) and how a staged write is checked
+(:meth:`TieredStore._stage`).  The retention pass, the reads and the
+continuous-aggregate refresh (:mod:`atsc_spark.cagg`) all go through
+them.
 
 Data in later tiers keeps aging: a tier0 day that crosses the t1
 threshold is decoded and re-fitted into tier1, and so on.  Re-fitting
@@ -55,6 +64,8 @@ from .rollup import rollup
 _log = logging.getLogger(__name__)
 
 _TIER_ORDER = {"raw": 0, "tier0": 1, "tier1": 2, "tier2": 3, "rollup": 4}
+# tiers that hold points (rollup holds only aggregates), most faithful first
+_POINT_TIERS = tuple(t for t in sorted(_TIER_ORDER, key=_TIER_ORDER.get) if t != "rollup")
 
 
 class RetentionLockHeld(RuntimeError):
@@ -76,6 +87,23 @@ def _epoch_s(t) -> int:
             datetime(t.year, t.month, t.day, tzinfo=timezone.utc).timestamp()
         )
     return int(t)
+
+
+def _epoch_range(t0, t1) -> tuple[int | None, int | None]:
+    """A closed ``[t0, t1]`` as epoch seconds (an open end stays None).
+    A plain :class:`~datetime.date` upper bound includes its whole day."""
+    lo_s = _epoch_s(t0) if t0 is not None else None
+    hi_s = _epoch_s(t1) if t1 is not None else None
+    if hi_s is not None and isinstance(t1, date) and not isinstance(t1, datetime):
+        hi_s += 86_400 - 1
+    return lo_s, hi_s
+
+
+def _union(parts: list[DataFrame]) -> DataFrame | None:
+    out = None
+    for p in parts:
+        out = p if out is None else out.unionByName(p)
+    return out
 
 
 @dataclass
@@ -175,6 +203,102 @@ class TieredStore:
         fs.mkdirs(dst.getParent())
         if not fs.rename(src, dst):
             raise RuntimeError(f"retention: rename {src} -> {dst} failed")
+
+    def _stage(
+        self,
+        out: DataFrame,
+        staging: str,
+        by: tuple[str, ...] = ("day",),
+        src: DataFrame | None = None,
+    ) -> tuple[dict, dict]:
+        """Write ``out`` to ``staging`` with ``partitionBy(*by)`` and
+        return ``(staged, source)`` row counts: ``staged`` per staged
+        partition, read back from the files on disk (a count of the
+        writer's input would not prove the files hold the rows), and
+        ``source`` per ``by`` key of ``src`` when given.  Both come from
+        ONE action over the union of the two sides.  Keys are the ``by``
+        value, or a tuple of them when ``by`` has several columns."""
+        out.write.mode("overwrite").partitionBy(*by).parquet(staging)
+        # the partition columns' schema is known: no inference job
+        staged = self.spark.read.schema(out.select(*by).schema).parquet(staging)
+        sides = staged.select(F.lit(True).alias("staged"), *by)
+        if src is not None:
+            sides = sides.unionByName(src.select(F.lit(False).alias("staged"), *by))
+        counts: dict[bool, dict] = {True: {}, False: {}}
+        for r in sides.groupBy("staged", *by).count().collect():
+            key = r[by[0]] if len(by) == 1 else tuple(r[c] for c in by)
+            counts[r["staged"]][key] = r["count"]
+        return counts[True], counts[False]
+
+    # ------------------------------------------------------------ tiers
+
+    def holders(self, listing=None) -> dict[date, list[str]]:
+        """The point tiers holding each day, most faithful (lowest
+        ``_TIER_ORDER``) first.  A day is served, and aged, from its
+        first holder only: a crash between a move's commit and its
+        source drop leaves the day in two tiers, and unioning both
+        copies would double-count it, while fitting from the lossier
+        copy would overwrite a faithful one with a re-fit of itself.
+        The later holders are crash-leftover duplicates.
+
+        ``listing`` maps tier -> its days (any iterable of dates, e.g.
+        the ``{day: files}`` of :meth:`_list_tier_files`); without it
+        each point tier's day directories are listed."""
+        if listing is None:
+            listing = {t: self.tier_days(t) for t in _POINT_TIERS}
+        out: dict[date, list[str]] = {}
+        for tier in _POINT_TIERS:
+            for day in listing.get(tier, ()):
+                out.setdefault(day, []).append(tier)
+        return out
+
+    def tier_points(
+        self, tier: str, rows: DataFrame, span: tuple[int, int] | None = None
+    ) -> DataFrame:
+        """A point tier's (already day- and key-filtered) rows as
+        ``(conv_id, metric, bucket_ts, value)``: raw rows are selected,
+        tier0 Gorilla blocks and tier1/2 frames decoded.  ``span``
+        (closed, epoch seconds) first drops frames outside it from
+        their span metadata; Gorilla blocks are one series-day each, so
+        the caller's day filter already bounds them."""
+        if tier == "raw":
+            return rows.select("conv_id", "metric", "bucket_ts", "value")
+        if tier == "tier0":
+            return decode_lossless(rows)
+        if span is not None:
+            rows = prune_frames_to_range(rows, *span)
+        return decode_frames(rows)
+
+    def read_days(self, days: list[date], listing=None) -> DataFrame | None:
+        """Points of the given days, each day read from its most
+        faithful holder only (:meth:`holders`, from ``listing`` when
+        given); None when no tier holds readable rows for them.
+
+        Decoded tiers lose the partition column through the decoder, so
+        rows are kept by ``to_date(bucket_ts)`` — the same expression
+        :meth:`write_raw` partitions by.  Both run under the engine's
+        pinned UTC session timezone (session.py), so the re-derivation
+        reproduces the partition value exactly; a deployment that
+        overrides the session TZ between write and read would
+        mis-bucket boundary rows and must not do that."""
+        wanted = set(days)
+        by_tier: dict[str, list[str]] = {}
+        for day, held in self.holders(listing).items():
+            if day in wanted:
+                by_tier.setdefault(held[0], []).append(day.isoformat())
+        # frame spans, widened by the same ±2 days as read_series
+        span = (
+            _epoch_s(min(days)) - 2 * 86_400,
+            _epoch_s(max(days)) + 3 * 86_400,
+        )
+        parts = []
+        for tier in _POINT_TIERS:
+            rows = self._read_or_empty(tier) if tier in by_tier else None
+            if rows is not None:
+                isos = by_tier[tier]
+                points = self.tier_points(tier, rows.filter(F.col("day").isin(isos)), span)
+                parts.append(points.filter(F.to_date("bucket_ts").isin(isos)))
+        return _union(parts)
 
     # ------------------------------------------------------------ lease
 
@@ -413,20 +537,11 @@ class TieredStore:
         fs, staging_root = self._fs(self.path("_staging"))
         fs.delete(staging_root, True)
 
-        # most faithful source per day (sources scanned in ascending
-        # _TIER_ORDER, so the first holder of a day wins); lossier
-        # crash-leftover duplicates are recorded for cleanup
-        holder: dict[date, str] = {}
-        stale: dict[date, list[str]] = {}
-        for source in ("raw", "tier0", "tier1", "tier2"):
-            for day in self.tier_days(source):
-                if day in holder:
-                    stale.setdefault(day, []).append(source)
-                else:
-                    holder[day] = source
-
+        # each day moves from its most faithful holder; the lossier
+        # crash-leftover copies are dropped with the move
+        holders = self.holders()
         plan: dict[tuple[str, str], list[date]] = {}
-        for day, source in holder.items():
+        for day, (source, *_) in holders.items():
             target = self.policy.tier_for_age((today - day).days)
             if _TIER_ORDER[target] > _TIER_ORDER[source]:
                 plan.setdefault((source, target), []).append(day)
@@ -443,12 +558,7 @@ class TieredStore:
             src = self.spark.read.parquet(self.path(source)).filter(
                 F.col("day").isin(days)
             )
-            if source == "raw":
-                series = src.select("conv_id", "metric", "bucket_ts", "value")
-            elif source == "tier0":
-                series = decode_lossless(src)
-            else:
-                series = decode_frames(src)
+            series = self.tier_points(source, src)
 
             if target == "tier0":
                 out = fit_lossless(series)
@@ -461,7 +571,7 @@ class TieredStore:
                     "day", F.to_date("bucket_ts")
                 )
 
-            # one job: fit all moved days into the staging area
+            # fit all moved days into the staging area
             staging = f"{self.path('_staging')}/{target}"
             if "span_start_s" in out.columns:
                 # cluster frame rows by time inside each task (no
@@ -471,18 +581,8 @@ class TieredStore:
                 # groups; sorting by day first also minimizes the
                 # partitionBy writer's concurrently-open files
                 out = out.sortWithinPartitions("day", "span_start_s")
-            out.write.mode("overwrite").partitionBy("day").parquet(staging)
-
             # validate staged counts before touching target or source
-            written = self.spark.read.parquet(staging)
-            counts = {
-                r["day"]: r["n"]
-                for r in written.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            src_counts = {
-                r["day"]: r["n"]
-                for r in src.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
+            counts, src_counts = self._stage(out, staging, src=src)
             lineage_rows = []
             # the group runs as ONE staged job; amortize its wall over
             # the days so SUM(wall_ms) over the log reads as real wall
@@ -495,7 +595,7 @@ class TieredStore:
                     )
                 self._commit_partition(staging, target, day)
                 self._delete_partition(source, day)
-                for dup in stale.get(day, ()):  # crash-leftover lossier copies
+                for dup in holders[day][1:]:  # crash-leftover lossier copies
                     if dup != target:
                         self._delete_partition(dup, day)
                 moves.append((day.isoformat(), target))
@@ -682,21 +782,9 @@ class TieredStore:
                 F.col("day").isin(days)
             )
             staging = f"{self.path('_staging')}/{tier}"
-            (
-                src.repartition(len(days), "day")
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(staging)
+            counts, src_counts = self._stage(
+                src.repartition(len(days), "day"), staging, src=src
             )
-            written = self.spark.read.parquet(staging)
-            counts = {
-                r["day"]: r["n"]
-                for r in written.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            src_counts = {
-                r["day"]: r["n"]
-                for r in src.groupBy("day").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
             done: list[str] = []
             for day in days:
                 iso = day.isoformat()
@@ -735,8 +823,9 @@ class TieredStore:
         metrics: list[str] | None = None,
     ) -> DataFrame:
         """Unified read across tiers: raw rows ∪ decoded tier0 blocks ∪
-        decoded tier1/2 frames.  (Rollup-only days are aggregates and
-        are served from read_rollup.)
+        decoded tier1/2 frames, each day from its most faithful holder
+        (:meth:`holders`).  (Rollup-only days are aggregates and are
+        served from read_rollup.)
 
         With a time range ``[t0, t1]`` (closed interval; epoch seconds,
         :class:`~datetime.datetime` or :class:`~datetime.date`), the
@@ -771,14 +860,7 @@ class TieredStore:
         so filtering here is what keeps a single-series read from
         decoding the whole store.
         """
-        lo_s = _epoch_s(t0) if t0 is not None else None
-        hi_s = _epoch_s(t1) if t1 is not None else None
-        if (
-            hi_s is not None
-            and isinstance(t1, date)
-            and not isinstance(t1, datetime)
-        ):
-            hi_s += 86_400 - 1  # a date upper bound includes its whole day
+        lo_s, hi_s = _epoch_range(t0, t1)
 
         def key_bound(df: DataFrame) -> DataFrame:
             if conv_ids is not None:
@@ -812,35 +894,29 @@ class TieredStore:
                 df = df.filter(F.col("bucket_ts") <= F.timestamp_seconds(F.lit(hi_s)))
             return df
 
-        parts: list[DataFrame] = []
-        raw = self._read_or_empty("raw")
-        if raw is not None:
-            parts.append(
-                ts_trim(
-                    key_bound(day_bound(raw)).select(
-                        "conv_id", "metric", "bucket_ts", "value"
-                    )
-                )
+        span = None
+        if lo_s is not None or hi_s is not None:
+            span = (
+                lo_s if lo_s is not None else -(2**62),
+                hi_s if hi_s is not None else 2**62,
             )
-        t0_df = self._read_or_empty("tier0")
-        if t0_df is not None:
-            parts.append(ts_trim(decode_lossless(key_bound(day_bound(t0_df)))))
-        for tier in ("tier1", "tier2"):
-            t = self._read_or_empty(tier)
-            if t is not None:
-                pruned = key_bound(day_bound(t))
-                if lo_s is not None or hi_s is not None:
-                    pruned = prune_frames_to_range(
-                        pruned,
-                        lo_s if lo_s is not None else -(2**62),
-                        hi_s if hi_s is not None else 2**62,
-                    )
-                parts.append(ts_trim(decode_frames(pruned)))
-        if not parts:
+        holders = self.holders()
+        parts: list[DataFrame] = []
+        for tier in _POINT_TIERS:
+            held = [d for d, h in holders.items() if tier in h]
+            rows = self._read_or_empty(tier) if held else None
+            if rows is None:
+                continue
+            rows = key_bound(day_bound(rows))
+            # a crash-leftover copy is served by its more faithful
+            # holder; the filter exists only while such a copy does
+            dup = [d.isoformat() for d in held if holders[d][0] != tier]
+            if dup:
+                rows = rows.filter(~F.col("day").isin(dup))
+            parts.append(ts_trim(self.tier_points(tier, rows, span)))
+        out = _union(parts)
+        if out is None:
             raise RuntimeError("empty store")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out
 
     def read_rollup(self) -> DataFrame | None:
@@ -873,9 +949,7 @@ class TieredStore:
         """
         from .rollup import rollup
 
-        lo_s, hi_s = _epoch_s(t0), _epoch_s(t1)
-        if isinstance(t1, date) and not isinstance(t1, datetime):
-            hi_s += 86_400 - 1
+        lo_s, hi_s = _epoch_range(t0, t1)
         span_s = max(hi_s - lo_s, 1)
         base = self.read_series(t0, t1, conv_ids=conv_ids, metrics=metrics)
         if (

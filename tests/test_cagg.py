@@ -499,15 +499,15 @@ def _count_nodes(spark, plan, name, seen_caches):
     )
 
 
-def test_refresh_decodes_each_source_tier_once(
-    spark, cagg_series, tmp_path, monkeypatch
-):
-    """The one-job refresh write feeds all three grains from the same
-    1m rollup; the lossy-tier frame decode under it must run once per
-    refresh, not once per grain branch."""
-    from datetime import timedelta
+def _max_day(series):
+    return series.agg(F.max(F.to_date("bucket_ts"))).collect()[0][0]
 
-    from pyspark.sql.readwriter import DataFrameWriter
+
+@pytest.fixture
+def aged_store(spark, cagg_series, tmp_path):
+    """Every day aged out of raw: the last one into tier1, the rest
+    into tier2."""
+    from datetime import timedelta
 
     store = TieredStore(
         spark,
@@ -515,15 +515,20 @@ def test_refresh_decodes_each_source_tier_once(
         TierPolicy(t0_days=0, t1_days=1, t2_days=2, t3_days=30000),
     )
     store.write_raw(cagg_series)
-    max_day = max(
-        r.day
-        for r in cagg_series.select(F.to_date("bucket_ts").alias("day"))
-        .distinct()
-        .collect()
-    )
-    store.retention_pass(max_day + timedelta(days=1))
+    store.retention_pass(_max_day(cagg_series) + timedelta(days=1))
     assert store.tier_days("tier1") and store.tier_days("tier2")
+    return store
 
+
+def test_refresh_decodes_each_source_tier_once(
+    spark, cagg_series, aged_store, monkeypatch
+):
+    """The one-job refresh write feeds all three grains from the same
+    1m rollup; the lossy-tier frame decode under it must run once per
+    refresh, not once per grain branch."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = aged_store
     counts = []
     original = DataFrameWriter.parquet
 
@@ -547,3 +552,46 @@ def test_refresh_decodes_each_source_tier_once(
         assert len(a) == len(b) > 0
         for c in ("conv_id", "metric", "bucket_ts", "cnt"):
             assert np.array_equal(a[c].to_numpy(), b[c].to_numpy())
+
+
+def test_refresh_source_read_agrees_with_read_series(spark, cagg_series, aged_store):
+    """The refresh's source read and read_series serve points through
+    the store's shared holder rule and tier reader: on a store holding
+    raw, tier0, tier1 and tier2 days, one of them also left in raw by
+    a crash, both count every sample once per (conv_id, metric, day)."""
+    import pandas as pd
+    from datetime import timedelta
+
+    store = aged_store
+    max_day = _max_day(cagg_series)
+    last = cagg_series.filter(F.to_date("bucket_ts") == F.lit(max_day))
+
+    def shifted(days):
+        return last.withColumn(
+            "bucket_ts", F.col("bucket_ts") + F.expr(f"INTERVAL {days} DAYS")
+        )
+
+    store.write_raw(shifted(1))
+    assert store.retention_pass(max_day + timedelta(days=1)) == [
+        ((max_day + timedelta(days=1)).isoformat(), "tier0")
+    ]
+    store.write_raw(shifted(1))  # crash leftover: raw copy of the tier0 day
+    store.write_raw(shifted(2))
+    assert all(store.tier_days(t) for t in ("raw", "tier0", "tier1", "tier2"))
+
+    def per_day(df):
+        return (
+            df.groupBy("conv_id", "metric", F.to_date("bucket_ts").alias("day"))
+            .count()
+            .toPandas()
+            .sort_values(["conv_id", "metric", "day"])
+            .reset_index(drop=True)
+        )
+
+    want = per_day(cagg_series.unionByName(shifted(1)).unionByName(shifted(2)))
+    cagg = ContinuousRollups(spark, store)
+    days = sorted(store.holders())
+    pd.testing.assert_frame_equal(
+        per_day(store.read_days(days, cagg._bulk_listing())), want
+    )
+    pd.testing.assert_frame_equal(per_day(store.read_series()), want)

@@ -354,10 +354,49 @@ def test_retention_crash_injection_every_step(spark, series, tmp_path):
     with pytest.raises(RuntimeError, match="crash before drop"):
         store2.retention_pass(date(2024, 3, 1))
     assert store2.tier_days("raw") != [] and store2.tier_days("tier0") != []
+    assert store2.read_series().count() == n  # each day from one holder
     store2._delete_partition = real_delete
     assert store2.retention_pass(date(2024, 3, 1))
     assert store2.tier_days("raw") == []
     assert store2.read_series().count() == n
+
+
+def test_retention_pass_job_budget(spark, series, tmp_path, monkeypatch):
+    """Each (source -> target) move runs one fit/write and ONE count
+    action over the staged files and the source days, so a three-move
+    pass has a fixed job budget (24 jobs when each move re-read and
+    counted both sides in four jobs); compaction counts with one
+    action too."""
+    from datetime import timedelta
+
+    store = TieredStore(spark, str(tmp_path / "budget"), TierPolicy(1, 2, 3, 4))
+    store.write_raw(series)
+    today = store.tier_days("raw")[-1] + timedelta(days=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("retention-job-budget", "one retention pass", False)
+    try:
+        moves = store.retention_pass(today)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sorted(t for _, t in moves) == ["tier0", "tier1", "tier2"]
+    jobs = sc.statusTracker().getJobIdsForGroup("retention-job-budget")
+    assert len(jobs) <= 15, len(jobs)
+    assert store.read_series().count() == series.count()
+
+    compact = TieredStore(spark, str(tmp_path / "budget_compact"), store.policy)
+    for _ in range(5):
+        compact.write_raw(series)
+    collects = []
+    real_collect = type(series).collect
+
+    def counting_collect(self):
+        collects.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(type(series), "collect", counting_collect)
+    assert compact.compact_tier("raw", max_files_per_day=4)
+    monkeypatch.undo()
+    assert len(collects) == 1
 
 
 def test_gorilla_magic_guards():
