@@ -27,10 +27,6 @@ import struct
 import numpy as np
 
 
-def uvarints_vec(values) -> bytes:
-    return uvarints_vec_with_lens(values)[0]
-
-
 def uvarints_vec_with_lens(values) -> tuple[bytes, "np.ndarray"]:
     """Vectorized bincode unsigned-varint encoding of an integer array.
 

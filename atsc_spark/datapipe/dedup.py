@@ -9,8 +9,8 @@ Scale design:
   Python) -> band buckets -> self-join *within buckets only*.
 - SimHash: 64-bit signature from token hashes; near-dups are Hamming
   neighbours; banded by 16-bit chunks for candidate generation.
-- Embedding cosine near-dup blocks on an LSH sign-bucket before the
-  exact cosine check.
+- Embedding cosine near-dup blocks on a label column or on
+  multi-table hyperplane-LSH buckets before the exact cosine check.
 """
 
 from __future__ import annotations
@@ -41,6 +41,16 @@ def dedup_exact_survivors(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ----------------------------------------------------------- minhash
+
+#: per-batch text-byte budget for the Arrow minhash kernel: batches
+#: above it run as independent sub-slices (``quality.arrow_byte_slices``).
+#: The kernel's peak NumPy working memory measures ~93 B per text byte
+#: (tracemalloc, 3 MB ASCII batch, 32 hashes, k=5: the (S, k) window
+#: matrix and per-seed int64 hash arrays), so 16 MB bounds it near
+#: 1.5 GB — the same bound as the Gopher kernel's 64 MB budget at
+#: ~22 B per byte.  Arrow-pool allocations are not traced, so both
+#: figures are floors.
+MINHASH_BATCH_BYTE_BUDGET = 16 << 20
 
 
 def _spread(docs: DataFrame) -> DataFrame:
@@ -87,6 +97,7 @@ def _minhash_sig_kernel(
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from .quality import arrow_byte_slices
     from .xxh64 import (
         _SPARK_SEED,
         hash_bytes_fixed,
@@ -98,6 +109,11 @@ def _minhash_sig_kernel(
     seeds = np.arange(num_hashes, dtype=np.int64)
     sig = np.empty((D, num_hashes), dtype=np.int64)
     if D == 0:
+        return sig
+    slices = arrow_byte_slices(text_arr, int(MINHASH_BATCH_BYTE_BUDGET))
+    if len(slices) > 1:
+        for lo, hi in slices:
+            sig[lo:hi] = _minhash_sig_kernel(text_arr.slice(lo, hi - lo), num_hashes, k)
         return sig
     bin_arr = text_arr.cast(pa.binary())
     if isinstance(bin_arr, pa.ChunkedArray):
@@ -647,48 +663,6 @@ def simhash_md5(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # ----------------------------------------------- n-gram Jaccard
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    min_jaccard: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Exact n-gram Jaccard over LSH candidates only.
-
-    Candidates come from minhash LSH (bounded); the exact word-n-gram
-    Jaccard is computed with array_intersect/array_union on distinct
-    shingle arrays — still JVM-side.
-    """
-    cands = minhash_lsh_candidates(docs, text_col, num_hashes, bands)
-    grams = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n - 1}, 1)),"
-                f" i -> concat_ws(' ', slice(split({text_col}, ' '), i, {n})))"
-            )
-        ).alias("grams"),
-    )
-    out = (
-        cands.join(grams.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("grams", "ga"), "doc_a")
-        .join(grams.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("grams", "gb"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.expr(
-                    "try_divide(cast(size(array_intersect(ga, gb)) as double),"
-                    " cast(size(array_union(ga, gb)) as double))"
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-    )
-    return out.filter(F.col("jaccard") >= min_jaccard)
-
-
 def ngram_jaccard_exact(
     docs: DataFrame,
     text_col: str = "text",
@@ -803,20 +777,6 @@ def embedding_near_dups(
         )
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def _sign_bucket(dims: int = 8):
-    """LSH bucket from the sign pattern of the first `dims` components
-    (the coarse single-table fallback; prefer
-    :func:`hyperplane_lsh_candidates` at scale)."""
-    bits = [
-        F.when(F.expr(f"embedding[{i}]") >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        for i in range(dims)
-    ]
-    out = bits[0]
-    for e in bits[1:]:
-        out = out + e
-    return out
 
 
 def rademacher_planes(n_tables: int, n_planes: int, dim: int, seed: int = 0):

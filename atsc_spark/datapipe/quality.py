@@ -198,6 +198,29 @@ def repetition_stats(
     return docs.select(*cols)
 
 
+def arrow_byte_slices(text, budget: int) -> list[tuple[int, int]]:
+    """Contiguous ``(lo, hi)`` row slices of a non-null Arrow string
+    array, each holding at most ``budget`` text bytes; a single row
+    larger than the budget gets a slice of its own.  Spark caps Arrow
+    batches by record count, not bytes, so every NumPy kernel whose
+    working memory grows with the batch's text bytes runs per slice."""
+    import pyarrow.compute as pc
+
+    D = len(text)
+    sizes = pc.binary_length(text.cast("binary")).to_numpy(zero_copy_only=False)
+    if D <= 1 or int(sizes.sum()) <= budget:
+        return [(0, D)]
+    cuts = [0]
+    acc = 0
+    for i, s in enumerate(int(x) for x in sizes):
+        if acc and acc + s > budget:
+            cuts.append(i)
+            acc = 0
+        acc += s
+    cuts.append(D)
+    return list(zip(cuts[:-1], cuts[1:]))
+
+
 def _numerator_names(
     top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
 ) -> list[str]:
@@ -228,25 +251,11 @@ def _metrics_from_numerators(num: np.ndarray, chars_i: np.ndarray) -> np.ndarray
     return out
 
 
-def _batch_repetition_metrics(
-    texts: list[str], top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
-) -> np.ndarray:
-    """All repetition metrics for a BATCH of documents at once —
-    shape (len(texts), len(_metric_names())), :func:`_metric_names`
-    order.  Thin normalization over the exact integer numerators of
-    :func:`_batch_repetition_numerators` (int64 accumulation matches
-    the SQL fold's LONG accumulator)."""
-    if len(texts) == 0:
-        return np.zeros((0, len(_metric_names(top_ns, dup_ns))), dtype=np.float64)
-    num, chars_i = _batch_repetition_numerators(texts, top_ns, dup_ns)
-    return _metrics_from_numerators(num, chars_i)
-
-
 def _batch_repetition_numerators(
     texts: list[str], top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
 ) -> tuple[np.ndarray, np.ndarray]:
     """List-of-str front door for :func:`_arrow_batch_numerators`
-    (tests and non-Arrow callers)."""
+    (tests)."""
     import pyarrow as pa
 
     return _arrow_batch_numerators(pa.array(texts, type=pa.string()), top_ns, dup_ns)
@@ -294,22 +303,12 @@ def _arrow_batch_numerators(
     # whole batch's token stream and multiplies int64 working arrays
     # across the n-gram passes, so one pathological mega-document batch
     # must not blow executor memory.  Per-doc metrics are independent,
-    # so an over-budget batch splits into contiguous sub-slices (each
-    # kept under the budget; a single over-budget document processes
-    # alone) — bounded peak RSS, identical output.
-    budget = int(GOPHER_BATCH_BYTE_BUDGET)
-    sizes = pc.binary_length(text.cast("binary")).to_numpy(zero_copy_only=False)
-    if D > 1 and int(sizes.sum()) > budget:
-        cuts = [0]
-        acc = 0
-        for i, s in enumerate(int(x) for x in sizes):
-            if acc and acc + s > budget:
-                cuts.append(i)
-                acc = 0
-            acc += s
-        cuts.append(D)
+    # so an over-budget batch splits into contiguous sub-slices —
+    # bounded peak RSS, identical output.
+    slices = arrow_byte_slices(text, int(GOPHER_BATCH_BYTE_BUDGET))
+    if len(slices) > 1:
         chars_parts = []
-        for lo, hi in zip(cuts[:-1], cuts[1:]):
+        for lo, hi in slices:
             sub_num, sub_chars = _arrow_batch_numerators(
                 text.slice(lo, hi - lo), top_ns, dup_ns
             )

@@ -138,23 +138,3 @@ def fingerprint(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.md5(normalized).alias("fp"))
 
 
-def rolling_fingerprints(docs: DataFrame, window_tokens: int = 16) -> DataFrame:
-    """Rolling-hash shingle fingerprints (one row per shingle):
-    (doc_id, shingle_idx, shingle_hash).  Built from JVM-side
-    transforms over the token array — scales with corpus size, no
-    Python.  Non-SQL-expressible compactly; covered by a rows-only
-    check."""
-    tokens = F.split(F.col("text"), " ")
-    n = F.size(tokens)
-    idx = F.explode(F.sequence(F.lit(0), F.greatest(n - window_tokens, F.lit(0))))
-    shingle = F.concat_ws(" ", F.slice(tokens, F.col("shingle_idx") + 1, window_tokens))
-    return (
-        docs.select("doc_id", tokens.alias("toks"), idx.alias("shingle_idx"))
-        .select(
-            "doc_id",
-            "shingle_idx",
-            F.xxhash64(
-                F.concat_ws(" ", F.slice("toks", F.col("shingle_idx") + 1, window_tokens))
-            ).alias("shingle_hash"),
-        )
-    )

@@ -160,11 +160,9 @@ def _span_of_segments(m: np.ndarray, y0: np.ndarray, cnt: np.ndarray):
     return int(y0[0]), int(y0[-1] + m[-1] * (cnt[-1] - 1))
 
 
-def _fit_one_group(
-    conv_id, metric, day, values: np.ndarray, ts: np.ndarray,
-    compressor_id: int, max_error: float, speed: int, rows: list,
-) -> None:
-    """Fit one (conv_id, metric, day) series; append frame row dicts.
+def _frames_of(values: np.ndarray, ts: np.ndarray):
+    """Split one (conv_id, metric, day) series into its frames: yield
+    ``(frame_idx, size, frame_values, (seg_interval, seg_start, seg_n))``.
 
     NaN/inf cleaning drops the sample AND its timestamp (the reference
     drops values pre-plan, `optimizer/mod.rs:64-71`; we keep ts aligned
@@ -174,30 +172,33 @@ def _fit_one_group(
         values, ts = values[keep], ts[keep]
     offset = 0
     for frame_idx, size in enumerate(get_chunk_sizes(len(values))):
-        res = compress_frame(values[offset : offset + size], compressor_id, max_error, speed)
-        m, y0, cnt = time_segment_arrays(ts[offset : offset + size])
-        s0, s1 = _span_of_segments(m, y0, cnt)
-        rows.append(
-            {
-                "conv_id": conv_id,
-                "metric": metric,
-                "day": day,
-                "frame_idx": frame_idx,
-                "compressor": COMPRESSOR_NAMES[res.compressor],
-                "compressor_id": res.compressor,
-                "sample_count": res.sample_count,
-                "seg_interval": m,
-                "seg_start": y0,
-                "seg_n": cnt,
-                "payload": res.payload,
-                "error": float(res.error) if np.isfinite(res.error) else None,
-                "payload_bytes": len(res.payload),
-                "raw_bytes": int(size) * 8,
-                "span_start_s": s0,
-                "span_end_s": s1,
-            }
-        )
+        seg = time_segment_arrays(ts[offset : offset + size])
+        yield frame_idx, size, values[offset : offset + size], seg
         offset += size
+
+
+def _frame_row(conv_id, metric, day, frame_idx: int, size: int, seg, res) -> dict:
+    """One FRAME_SCHEMA row for a fitted frame (``res``: FrameResult)."""
+    m, y0, cnt = seg
+    s0, s1 = _span_of_segments(m, y0, cnt)
+    return {
+        "conv_id": conv_id,
+        "metric": metric,
+        "day": day,
+        "frame_idx": frame_idx,
+        "compressor": COMPRESSOR_NAMES[res.compressor],
+        "compressor_id": res.compressor,
+        "sample_count": res.sample_count,
+        "seg_interval": m,
+        "seg_start": y0,
+        "seg_n": cnt,
+        "payload": res.payload,
+        "error": float(res.error) if np.isfinite(res.error) else None,
+        "payload_bytes": len(res.payload),
+        "raw_bytes": int(size) * 8,
+        "span_start_s": s0,
+        "span_end_s": s1,
+    }
 
 
 def grouped_points(series: DataFrame, num_tasks: int) -> DataFrame:
@@ -239,6 +240,20 @@ def grouped_points(series: DataFrame, num_tasks: int) -> DataFrame:
     )
 
 
+def _groups_of(pdf: pd.DataFrame):
+    """Unpack one :func:`grouped_points` pandas batch: yield
+    ``(conv_id, metric, day, values float64, ts int64)`` per group row."""
+    conv = pdf["conv_id"].to_numpy()
+    met = pdf["metric"].to_numpy()
+    day = pdf["day"].to_numpy()
+    ts_col = pdf["ts_s"].to_numpy()
+    val_col = pdf["vals"].to_numpy()
+    for i in range(len(pdf)):
+        values = np.asarray(val_col[i], dtype=np.float64)
+        ts = np.asarray(ts_col[i], dtype=np.int64)
+        yield conv[i], met[i], day[i], values, ts
+
+
 def make_grouped_fit_fn(handle_group, columns: list[str]):
     """mapInPandas body over :func:`grouped_points` rows.
 
@@ -248,16 +263,9 @@ def make_grouped_fit_fn(handle_group, columns: list[str]):
 
     def run(batches):
         for pdf in batches:
-            conv = pdf["conv_id"].to_numpy()
-            met = pdf["metric"].to_numpy()
-            day = pdf["day"].to_numpy()
-            ts_col = pdf["ts_s"].to_numpy()
-            val_col = pdf["vals"].to_numpy()
             rows: list = []
-            for i in range(len(pdf)):
-                values = np.asarray(val_col[i], dtype=np.float64)
-                ts = np.asarray(ts_col[i], dtype=np.int64)
-                handle_group(conv[i], met[i], day[i], values, ts, rows)
+            for group in _groups_of(pdf):
+                handle_group(*group, rows)
             yield pd.DataFrame(rows, columns=columns)
 
     return run
@@ -270,7 +278,9 @@ def _make_fit_map_fn(compressor_id: int, max_error: float, speed: int):
         return _make_fit_map_fn_batched(max_error)
 
     def handle(conv_id, metric, day, values, ts, rows):
-        _fit_one_group(conv_id, metric, day, values, ts, compressor_id, max_error, speed, rows)
+        for frame_idx, size, data, seg in _frames_of(values, ts):
+            res = compress_frame(data, compressor_id, max_error, speed)
+            rows.append(_frame_row(conv_id, metric, day, frame_idx, size, seg, res))
 
     return make_grouped_fit_fn(handle, _FRAME_COLS)
 
@@ -287,49 +297,14 @@ def _make_fit_map_fn_batched(max_error: float):
         from .core.batchfit import compress_frames_batch
 
         for pdf in batches:
-            conv = pdf["conv_id"].to_numpy()
-            met = pdf["metric"].to_numpy()
-            day = pdf["day"].to_numpy()
-            ts_col = pdf["ts_s"].to_numpy()
-            val_col = pdf["vals"].to_numpy()
             metas: list = []
             datas: list = []
-            for i in range(len(pdf)):
-                values = np.asarray(val_col[i], dtype=np.float64)
-                ts = np.asarray(ts_col[i], dtype=np.int64)
-                keep = np.isfinite(values)
-                if not keep.all():
-                    values, ts = values[keep], ts[keep]
-                offset = 0
-                for frame_idx, size in enumerate(get_chunk_sizes(len(values))):
-                    seg = time_segment_arrays(ts[offset : offset + size])
-                    metas.append((i, frame_idx, size, seg))
-                    datas.append(values[offset : offset + size])
-                    offset += size
+            for conv_id, metric, day, values, ts in _groups_of(pdf):
+                for frame_idx, size, data, seg in _frames_of(values, ts):
+                    metas.append((conv_id, metric, day, frame_idx, size, seg))
+                    datas.append(data)
             results = compress_frames_batch(datas, max_error)
-            rows = []
-            for (i, frame_idx, size, (m, y0, cnt)), res in zip(metas, results):
-                s0, s1 = _span_of_segments(m, y0, cnt)
-                rows.append(
-                    {
-                        "conv_id": conv[i],
-                        "metric": met[i],
-                        "day": day[i],
-                        "frame_idx": frame_idx,
-                        "compressor": COMPRESSOR_NAMES[res.compressor],
-                        "compressor_id": res.compressor,
-                        "sample_count": res.sample_count,
-                        "seg_interval": m,
-                        "seg_start": y0,
-                        "seg_n": cnt,
-                        "payload": res.payload,
-                        "error": float(res.error) if np.isfinite(res.error) else None,
-                        "payload_bytes": len(res.payload),
-                        "raw_bytes": int(size) * 8,
-                        "span_start_s": s0,
-                        "span_end_s": s1,
-                    }
-                )
+            rows = [_frame_row(*meta, res) for meta, res in zip(metas, results)]
             yield pd.DataFrame(rows, columns=_FRAME_COLS)
 
     return run

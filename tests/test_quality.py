@@ -334,9 +334,19 @@ def test_arrow_kernel_batch_byte_budget(spark, monkeypatch):
     texts = ["a b c a b c", mega, "x y", mega + " extra", "solo"]
     base_num, base_chars = _batch_repetition_numerators(texts, (2, 3), (5,))
 
+    real = quality.arrow_byte_slices
+    seen = []
+
+    def spy(text, budget):
+        seen.append(real(text, budget))
+        return seen[-1]
+
     monkeypatch.setattr(
         "atsc_spark.datapipe.quality.GOPHER_BATCH_BYTE_BUDGET", 10_000
     )
+    monkeypatch.setattr(quality, "arrow_byte_slices", spy)
     split_num, split_chars = _batch_repetition_numerators(texts, (2, 3), (5,))
+    # the batch was cut, and the kernel ran once more per slice
+    assert len(seen[0]) > 1 and len(seen) == 1 + len(seen[0])
     assert np.array_equal(base_num, split_num)
     assert np.array_equal(base_chars, split_chars)

@@ -152,3 +152,42 @@ def test_quantize_relative_bound(spark):
     df2 = spark.createDataFrame([(float(v),) for v in tight], "value double")
     out2 = quantize_relative(df2, q).toPandas()["value"].to_numpy()
     assert len(np.unique(out2)) < 10
+
+
+@pytest.mark.parametrize(
+    "compressor,digest",
+    [
+        # batched cross-frame tournament (auto, speed 0)
+        ("auto", "af2b3329eeb75eba4f968671aee57d34eebe156f95987c6459a75446a5493aa4"),
+        # per-frame path (one fixed compressor)
+        ("fft", "04aa6def398da3442ffa2efa132be68646d10da4db8e952dce05436b0fb16374"),
+    ],
+)
+def test_fit_paths_frame_rows_pinned(spark, compressor, digest):
+    """Both fit paths' FRAME_SCHEMA rows, pinned: a sha256 over the
+    sorted rows of a monitoring corpus with NaN/inf samples plus
+    transcript series."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from atsc_spark.fixtures import monitoring_series
+
+    mon = monitoring_series(spark, n_series=3, samples_per_series=5000)
+    h = F.hash("bucket_ts", "conv_id")
+    mon = mon.withColumn(
+        "value",
+        F.when(h % 97 == 0, F.lit(float("nan")))
+        .when(h % 101 == 0, F.lit(float("inf")))
+        .otherwise(F.col("value")),
+    )
+    tr = derive_series(transcripts(spark, n_convs=12, window_days=1))
+    series = mon.unionByName(tr.select(*mon.columns))
+    rows = sorted(
+        (tuple(r) for r in fit_frames(series, 0.02, compressor).collect()),
+        key=lambda t: (t[0], t[1], str(t[2]), t[3]),
+    )
+    sha = hashlib.sha256()
+    for r in rows:
+        sha.update(repr(tuple(bytes(x) if isinstance(x, bytearray) else x for x in r)).encode())
+    assert sha.hexdigest() == digest

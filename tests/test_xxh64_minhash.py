@@ -77,3 +77,31 @@ def test_minhash_arrow_equals_sql(spark, nh, k):
         df, num_hashes=nh, shingle_k=k, impl="arrow"
     ).orderBy("doc_id").collect()
     assert [(r.doc_id, r.sig) for r in a] == [(r.doc_id, r.sig) for r in b]
+
+
+def test_minhash_kernel_batch_byte_budget(monkeypatch):
+    """A mega-document batch run under a forced-small byte budget is cut
+    into several slices and gives byte-identical signatures to the
+    unsliced call (ASCII, short and non-ASCII documents alike)."""
+    import pyarrow as pa
+
+    from atsc_spark.datapipe import quality
+
+    mega = "lorem ipsum dolor sit amet " * 800
+    texts = ["abc", mega, "héllo wörld ünïcode", "", mega + "tail", "x y z w v", "ab"]
+    arr = pa.array(texts, type=pa.string())
+    base = dedup._minhash_sig_kernel(arr, 16, 5)
+
+    real = quality.arrow_byte_slices
+    seen = []
+
+    def spy(text, budget):
+        seen.append(real(text, budget))
+        return seen[-1]
+
+    monkeypatch.setattr(dedup, "MINHASH_BATCH_BYTE_BUDGET", 5_000)
+    monkeypatch.setattr(quality, "arrow_byte_slices", spy)
+    sliced = dedup._minhash_sig_kernel(arr, 16, 5)
+    # the batch was cut, and the kernel ran once more per slice
+    assert len(seen[0]) > 1 and len(seen) == 1 + len(seen[0])
+    assert sliced.tobytes() == base.tobytes()

@@ -12,14 +12,11 @@ executor JVMs, each with its own Python daemon, the package shipped via
 - ``fit_roundtrip_ok``: dense monitoring series fit at 3% then decoded on
   the cluster returns exactly one point per input point with the recorded
   per-frame max_error within the bound;
-- ``strict_raised``: a per-call ``strict=True`` (closure-captured) reaches
-  executor processes and raises on a JPEG blob that would hit the
-  fake-feature stub;
-- ``global_resolved_at_call``: setting ``multimodal.STRICT = True`` on
-  the DRIVER must also take effect on executors, because every entry
-  point resolves the global at call time and captures the RESULT in the
-  closure (a lazy in-UDF read of the global would silently see the
-  executor-side default instead).  Expected ``true``.
+- ``closure_arg_reached``: a fit with the non-default ``compressor="fft"``
+  tags every frame row ``fft``.  The argument reaches the executor
+  processes only inside the UDF closure, and a fixed compressor is kept
+  on every frame, so any other value means the closure lost it (the
+  ``max_error`` above cannot show this: 0.03 is also the default).
 
 Run directly (it builds its own session) or via spark-submit:
 
@@ -80,28 +77,11 @@ def main() -> None:
     n_out = decode_frames(frames).count()
     fit_roundtrip_ok = (n_out == n_in) and (max_err or 0.0) <= 0.03
 
-    # --- strict propagation ------------------------------------------
-    from atsc_spark.datapipe import multimodal as mm
-
-    jpeg_blob = b"\xff\xd8\xff\xe0" + bytes(range(256)) * 4  # JPEG magic -> stub
-    media = spark.createDataFrame(
-        [(0, "image", "image/jpeg", 16, 16, 0, bytearray(jpeg_blob))],
-        mm.MEDIA_SCHEMA,
-    )
-    strict_raised = False
-    try:
-        mm.decode_and_featurize_images(media, strict=True).collect()
-    except Exception:
-        strict_raised = True
-
-    mm.STRICT = True  # resolved at call time, captured into the closure
-    try:
-        mm.decode_and_featurize_images(media, strict=None).collect()
-        global_resolved_at_call = False  # stub silently produced fakes
-    except Exception:
-        global_resolved_at_call = True
-    finally:
-        mm.STRICT = False
+    compressors = [
+        r.compressor
+        for r in fit_frames(series, compressor="fft").select("compressor").distinct().collect()
+    ]
+    closure_arg_reached = compressors == ["fft"]
 
     # sentinel prefix: Spark 4's structured logging emits JSON *log*
     # lines on stdout/stderr, so a bare startswith("{") scrape can
@@ -115,8 +95,7 @@ def main() -> None:
                 "n_out": n_out,
                 "max_error": max_err,
                 "fit_roundtrip_ok": fit_roundtrip_ok,
-                "strict_raised": strict_raised,
-                "global_resolved_at_call": global_resolved_at_call,
+                "closure_arg_reached": closure_arg_reached,
             }
         )
     )
