@@ -1,166 +1,22 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata.
+"""Pure-numpy image codecs: PNG and GIF.
 
-The Spark-side machinery — schemas, Arrow batch shapes, mapInPandas
-signatures, partition sizing — is real and tested.  Decoding:
+Decoders (and fixture encoders) that run on real bytes with no
+dependency beyond numpy and the standard library:
 
-- **real decoders** (pure numpy + stdlib, no external libs): binary
-  PPM (P6) images, PNG (stdlib zlib inflate + numpy unfilter, all five
-  filter types, color types 0/2/3/4/6), **baseline + progressive JPEG**
-  (r6/r7: :mod:`jpeg` — marker parse, canonical huffman, dequant,
-  IDCT, chroma upsampling, restart markers, SOF2 successive
-  approximation; plus an encoder for fixtures), PCM WAV (RIFF,
-  8/16/32-bit) audio, GIF (stdlib LZW), and the **MP4/ISO-BMFF
-  container layer** (r7: :mod:`mp4` — box tree, movie/track headers,
-  full sample tables, so video metadata and per-frame byte ranges /
-  timestamps are exact).  These run on actual bytes end-to-end.
-- Only CODEC BITSTREAMS without a published pure-python-tractable
-  decode remain stubbed (H.264/AAC inside MP4; arithmetic-coded
-  JPEG): strict mode raises NotImplementedError, otherwise a
-  deterministic fake derived from the bytes.  Swapping in Pillow/PyAV
-  is a one-function change; nothing in the distribution shape moves.
+- **PNG**: stdlib zlib inflate + numpy unfilter, all five filter types,
+  color types 0/2/3/4/6, bit depth 8, non-interlaced.
+- **GIF**: stdlib-free LZW decode with per-frame graphic control
+  extensions (delay, transparency), plus an encoder for fixtures.
 
-Scale notes:
-- media blobs ride in the `content` binary column; Arrow transfers
-  them zero-copy per batch.  `media_repartition` bounds the bytes per
-  task so a partition of 100 MB+ blobs cannot blow executor memory.
-- feature extraction returns fixed-width arrays (embedding-like), so
-  downstream joins/ANN reuse the similarity operators unchanged.
+No query, benchmark leg or Spark operator uses them; they are kept as
+a tested, self-contained codec pair.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, mime string, width int, height int, "
-    "duration_ms int, content binary"
-)
-
-IMAGE_FEATURES_SCHEMA = (
-    "media_id long, width int, height int, sha256 string, features array<float>"
-)
-
-FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame_ts_ms int, frame_sha string"
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, sample_rate int, n_samples long, rms double, features array<float>"
-)
-
-#: Module-level default for the strict/fake-features switch.  Entry
-#: points take a per-call ``strict=`` parameter that OVERRIDES this.
-#: Every entry point resolves the effective flag ON THE DRIVER at call
-#: time (``_strict`` below) and captures the RESULT in the UDF closure,
-#: so both the parameter and a driver-side ``multimodal.STRICT = True``
-#: assignment reach executor processes on a real cluster (verified
-#: under separate executor JVMs by tools/local_cluster_check.py).  What
-#: would NOT work is reading ``STRICT`` lazily inside a UDF body —
-#: executors re-import the module and would see the default — which is
-#: why the resolve-then-capture pattern is load-bearing, not style.
-STRICT = False  # set True to surface NotImplementedError instead of fakes
-
-
-def _strict(strict: bool | None) -> bool:
-    return STRICT if strict is None else strict
-
-
-def decode_ppm(content: bytes) -> np.ndarray:
-    """Real decode of a binary PPM (P6) image -> (h, w, 3) uint8.
-
-    Pure numpy: parse the ASCII header (magic, dims, maxval, with
-    comment lines allowed), then one frombuffer + reshape.
-    """
-    if not content.startswith(b"P6"):
-        raise ValueError("not a P6 PPM")
-    pos = 2
-    fields: list[int] = []
-    while len(fields) < 3:
-        while pos < len(content) and content[pos : pos + 1].isspace():
-            pos += 1
-        if content[pos : pos + 1] == b"#":  # comment to end of line
-            pos = content.index(b"\n", pos) + 1
-            continue
-        end = pos
-        while end < len(content) and not content[end : end + 1].isspace():
-            end += 1
-        fields.append(int(content[pos:end]))
-        pos = end
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise ValueError("16-bit PPM not supported")
-    px = np.frombuffer(content, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return px.reshape(h, w, 3)
-
-
-def encode_ppm(px: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_ppm` (fixture/test helper)."""
-    h, w, _ = px.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + px.astype(np.uint8).tobytes()
-
-
-def decode_wav(content: bytes) -> tuple[int, np.ndarray]:
-    """Real decode of a PCM RIFF/WAV blob -> (sample_rate, float64
-    samples in [-1, 1], channel-averaged).  Pure numpy chunk walk;
-    handles 8-bit unsigned, 16/32-bit signed PCM."""
-    if content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE blob")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        size = struct.unpack_from("<I", content, pos + 4)[0]
-        body = content[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, channels, sample_rate, _, _, bits = fmt
-    if audio_format != 1:
-        raise ValueError(f"only PCM supported, got format {audio_format}")
-    if bits == 8:
-        x = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    elif bits == 16:
-        x = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-    elif bits == 32:
-        x = np.frombuffer(data, dtype="<i4").astype(np.float64) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported bit depth {bits}")
-    if channels > 1:
-        x = x[: len(x) - len(x) % channels].reshape(-1, channels).mean(axis=1)
-    return sample_rate, x
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """16-bit mono PCM WAV encode (fixture/test helper)."""
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1, 1)
-    ints = np.round(pcm * 32767.0).astype("<i2")
-    data = ints.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -541,387 +397,3 @@ def encode_gif(
         out += bytes([0])
     out += bytes([0x3B])
     return bytes(out)
-
-
-def _fake_pixels(
-    content: bytes, width: int, height: int, strict: bool | None = None
-) -> np.ndarray:
-    """Deterministic fake decode: pseudo-pixels seeded by the blob
-    digest.  Stands in for Pillow/cv2 (not installed here)."""
-    if _strict(strict):
-        raise NotImplementedError("image decoding requires Pillow/cv2 (not in container)")
-    seed = int.from_bytes(hashlib.sha256(content).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
-
-
-def decode_image(
-    content: bytes, width: int, height: int, strict: bool | None = None
-) -> np.ndarray:
-    """Decode dispatch: real paths for PPM (P6), PNG (stdlib zlib +
-    numpy unfilter), baseline JPEG (:mod:`jpeg` — pure-numpy
-    huffman/dequant/IDCT, r6) and progressive JPEG (SOF2 multi-scan
-    successive approximation, r7).  Arithmetic-coded/lossless JPEG
-    raises NotImplementedError in strict mode; everything else
-    unrecognized falls through to the stub."""
-    if content.startswith(b"P6"):
-        return decode_ppm(content)
-    if content.startswith(_PNG_SIG):
-        return decode_png(content)
-    if content.startswith(b"\xff\xd8"):
-        from . import jpeg as _jpeg
-
-        try:
-            px = _jpeg.decode_jpeg(content)
-        except NotImplementedError:
-            # arithmetic-coded / lossless / hierarchical stream:
-            # still out of scope (progressive decodes for real as of r7)
-            return _fake_pixels(content, width, height, strict)
-        except (ValueError, IndexError, KeyError):
-            # corrupt/truncated baseline stream: one bad blob must not
-            # kill the whole mapInPandas batch in non-strict mode
-            # (ADVICE r6); strict mode surfaces the decode error.
-            if _strict(strict):
-                raise
-            return _fake_pixels(content, width, height, False)
-        if px.ndim == 2:  # grayscale -> 3 channels for the feature path
-            px = np.repeat(px[:, :, None], 3, axis=2)
-        return px
-    return _fake_pixels(content, width, height, strict)
-
-
-def decode_and_featurize_images(
-    media: DataFrame, feature_dim: int = 16, strict: bool | None = None
-) -> DataFrame:
-    """binary content -> fixed-width feature vector per image.
-
-    mapInPandas: one Arrow batch in, one out; decode + channel-stat
-    features are vectorized numpy per image.  ``strict=True`` raises on
-    any blob that would hit the fake-feature stub (JPEG etc.);
-    ``None`` defers to the module default.  The flag is captured in the
-    UDF closure, so it reaches executors on a real cluster (the module
-    global would not).
-    """
-    strict_flag = _strict(strict)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                px = decode_image(content, int(row.width), int(row.height), strict_flag)
-                # channel means/stds + downsampled grid -> fixed width
-                feats = np.concatenate(
-                    [
-                        px.mean(axis=(0, 1)) / 255.0,
-                        px.std(axis=(0, 1)) / 255.0,
-                        np.resize(px.mean(axis=2), feature_dim - 6) / 255.0,
-                    ]
-                ).astype(np.float32)
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "width": int(row.width),
-                        "height": int(row.height),
-                        "sha256": hashlib.sha256(content).hexdigest(),
-                        "features": feats.tolist(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "sha256", "features"]
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
-
-
-def decode_and_featurize_audio(media: DataFrame, n_bands: int = 8) -> DataFrame:
-    """binary WAV content -> (sample_rate, n_samples, rms, band
-    features).  Real decode for PCM WAV; the band features are mean
-    absolute amplitude over `n_bands` equal time slices — fixed width,
-    vectorized numpy per blob inside mapInPandas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                sr, x = decode_wav(bytes(row.content))
-                n = len(x)
-                rms = float(np.sqrt(np.mean(x * x))) if n else 0.0
-                pad = (-n) % n_bands
-                bands = np.abs(
-                    np.concatenate([x, np.zeros(pad)])
-                ).reshape(n_bands, -1).mean(axis=1) if n else np.zeros(n_bands)
-                rows.append(
-                    {
-                        "media_id": row.media_id,
-                        "sample_rate": int(sr),
-                        "n_samples": n,
-                        "rms": rms,
-                        "features": bands.astype(np.float32).tolist(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "sample_rate", "n_samples", "rms", "features"]
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, strict: bool | None = None
-) -> DataFrame:
-    """Frame sampling: GIF payloads get a REAL decode (stdlib LZW,
-    :func:`decode_gif`) — frames are selected by their cumulative
-    delays and the digest is of the actual decoded pixels.  MP4
-    payloads get the REAL container layer (r7, :mod:`mp4`): frames are
-    selected by the sample tables' exact timestamps and the digest is
-    of the actual coded sample bytes located via stsz/stsc/stco —
-    only the codec-bitstream decode stays out of scope.  Anything else
-    stays on the deterministic-digest stub (``strict=True`` raises
-    instead; ``None`` defers to the module default, and the resolved
-    flag is closure-captured so it reaches executors).  Row explosion
-    happens executor-side in the UDF, so a long video never
-    materializes as one driver row."""
-    strict_flag = _strict(strict)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import mp4 as _mp4
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                gif_ok = False
-                gif_err: Exception | None = None
-                if content[:4] == b"GIF8":
-                    try:
-                        frames, delays = decode_gif(content)
-                        gif_ok = True
-                    except (ValueError, IndexError, struct.error, MemoryError) as exc:
-                        # a corrupt blob must not kill a corpus-scale
-                        # job — fall through to the digest stub (STRICT
-                        # below surfaces the REAL cause loudly)
-                        gif_err = exc
-                if not gif_ok and len(content) >= 12 and content[4:8] == b"ftyp":
-                    try:
-                        meta = _mp4.parse_mp4(content)
-                        vids = [t for t in meta["tracks"] if t["kind"] == "video"]
-                        track = vids[0] if vids else None
-                        if track and track["samples"]:
-                            ts_list = np.array(
-                                [s[0] for s in track["samples"]], dtype=np.int64
-                            )
-                            total = max(track["duration_ms"], int(ts_list[-1]) + 1)
-                            for i, ts in enumerate(range(0, total, every_ms)):
-                                # clamp: a track not starting at tick 0
-                                # would otherwise negative-index to the
-                                # LAST sample for the earliest frames
-                                fi = max(
-                                    int(np.searchsorted(ts_list, ts, side="right"))
-                                    - 1,
-                                    0,
-                                )
-                                _sts, off, size = track["samples"][fi]
-                                digest = hashlib.sha256(
-                                    content[off:off + size]
-                                ).hexdigest()[:16]
-                                rows.append(
-                                    {
-                                        "media_id": row.media_id,
-                                        "frame_idx": i,
-                                        "frame_ts_ms": ts,
-                                        "frame_sha": digest,
-                                    }
-                                )
-                            continue
-                        raise ValueError("MP4 has no video samples")
-                    except (ValueError, IndexError, struct.error) as exc:
-                        if strict_flag:
-                            raise ValueError(f"corrupt MP4 payload: {exc}") from exc
-                        # fall through to the digest stub
-                if gif_ok:
-                    starts = np.concatenate(
-                        [[0], np.cumsum(np.maximum(delays, 1))[:-1]]
-                    )
-                    total = int(starts[-1] + max(delays[-1], 1))
-                    for i, ts in enumerate(range(0, total, every_ms)):
-                        fi = int(np.searchsorted(starts, ts, side="right") - 1)
-                        digest = hashlib.sha256(frames[fi].tobytes()).hexdigest()[:16]
-                        rows.append(
-                            {
-                                "media_id": row.media_id,
-                                "frame_idx": i,
-                                "frame_ts_ms": ts,
-                                "frame_sha": digest,
-                            }
-                        )
-                    continue
-                if strict_flag:
-                    if gif_err is not None:
-                        raise ValueError(f"corrupt GIF payload: {gif_err}") from gif_err
-                    raise NotImplementedError(
-                        "non-GIF/non-MP4 video decoding requires PyAV"
-                    )
-                duration = int(row.duration_ms or 0)
-                for i, ts in enumerate(range(0, max(duration, 1), every_ms)):
-                    digest = hashlib.sha256(content + struct.pack("<I", i)).hexdigest()[:16]
-                    rows.append(
-                        {
-                            "media_id": row.media_id,
-                            "frame_idx": i,
-                            "frame_ts_ms": ts,
-                            "frame_sha": digest,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_ts_ms", "frame_sha"]
-            )
-
-    return media.filter(F.col("kind") == "video").mapInPandas(run, FRAME_SAMPLE_SCHEMA)
-
-
-VIDEO_METADATA_SCHEMA = (
-    "media_id long, brand string, container_duration_ms long, n_tracks int, "
-    "video_codec string, width int, height int, n_video_samples long, "
-    "parsed boolean"
-)
-
-
-def video_metadata(media: DataFrame, strict: bool | None = None) -> DataFrame:
-    """Typed container metadata for every video blob via the REAL ISO
-    BMFF layer (:mod:`mp4`, r7): brand, duration, first video track's
-    codec fourcc / dimensions / exact sample count.  Non-MP4 or
-    corrupt blobs yield ``parsed=false`` with nulls (strict raises),
-    so a corpus job can quantify its undecodable tail instead of
-    dying on it.  One mapInPandas projection — no shuffle, and only
-    headers/sample tables are touched (mdat is never copied), so cost
-    is per-blob metadata size, not video size."""
-    strict_flag = _strict(strict)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import mp4 as _mp4
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                base = {
-                    "media_id": row.media_id,
-                    "brand": None,
-                    "container_duration_ms": None,
-                    "n_tracks": None,
-                    "video_codec": None,
-                    "width": None,
-                    "height": None,
-                    "n_video_samples": None,
-                    "parsed": False,
-                }
-                try:
-                    meta = _mp4.parse_mp4(content)
-                    vids = [t for t in meta["tracks"] if t["kind"] == "video"]
-                    base.update(
-                        brand=meta["brand"],
-                        container_duration_ms=meta["duration_ms"],
-                        n_tracks=len(meta["tracks"]),
-                        parsed=True,
-                    )
-                    if vids:
-                        base.update(
-                            video_codec=vids[0]["codec"],
-                            width=vids[0]["width"],
-                            height=vids[0]["height"],
-                            n_video_samples=vids[0]["n_samples"],
-                        )
-                except (ValueError, IndexError, struct.error) as exc:
-                    if strict_flag:
-                        raise ValueError(f"unparseable video payload: {exc}") from exc
-                rows.append(base)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "brand", "container_duration_ms", "n_tracks",
-                    "video_codec", "width", "height", "n_video_samples", "parsed",
-                ],
-            )
-
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        run, VIDEO_METADATA_SCHEMA
-    )
-
-
-def media_repartition(media: DataFrame, target_bytes_per_task: int = 128 << 20) -> DataFrame:
-    """Size partitions by *bytes*, not rows: blobs are wildly variable.
-
-    For file-backed inputs the total size comes from FILE METADATA
-    (``inputFiles`` + FileSystem status — no data scan); only
-    in-memory/synthesized frames fall back to a one-pass
-    ``sum(length(content))``.  The earlier always-scan version was fine
-    once but paid a full read of the blobs every time it was composed
-    into a larger plan.
-    """
-    total = 0
-    try:
-        files = media.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        jvm = media.sparkSession._jvm
-        hconf = media.sparkSession._jsc.hadoopConfiguration()
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            total += p.getFileSystem(hconf).getFileStatus(p).getLen()
-    else:
-        total = (
-            media.agg(F.sum(F.length("content")).alias("b")).collect()[0].b or 1
-        )
-    parts = max(1, int(total // target_bytes_per_task) + 1)
-    return media.repartition(parts, "media_id")
-
-
-def synthetic_media(spark, n: int = 50, seed: int = 42) -> DataFrame:
-    """Deterministic media table for tests (no external data): images
-    are REAL binary PPM/PNG blobs, audio REAL 16-bit PCM WAV blobs,
-    and video alternates REAL minimal MP4 containers (exact sample
-    tables, opaque coded bytes — :mod:`mp4`) with opaque bytes for the
-    digest-stub path."""
-    from . import mp4 as _mp4
-
-    rows = []
-    rng = np.random.default_rng(seed)
-    for i in range(n):
-        kind = ["image", "video", "audio"][i % 3]
-        w, h = (int(rng.integers(16, 64)), int(rng.integers(16, 64)))
-        mime = {"video": "video/mp4", "audio": "audio/wav"}.get(kind)
-        if kind == "image":
-            px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            # alternate real PNG and real PPM blobs (mime matches bytes)
-            if i % 2 == 0:
-                content, mime = encode_png(px), "image/png"
-            else:
-                content, mime = encode_ppm(px), "image/x-portable-pixmap"
-        elif kind == "audio":
-            content = encode_wav(rng.uniform(-0.8, 0.8, size=int(rng.integers(256, 4096))))
-        mp4_ms = None
-        if kind == "video" and i % 2 == 1:  # real MP4 (coded bytes opaque)
-            n_frames = int(rng.integers(4, 16))
-            fps = int(rng.integers(2, 8))
-            content = _mp4.build_mp4(width=w, height=h, n_frames=n_frames, fps=fps)
-            mp4_ms = n_frames * 1000 // fps  # duration column matches container
-        elif kind == "video":
-            content = bytes(
-                rng.integers(0, 256, size=int(rng.integers(64, 2048)), dtype=np.uint8)
-            )
-        rows.append(
-            (
-                i,
-                kind,
-                mime,
-                w,
-                h,
-                (mp4_ms if mp4_ms is not None else int(rng.integers(1000, 10000)))
-                if kind != "image"
-                else 0,
-                content,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

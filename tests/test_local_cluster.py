@@ -24,7 +24,10 @@ def _spark_submit() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-def test_local_cluster_end_to_end():
+def test_local_cluster_end_to_end_and_strict_propagation():
+    """Two executor JVMs run the fit/decode roundtrip, and a non-default,
+    closure-captured fit argument (``compressor="fft"``) reaches them.
+    The propagation check once used a strict flag; the name is kept."""
     subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "make_pyfiles_zip.py")],
         check=True,
