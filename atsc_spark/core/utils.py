@@ -1,4 +1,5 @@
-"""Scalar helpers shared by the frame compressors.
+"""Scalar helpers shared by the frame compressors, and the row-slice
+cut shared by the Arrow kernels (:func:`sized_slices`).
 
 Semantics mirror the reference engine's utility layer
 (`/root/reference/atsc/src/utils/mod.rs:21-74`), re-expressed in
@@ -121,3 +122,24 @@ def saturating_cast(values: np.ndarray, dtype) -> np.ndarray:
     if nan.any():
         v = np.where(nan, 0.0, v)
     return np.clip(v, info.min, info.max).astype(dtype)
+
+
+def sized_slices(sizes, budget: int) -> list[tuple[int, int]]:
+    """Contiguous ``(lo, hi)`` row slices whose ``sizes`` sum to at most
+    ``budget``; a single row larger than the budget gets a slice of
+    its own.  Spark caps Arrow batches by record count, not by size,
+    so every Arrow kernel whose working memory grows with its batch
+    runs per slice (text bytes for the Gopher and minhash kernels,
+    decoded samples for the frame decoder)."""
+    n = len(sizes)
+    if n <= 1 or int(np.sum(sizes)) <= budget:
+        return [(0, n)]
+    cuts = [0]
+    acc = 0
+    for i, s in enumerate(int(x) for x in sizes):
+        if acc and acc + s > budget:
+            cuts.append(i)
+            acc = 0
+        acc += s
+    cuts.append(n)
+    return list(zip(cuts[:-1], cuts[1:]))

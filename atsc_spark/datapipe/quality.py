@@ -199,26 +199,15 @@ def repetition_stats(
 
 
 def arrow_byte_slices(text, budget: int) -> list[tuple[int, int]]:
-    """Contiguous ``(lo, hi)`` row slices of a non-null Arrow string
-    array, each holding at most ``budget`` text bytes; a single row
-    larger than the budget gets a slice of its own.  Spark caps Arrow
-    batches by record count, not bytes, so every NumPy kernel whose
-    working memory grows with the batch's text bytes runs per slice."""
+    """:func:`~atsc_spark.core.utils.sized_slices` of a non-null Arrow
+    string array by text bytes: every NumPy kernel whose working
+    memory grows with the batch's text bytes runs per slice."""
     import pyarrow.compute as pc
 
-    D = len(text)
+    from ..core.utils import sized_slices
+
     sizes = pc.binary_length(text.cast("binary")).to_numpy(zero_copy_only=False)
-    if D <= 1 or int(sizes.sum()) <= budget:
-        return [(0, D)]
-    cuts = [0]
-    acc = 0
-    for i, s in enumerate(int(x) for x in sizes):
-        if acc and acc + s > budget:
-            cuts.append(i)
-            acc = 0
-        acc += s
-    cuts.append(D)
-    return list(zip(cuts[:-1], cuts[1:]))
+    return sized_slices(sizes, budget)
 
 
 def _numerator_names(

@@ -3,7 +3,7 @@
 The reference compresses one series per process
 (`/root/reference/atsc/src/main.rs:50-68` is a sequential directory
 loop); here the same pure frame math (``atsc_spark.core``) runs inside
-Arrow-batched pandas UDFs:
+Arrow-batched Python UDFs:
 
 - :func:`fit_frames` — :func:`grouped_points` (one row per
   ``(conv_id, metric, day)`` with JVM-built point arrays) then
@@ -11,9 +11,13 @@ Arrow-batched pandas UDFs:
   (<= 86,400 samples per series-day, ~0.7 MB), so executor memory is
   safe at any total scale and hot conversations cannot create a giant
   group.
-- :func:`decode_frames` — ``mapInPandas`` over frame rows.  Frames are
-  self-describing (sample_count + payload + time segments), so decode
-  needs **no shuffle at all**.
+- :func:`decode_compressed` — the one decoder of every compressed
+  tier: a ``mapInArrow`` over the compressed-row view
+  (:func:`compressed_rows`) of lossy frames and tier-0 Gorilla blocks
+  alike.  Rows are self-describing (sample_count + payload + time
+  segments, or a Gorilla payload carrying its timestamps), so decode
+  needs **no shuffle at all**; :func:`decode_frames` and
+  ``lossless.decode_lossless`` are selects into the view.
 
 Timestamps are not stored per sample: each frame carries VSRI-style
 piecewise-linear segments ``(interval_s, start_ts, n)`` — the same
@@ -24,11 +28,13 @@ vectorized from gap detection rather than streaming appends
 
 from __future__ import annotations
 
+import logging
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +46,10 @@ from .core.frame import (
     decompress_frame,
     get_chunk_sizes,
 )
+from .core.gorilla import gorilla_decode
+from .core.utils import sized_slices
+
+_log = logging.getLogger(__name__)
 
 FRAME_SCHEMA = (
     "conv_id string, metric string, day date, frame_idx int, "
@@ -372,37 +382,93 @@ def fit_frames(
     return grouped_points(series, num_tasks).mapInPandas(fit, FRAME_SCHEMA)
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Key columns go out dictionary-encoded (pandas Categorical ->
-    # Arrow dictionary): a decoded batch repeats each conv_id/metric
-    # ~sample_count times, and shipping integer codes instead of 10^7
-    # materialized Python strings roughly halves the Arrow transfer
-    # cost of this output-heavy stage.
-    for pdf in batches:
-        ts_parts, val_parts, counts = [], [], []
-        for row in pdf.itertuples(index=False):
-            values = decompress_frame(
-                int(row.compressor_id), int(row.sample_count), bytes(row.payload)
-            )
-            ts = segments_to_ts(row.seg_interval, row.seg_start, row.seg_n)
-            m = min(len(values), len(ts))
-            ts_parts.append(ts[:m])
-            val_parts.append(values[:m])
-            counts.append(m)
-        if not counts:
-            yield pd.DataFrame(columns=["conv_id", "metric", "epoch_s", "value"])
-            continue
-        reps = np.asarray(counts, dtype=np.int64)
-        conv_codes, conv_uni = pd.factorize(pdf["conv_id"].to_numpy())
-        met_codes, met_uni = pd.factorize(pdf["metric"].to_numpy())
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.Categorical.from_codes(np.repeat(conv_codes, reps), conv_uni),
-                "metric": pd.Categorical.from_codes(np.repeat(met_codes, reps), met_uni),
-                "epoch_s": np.concatenate(ts_parts),
-                "value": np.concatenate(val_parts),
-            }
+#: the compressor id tier-0 Gorilla blocks carry in the compressed-row
+#: view (:func:`compressed_rows`); it exists only in memory, never on disk
+GORILLA_ID = -1
+
+#: per-slice decoded-sample budget of the Arrow decoder: input batches
+#: are cut into contiguous row slices by cumulative ``sample_count``.
+#: A decoded sample costs ~76 B of peak working memory (NumPy peak
+#: under tracemalloc plus the Arrow pool's peak, one 1 M-sample batch
+#: of 4,096-sample lossy frames or of Gorilla blocks: the per-row
+#: parts, their concatenation, the repeat index and the output key,
+#: epoch and value arrays), so 16 M samples bound a slice near 1.2 GB,
+#: close to the Gopher and minhash byte budgets' ~1.5 GB.  Spark sends
+#: up to 65,536 rows per batch: at 4,096 samples per frame, ~268 M.
+DECODE_BATCH_SAMPLE_BUDGET = 16 << 20
+
+
+def compressed_rows(rows: DataFrame) -> DataFrame:
+    """FRAME_SCHEMA frames or BLOCK_SCHEMA Gorilla blocks -> the
+    compressed-row view :func:`decode_compressed` reads: ``conv_id,
+    metric, compressor_id, sample_count, seg_interval, seg_start,
+    seg_n, payload``.  Blocks (no segment columns) enter it with
+    :data:`GORILLA_ID` and null segment arrays: their timestamps live
+    in the payload."""
+    if "seg_n" not in rows.columns:  # Gorilla blocks
+        segs = (("seg_interval", "long"), ("seg_start", "long"), ("seg_n", "int"))
+        rows = rows.withColumn("compressor_id", F.lit(GORILLA_ID)).withColumns(
+            {c: F.lit(None).cast(f"array<{t}>") for c, t in segs}
         )
+    return rows.select(
+        "conv_id", "metric", "compressor_id", "sample_count",
+        "seg_interval", "seg_start", "seg_n", "payload",
+    )
+
+
+def _frame_timestamps(rb) -> tuple[np.ndarray, np.ndarray]:
+    """Every frame timestamp of a view batch from ONE
+    :func:`segments_to_ts` over its concatenated segments, and each
+    row's offset into them (Gorilla rows have none).  Empty segments
+    hold no timestamp and would break the shared cumsum: dropped."""
+    m, y0, n = (
+        np.asarray(rb.column(c).flatten(), dtype=np.int64)
+        for c in ("seg_interval", "seg_start", "seg_n")
+    )
+    per_row = np.asarray(pc.fill_null(pc.list_value_length(rb.column("seg_n")), 0))
+    off = np.concatenate([[0], np.cumsum(n)])[np.concatenate([[0], np.cumsum(per_row)])]
+    return segments_to_ts(m[n > 0], y0[n > 0], n[n > 0]), off
+
+
+def _decode_slice(rb):
+    """One compressed-row view slice -> a DECODED_SCHEMA Arrow batch.
+    Key columns are an Arrow ``take`` over the slice's unique keys: no
+    pandas, no Python strings on the output side."""
+    cid, count = (np.asarray(rb.column(c)) for c in ("compressor_id", "sample_count"))
+    frame_ts, off = _frame_timestamps(rb)
+    ts_parts, val_parts = [], []
+    for i, blob in enumerate(rb.column("payload").to_pylist()):
+        if cid[i] == GORILLA_ID:
+            ts, values = gorilla_decode(blob)
+        else:
+            ts = frame_ts[off[i] : off[i + 1]]
+            values = decompress_frame(int(cid[i]), int(count[i]), blob)
+        if len(values) != len(ts):
+            raise ValueError(
+                f"decode: conv_id={rb.column('conv_id')[i].as_py()!r} "
+                f"metric={rb.column('metric')[i].as_py()!r} decodes "
+                f"{len(values)} values for {len(ts)} timestamps"
+            )
+        ts_parts.append(ts)
+        val_parts.append(values)
+    row = np.repeat(np.arange(rb.num_rows), [len(v) for v in val_parts])
+    keys = [pc.dictionary_encode(rb.column(c), null_encoding="encode") for c in ("conv_id", "metric")]
+    return pa.RecordBatch.from_arrays(
+        [k.dictionary.take(np.asarray(k.indices)[row]) for k in keys]
+        + [
+            pa.array(np.concatenate([np.empty(0, np.int64), *ts_parts]), pa.int64()),
+            pa.array(np.concatenate([np.empty(0), *val_parts]), pa.float64()),
+        ],
+        names=["conv_id", "metric", "epoch_s", "value"],
+    )
+
+
+def _decode_batches(batches):
+    """mapInArrow body: decode each batch in sample-budgeted slices."""
+    for rb in batches:
+        count = np.asarray(rb.column("sample_count"))
+        for lo, hi in sized_slices(count, DECODE_BATCH_SAMPLE_BUDGET):
+            yield _decode_slice(rb.slice(lo, hi - lo))
 
 
 def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None) -> DataFrame:
@@ -425,73 +491,57 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
     """
     if num_tasks is not None:
         return sel.coalesce(num_tasks)
-    try:
-        if len(source.inputFiles()) > 0:
-            return sel
-    except Exception:
-        pass
-    # 1x parallelism by default (r8; env-tunable): the round-4 2x
-    # "pipeline the Arrow transfer" sizing was measured at 8 cores —
-    # at 32 cores a second wave of tasks cost more than transfer
-    # overlap saved (all three decode shapes at sf1.0: monitoring
-    # 0.75 -> 0.57 s, gorilla 0.76 -> 0.50 s, transcripts 1.23 ->
-    # 0.94 s at 1x vs 2x).  That per-task cost was mostly the worker's
-    # per-task zip directory re-read, which atsc_spark.zipcache now
-    # skips; the 1x default has not been re-measured without it.
+    if len(source.inputFiles()) > 0:
+        return sel
+    # 1x parallelism by default: at 32 cores a second task wave cost
+    # more than the 2x transfer overlap saved (sf1.0 monitoring 0.75 ->
+    # 0.57 s, gorilla 0.76 -> 0.50 s, transcripts 1.23 -> 0.94 s at 1x
+    # vs 2x), measured while every task still paid the zip directory
+    # re-read that atsc_spark.zipcache now skips; not re-measured since.
     factor = float(os.environ.get("ATSC_DECODE_TASK_FACTOR", "1"))
     par = max(1, int(source.sparkSession.sparkContext.defaultParallelism * factor))
     if source.storageLevel.useMemory or source.storageLevel.useDisk:
-        # cached input: FLOOR the per-task decode work at ~64 KB of
-        # compressed rows.  A smaller task spends more on Python-worker
-        # round-trip + Arrow setup than on decoding (a 1M-sample corpus
-        # over 256 byte-light cache partitions measured 1.3 Ms/s vs 2.4
-        # at few tasks, 32 cores), so tiny corpora must not fan out to
-        # hundreds of tasks — but the floor must stay well below one
-        # CORE-second of decode work: lossy ATSC frames run ~0.2-0.5
-        # B/sample, so the old 1 MB floor packed ~5M decoded samples
-        # into one task and collapsed the sf1.0 monitoring decode to 3
-        # tasks on 32 cores (measured 2.9 s vs 0.8-0.9 s at 32-48
-        # tasks).  64 KB ≈ 0.15-1.5M output samples ≈ tens of ms of
-        # numpy decode — comfortably above the per-task overhead, far
-        # below a parallelism-starving chunk.  Sizing reads the CACHED
-        # PLAN STATISTICS (driver-side metadata) — an agg job over the
-        # many tiny cache partitions would cost what it saves.  Bigger
-        # inputs fan out to the configured factor (default 1x).
+        # cached input: floor the per-task decode work at ~64 KB of
+        # compressed rows.  Smaller tasks cost more in worker round-trip
+        # and Arrow setup than they decode (1M samples over 256 cache
+        # partitions: 1.3 vs 2.4 Ms/s at few tasks, 32 cores); the old
+        # 1 MB floor, at 0.2-0.5 B/sample for lossy frames, packed ~5M
+        # samples per task and left the sf1.0 monitoring decode 3 tasks
+        # on 32 cores (2.9 s vs 0.8-0.9 s at 32-48 tasks).  64 KB is
+        # 0.15-1.5M samples, tens of ms of decode.  The size comes from
+        # the cached plan statistics (driver-side metadata): an agg job
+        # over many tiny cache partitions would cost what it saves.
         try:
             size_b = int(
                 source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
             par = max(1, min(par, size_b // (64 << 10) + 1))
-        except Exception:
-            pass
+        except Exception as e:  # private py4j read: say so, keep the 1x sizing
+            _log.warning("decode sizing: cached plan statistics unreadable (%s); %d tasks", e, par)
         return sel.coalesce(par)
     return sel.repartition(par)
 
 
-def decode_frames(frames: DataFrame, num_tasks: int | None = None) -> DataFrame:
-    """frames table -> ``(conv_id, metric, bucket_ts, value)``.
-
-    ``mapInPandas``: zero shuffle, scales linearly with frame count.
+def decode_compressed(
+    view: DataFrame, source: DataFrame | None = None, num_tasks: int | None = None
+) -> DataFrame:
+    """Compressed-row view (:func:`compressed_rows`, any mix of tiers)
+    -> ``(conv_id, metric, bucket_ts, value)``: the one decoder of
+    every compressed tier, one shuffle-free ``mapInArrow`` stage.
     Mirrors `CompressedStream::decompress` + the VSRI zip
-    (`data.rs:104-109`, `csv-compressor/src/metric.rs:88-98`).
-
-    Task granularity via :func:`decode_granularity`.
-    """
-    sel = decode_granularity(
-        frames.select(
-            "conv_id", "metric", "compressor_id", "sample_count",
-            "seg_interval", "seg_start", "seg_n", "payload",
-        ),
-        frames,
-        num_tasks,
-    )
-    decoded = sel.mapInPandas(_decode_batches, DECODED_SCHEMA)
+    (`data.rs:104-109`, `csv-compressor/src/metric.rs:88-98`); Gorilla
+    blocks are its lossless sibling.  Task granularity via
+    :func:`decode_granularity` over ``source`` (default: ``view``)."""
+    sel = decode_granularity(view, view if source is None else source, num_tasks)
+    decoded = sel.mapInArrow(_decode_batches, DECODED_SCHEMA)
     return decoded.select(
-        "conv_id",
-        "metric",
-        F.timestamp_seconds("epoch_s").alias("bucket_ts"),
-        "value",
+        "conv_id", "metric", F.timestamp_seconds("epoch_s").alias("bucket_ts"), "value"
     )
+
+
+def decode_frames(frames: DataFrame, num_tasks: int | None = None) -> DataFrame:
+    """frames table -> ``(conv_id, metric, bucket_ts, value)``, zero shuffle."""
+    return decode_compressed(compressed_rows(frames), frames, num_tasks)
 
 
 def frame_time_span(frames: DataFrame) -> DataFrame:

@@ -3,25 +3,24 @@
 Same distribution shape as the lossy frames: the fit consumes
 ``frames.grouped_points`` rows (one row per series-day with JVM-built
 numeric point arrays — see that docstring for why this beats shipping
-skinny rows into pandas), and decode is a shuffle-free
-``mapInPandas``.  Blocks roundtrip bit-exactly (timestamps and
-values), which is what lets the retention layer replace raw rows with
-tier-0 blocks without violating the per-row invariant.
+skinny rows into pandas), and decode is the frames' shared
+compressed-row decoder (:func:`atsc_spark.frames.decode_compressed`),
+in which blocks are rows with the in-memory Gorilla compressor id.
+Blocks roundtrip bit-exactly (timestamps and values), which is what
+lets the retention layer replace raw rows with tier-0 blocks without
+violating the per-row invariant.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .core.gorilla import gorilla_decode, gorilla_encode
+from .core.gorilla import gorilla_encode
 from .frames import (
-    decode_granularity,
+    compressed_rows,
+    decode_compressed,
     fit_task_count,
     grouped_points,
     make_grouped_fit_fn,
@@ -31,8 +30,6 @@ BLOCK_SCHEMA = (
     "conv_id string, metric string, day date, sample_count int, "
     "payload binary, payload_bytes int, raw_bytes long"
 )
-
-DECODED_SCHEMA = "conv_id string, metric string, epoch_s long, value double"
 
 _BLOCK_COLS = [
     "conv_id", "metric", "day", "sample_count", "payload", "payload_bytes", "raw_bytes",
@@ -62,45 +59,8 @@ def fit_lossless(series: DataFrame, num_tasks: int | None = None) -> DataFrame:
     return grouped_points(series, num_tasks).mapInPandas(fit, BLOCK_SCHEMA)
 
 
-def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # one output DataFrame per Arrow batch, assembled from concatenated
-    # numpy arrays — never a pandas frame per block (per-block pandas
-    # overhead dominates when blocks are small series-days)
-    for pdf in batches:
-        ts_parts, val_parts, counts = [], [], []
-        for row in pdf.itertuples(index=False):
-            ts, values = gorilla_decode(bytes(row.payload))
-            ts_parts.append(ts)
-            val_parts.append(values)
-            counts.append(len(values))
-        if not counts:
-            yield pd.DataFrame(columns=["conv_id", "metric", "epoch_s", "value"])
-            continue
-        # dictionary-encoded key columns (see frames._decode_batches)
-        reps = np.asarray(counts, dtype=np.int64)
-        conv_codes, conv_uni = pd.factorize(pdf["conv_id"].to_numpy())
-        met_codes, met_uni = pd.factorize(pdf["metric"].to_numpy())
-        yield pd.DataFrame(
-            {
-                "conv_id": pd.Categorical.from_codes(np.repeat(conv_codes, reps), conv_uni),
-                "metric": pd.Categorical.from_codes(np.repeat(met_codes, reps), met_uni),
-                "epoch_s": np.concatenate(ts_parts),
-                "value": np.concatenate(val_parts),
-            }
-        )
-
-
 def decode_lossless(blocks: DataFrame, num_tasks: int | None = None) -> DataFrame:
-    """blocks -> (conv_id, metric, bucket_ts, value), shuffle-free.
-
-    Task granularity via :func:`atsc_spark.frames.decode_granularity`
-    (see there: file-backed untouched, cached coalesced, lazy chains
-    repartitioned so the upstream fit keeps its parallelism).
-    """
-    sel = decode_granularity(
-        blocks.select("conv_id", "metric", "sample_count", "payload"), blocks, num_tasks
-    )
-    decoded = sel.mapInPandas(_decode, DECODED_SCHEMA)
-    return decoded.select(
-        "conv_id", "metric", F.timestamp_seconds("epoch_s").alias("bucket_ts"), "value"
-    )
+    """blocks -> (conv_id, metric, bucket_ts, value), shuffle-free,
+    through the shared decoder (task granularity as in
+    :func:`atsc_spark.frames.decode_granularity`)."""
+    return decode_compressed(compressed_rows(blocks), blocks, num_tasks)

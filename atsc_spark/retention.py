@@ -53,12 +53,13 @@ import logging
 import time as _time_mod
 from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .frames import decode_frames, fit_frames, prune_frames_to_range
-from .lossless import decode_lossless, fit_lossless
+from .frames import compressed_rows, decode_compressed, fit_frames, prune_frames_to_range
+from .lossless import fit_lossless
 from .rollup import rollup
 
 _log = logging.getLogger(__name__)
@@ -97,13 +98,6 @@ def _epoch_range(t0, t1) -> tuple[int | None, int | None]:
     if hi_s is not None and isinstance(t1, date) and not isinstance(t1, datetime):
         hi_s += 86_400 - 1
     return lo_s, hi_s
-
-
-def _union(parts: list[DataFrame]) -> DataFrame | None:
-    out = None
-    for p in parts:
-        out = p if out is None else out.unionByName(p)
-    return out
 
 
 @dataclass
@@ -172,9 +166,6 @@ class TieredStore:
                 except ValueError:
                     continue  # foreign directory (e.g. _staging leftovers)
         return sorted(days)
-
-    def raw_days(self) -> list[date]:
-        return self.tier_days("raw")
 
     def _fs(self, path: str):
         jvm = self.spark._jvm
@@ -253,21 +244,27 @@ class TieredStore:
         return out
 
     def tier_points(
-        self, tier: str, rows: DataFrame, span: tuple[int, int] | None = None
-    ) -> DataFrame:
-        """A point tier's (already day- and key-filtered) rows as
-        ``(conv_id, metric, bucket_ts, value)``: raw rows are selected,
-        tier0 Gorilla blocks and tier1/2 frames decoded.  ``span``
-        (closed, epoch seconds) first drops frames outside it from
-        their span metadata; Gorilla blocks are one series-day each, so
-        the caller's day filter already bounds them."""
-        if tier == "raw":
-            return rows.select("conv_id", "metric", "bucket_ts", "value")
-        if tier == "tier0":
-            return decode_lossless(rows)
-        if span is not None:
-            rows = prune_frames_to_range(rows, *span)
-        return decode_frames(rows)
+        self, parts: dict[str, DataFrame], span: tuple[int, int] | None = None
+    ) -> DataFrame | None:
+        """Points ``(conv_id, metric, bucket_ts, value)`` of point-tier
+        rows (already day- and key-filtered) keyed by tier; None when
+        ``parts`` is empty.  Raw rows are selected.  Tier0 Gorilla
+        blocks and tier1/2 frames each become the compressed-row view
+        (:func:`~atsc_spark.frames.compressed_rows`), and the union of
+        the views decodes in ONE Python stage, however many tiers a
+        read spans.  ``span`` (closed, epoch seconds) first drops frames
+        outside it from their span metadata; a Gorilla block is one
+        series-day, which the day filter already bounds."""
+        out, views = [], []
+        for tier, rows in parts.items():
+            if tier == "raw":
+                out.append(rows.select("conv_id", "metric", "bucket_ts", "value"))
+            else:
+                pruned = span is not None and tier != "tier0"
+                views.append(compressed_rows(prune_frames_to_range(rows, *span) if pruned else rows))
+        if views:
+            out.append(decode_compressed(reduce(DataFrame.unionByName, views)))
+        return reduce(DataFrame.unionByName, out) if out else None
 
     def read_days(self, days: list[date], listing=None) -> DataFrame | None:
         """Points of the given days, each day read from its most
@@ -281,24 +278,22 @@ class TieredStore:
         reproduces the partition value exactly; a deployment that
         overrides the session TZ between write and read would
         mis-bucket boundary rows and must not do that."""
-        wanted = set(days)
-        by_tier: dict[str, list[str]] = {}
-        for day, held in self.holders(listing).items():
-            if day in wanted:
-                by_tier.setdefault(held[0], []).append(day.isoformat())
+        holders = self.holders(listing)
         # frame spans, widened by the same ±2 days as read_series
         span = (
             _epoch_s(min(days)) - 2 * 86_400,
             _epoch_s(max(days)) + 3 * 86_400,
         )
-        parts = []
+        parts = {}
         for tier in _POINT_TIERS:
-            rows = self._read_or_empty(tier) if tier in by_tier else None
+            isos = [d.isoformat() for d in days if d in holders and holders[d][0] == tier]
+            rows = self._read_or_empty(tier) if isos else None
             if rows is not None:
-                isos = by_tier[tier]
-                points = self.tier_points(tier, rows.filter(F.col("day").isin(isos)), span)
-                parts.append(points.filter(F.to_date("bucket_ts").isin(isos)))
-        return _union(parts)
+                parts[tier] = rows.filter(F.col("day").isin(isos))
+        points = self.tier_points(parts, span)
+        if points is None:
+            return None
+        return points.filter(F.to_date("bucket_ts").isin([d.isoformat() for d in days]))
 
     # ------------------------------------------------------------ lease
 
@@ -558,7 +553,7 @@ class TieredStore:
             src = self.spark.read.parquet(self.path(source)).filter(
                 F.col("day").isin(days)
             )
-            series = self.tier_points(source, src)
+            series = self.tier_points({source: src})
 
             if target == "tier0":
                 out = fit_lossless(series)
@@ -822,10 +817,10 @@ class TieredStore:
         conv_ids: list[str] | None = None,
         metrics: list[str] | None = None,
     ) -> DataFrame:
-        """Unified read across tiers: raw rows ∪ decoded tier0 blocks ∪
-        decoded tier1/2 frames, each day from its most faithful holder
-        (:meth:`holders`).  (Rollup-only days are aggregates and are
-        served from read_rollup.)
+        """Unified read across tiers: raw rows ∪ ONE decode of the
+        tier0 blocks and tier1/2 frames (:meth:`tier_points`), each day
+        from its most faithful holder (:meth:`holders`).  (Rollup-only
+        days are aggregates and are served from read_rollup.)
 
         With a time range ``[t0, t1]`` (closed interval; epoch seconds,
         :class:`~datetime.datetime` or :class:`~datetime.date`), the
@@ -842,7 +837,7 @@ class TieredStore:
            tier0 Gorilla blocks are one series-day each, so the day
            layer already bounds them;
         3. **exact timestamp trim after decode** — boundary-straddling
-           frames decode whole and are trimmed here.
+           frames decode whole and are trimmed once, over all tiers.
 
         At the 100 TB tier this is the difference between decoding one
         day and decoding a year for a dashboard query.
@@ -856,9 +851,9 @@ class TieredStore:
         ``conv_ids`` / ``metrics`` restrict the read to those series.
         They are applied to the COMPRESSED rows (frames/blocks are
         keyed by (conv_id, metric)), not to the decoded output — a
-        filter after ``mapInPandas`` cannot push through the decoder,
-        so filtering here is what keeps a single-series read from
-        decoding the whole store.
+        filter cannot push through the Python decoder, so filtering
+        here is what keeps a single-series read from decoding the
+        whole store.
         """
         lo_s, hi_s = _epoch_range(t0, t1)
 
@@ -887,13 +882,6 @@ class TieredStore:
                 )
             return df
 
-        def ts_trim(df: DataFrame) -> DataFrame:
-            if lo_s is not None:
-                df = df.filter(F.col("bucket_ts") >= F.timestamp_seconds(F.lit(lo_s)))
-            if hi_s is not None:
-                df = df.filter(F.col("bucket_ts") <= F.timestamp_seconds(F.lit(hi_s)))
-            return df
-
         span = None
         if lo_s is not None or hi_s is not None:
             span = (
@@ -901,7 +889,7 @@ class TieredStore:
                 hi_s if hi_s is not None else 2**62,
             )
         holders = self.holders()
-        parts: list[DataFrame] = []
+        parts: dict[str, DataFrame] = {}
         for tier in _POINT_TIERS:
             held = [d for d, h in holders.items() if tier in h]
             rows = self._read_or_empty(tier) if held else None
@@ -913,10 +901,14 @@ class TieredStore:
             dup = [d.isoformat() for d in held if holders[d][0] != tier]
             if dup:
                 rows = rows.filter(~F.col("day").isin(dup))
-            parts.append(ts_trim(self.tier_points(tier, rows, span)))
-        out = _union(parts)
+            parts[tier] = rows
+        out = self.tier_points(parts, span)
         if out is None:
             raise RuntimeError("empty store")
+        if lo_s is not None:  # the exact trim, once for every tier
+            out = out.filter(F.col("bucket_ts") >= F.timestamp_seconds(F.lit(lo_s)))
+        if hi_s is not None:
+            out = out.filter(F.col("bucket_ts") <= F.timestamp_seconds(F.lit(hi_s)))
         return out
 
     def read_rollup(self) -> DataFrame | None:
@@ -947,8 +939,6 @@ class TieredStore:
         rollup-only are not served here (they hold only 1h aggregates;
         use :meth:`read_rollup`).
         """
-        from .rollup import rollup
-
         lo_s, hi_s = _epoch_range(t0, t1)
         span_s = max(hi_s - lo_s, 1)
         base = self.read_series(t0, t1, conv_ids=conv_ids, metrics=metrics)

@@ -524,8 +524,9 @@ def test_refresh_decodes_each_source_tier_once(
     spark, cagg_series, aged_store, monkeypatch
 ):
     """The one-job refresh write feeds all three grains from the same
-    1m rollup; the lossy-tier frame decode under it must run once per
-    refresh, not once per grain branch."""
+    1m rollup; the decode of the lossy tiers under it must run once per
+    refresh, not once per grain branch, and as ONE Python stage for
+    both tiers."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     store = aged_store
@@ -534,7 +535,9 @@ def test_refresh_decodes_each_source_tier_once(
 
     def parquet(self, path, *args, **kwargs):
         plan = self._df._jdf.queryExecution().executedPlan()
-        counts.append(_count_nodes(spark, plan, "MapInPandas", set()))
+        counts.append(
+            [_count_nodes(spark, plan, n, set()) for n in ("MapInArrow", "MapInPandas")]
+        )
         return original(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
@@ -542,7 +545,7 @@ def test_refresh_decodes_each_source_tier_once(
     cagg = ContinuousRollups(spark, store)
     cagg.refresh()
     monkeypatch.undo()
-    assert counts == [2]  # one decode per lossy tier (tier1, tier2)
+    assert counts == [[1, 0]]  # one decode stage for tier1 and tier2
     # the shared 1m rollup is released once the write is done
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
     # lossy tiers keep every timestamp: buckets and counts are exact

@@ -25,9 +25,10 @@ def _spark_submit() -> str:
 
 
 def test_local_cluster_end_to_end_and_strict_propagation():
-    """Two executor JVMs run the fit/decode roundtrip, and a non-default,
-    closure-captured fit argument (``compressor="fft"``) reaches them.
-    The propagation check once used a strict flag; the name is kept."""
+    """Two executor JVMs run the lossy and the lossless fit/decode
+    roundtrips, and a non-default, closure-captured fit argument
+    (``compressor="fft"``) reaches them.  The propagation check once
+    used a strict flag; the name is kept."""
     subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "make_pyfiles_zip.py")],
         check=True,
@@ -58,3 +59,5 @@ def test_local_cluster_end_to_end_and_strict_propagation():
     assert r["n_in"] == r["n_out"] > 0, r
     # a non-default fit argument travels in the UDF closure to executors
     assert r["closure_arg_reached"], r
+    # the Gorilla branch of the shared decoder, on the executor JVMs
+    assert r["lossless_roundtrip_exact"], r

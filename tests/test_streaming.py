@@ -1,6 +1,6 @@
 """Streaming ingest tests (stateful per-conversation state, streamed
 series to frames, the watermark append-only contract, and streamed
-transcripts landing in the tiered store) and the PNG/GIF codec tests."""
+transcripts landing in the tiered store)."""
 
 from pyspark.sql import functions as F
 
@@ -211,150 +211,3 @@ def test_stream_to_store_replayed_batch_skipped_by_marker(spark, tmp_path):
     q2 = stream_transcripts_to_store(spark, inp, store)
     q2.awaitTermination(120)
     assert store.read_series().count() == n  # markers skipped the replay
-
-
-# ------------------------------------------ PNG / GIF codecs
-
-
-def test_png_decode_roundtrip_all_filters():
-    """Real PNG decode (stdlib zlib + numpy unfilter): the encoder
-    cycles all five filter types row by row, so every unfilter branch
-    (None/Sub/Up/Average/Paeth) is exercised by real bytes."""
-    import numpy as np
-    from atsc_spark.datapipe.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(1)
-    for h, w in [(1, 1), (5, 7), (16, 16), (33, 9)]:
-        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert np.array_equal(decode_png(encode_png(px, filter_mix=True)), px)
-        assert np.array_equal(decode_png(encode_png(px, filter_mix=False)), px)
-    # smooth gradients (the case filters actually compress)
-    grad = np.stack(
-        [np.add.outer(np.arange(32), np.arange(32)) % 256] * 3, axis=2
-    ).astype(np.uint8)
-    assert np.array_equal(decode_png(encode_png(grad)), grad)
-
-
-def test_png_color_types():
-    """Gray / palette / gray+alpha / RGBA variants decode to (h,w,3)."""
-    import struct
-    import zlib
-
-    import numpy as np
-    from atsc_spark.datapipe.multimodal import _PNG_SIG, decode_png
-
-    def chunk(ctype, body):
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(
-            ">I", zlib.crc32(ctype + body)
-        )
-
-    def build(w, h, color, raw_rows, plte=None):
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        out = _PNG_SIG + chunk(b"IHDR", ihdr)
-        if plte is not None:
-            out += chunk(b"PLTE", plte)
-        return out + chunk(b"IDAT", zlib.compress(raw_rows)) + chunk(b"IEND", b"")
-
-    # gray 2x2 (filter 0 rows)
-    g = build(2, 2, 0, b"\x00\x0a\x14\x00\x1e\x28")
-    assert decode_png(g).tolist() == [[[10] * 3, [20] * 3], [[30] * 3, [40] * 3]]
-    # palette: index row -> PLTE colors
-    p = build(2, 1, 3, b"\x00\x00\x01", bytes([255, 0, 0, 0, 255, 0]))
-    assert decode_png(p).tolist() == [[[255, 0, 0], [0, 255, 0]]]
-    # gray+alpha: alpha dropped
-    ga = build(2, 1, 4, b"\x00\x0a\xff\x14\x80")
-    assert decode_png(ga).tolist() == [[[10] * 3, [20] * 3]]
-    # RGBA: alpha dropped
-    rgba = build(1, 1, 6, b"\x00\x01\x02\x03\xff")
-    assert decode_png(rgba).tolist() == [[[1, 2, 3]]]
-
-
-def test_png_committed_fixture():
-    """Committed .png fixture decodes to the committed pixel array —
-    the parity anchor is on disk, not regenerated by the encoder under
-    test."""
-    import os
-
-    import numpy as np
-    from atsc_spark.datapipe.multimodal import decode_png
-
-    base = os.path.join(os.path.dirname(__file__), "fixtures")
-    blob = open(os.path.join(base, "gradient_24x32.png"), "rb").read()
-    expected = np.load(os.path.join(base, "gradient_24x32_pixels.npy"))
-    assert np.array_equal(decode_png(blob), expected)
-
-
-def _gif_fixture_path():
-    import os
-
-    return os.path.join(os.path.dirname(__file__), "fixtures", "anim_24x32.gif")
-
-
-def test_gif_roundtrip_and_clear_cadence():
-    """encode_gif -> decode_gif is pixel-exact, including a frame large
-    enough to exercise the periodic-CLEAR width bookkeeping (the
-    encoder simulates the decoder's table growth; an off-by-one there
-    corrupts the read width for every conformant decoder)."""
-    import numpy as np
-
-    from atsc_spark.datapipe.multimodal import decode_gif, encode_gif
-
-    rng = np.random.default_rng(5)
-    pal = rng.integers(0, 256, (7, 3), dtype=np.uint8)
-    frames = pal[rng.integers(0, 7, (3, 24, 32))]
-    dec, delays = decode_gif(encode_gif(frames, [100, 50, 200]))
-    assert np.array_equal(dec, frames)
-    assert delays == [100, 50, 200]
-
-    big = pal[rng.integers(0, 7, (1, 64, 64))]  # > 766 literals -> CLEARs
-    dec2, _ = decode_gif(encode_gif(big))
-    assert np.array_equal(dec2, big)
-
-
-def test_gif_committed_fixture():
-    """The committed .gif decodes to the pinned per-frame digests —
-    catches silent decoder drift."""
-    import hashlib
-
-    from atsc_spark.datapipe.multimodal import decode_gif
-
-    blob = open(_gif_fixture_path(), "rb").read()
-    frames, delays = decode_gif(blob)
-    assert frames.shape == (2, 24, 32, 3) and delays == [100, 100]
-    assert hashlib.sha256(frames[0].tobytes()).hexdigest()[:16] == "871c96d2a6efded1"
-    assert hashlib.sha256(frames[1].tobytes()).hexdigest()[:16] == "9c69d2a24572406c"
-
-
-def test_gif_gce_state_does_not_leak_across_frames():
-    """GIF89a: a graphic control extension applies only to the NEXT
-    rendering block.  Frame 1 carries a transparency GCE; frame 2 has
-    its GCE surgically removed — frame 2 must render its own pixels
-    fully opaque instead of punching frame-1 pixels through."""
-    import numpy as np
-
-    from atsc_spark.datapipe.multimodal import decode_gif, encode_gif
-
-    # two solid frames of different palette entries
-    f1 = np.full((8, 8, 3), [10, 20, 30], dtype=np.uint8)
-    f2 = np.full((8, 8, 3), [200, 100, 50], dtype=np.uint8)
-    blob = bytearray(encode_gif(np.stack([f1, f2]), [100, 100]))
-
-    # encoder layout: per frame GCE = 21 F9 04 flags delay(2) tindex 00
-    gce_positions = []
-    i = 0
-    while True:
-        j = blob.find(b"\x21\xf9\x04", i)
-        if j < 0:
-            break
-        gce_positions.append(j)
-        i = j + 1
-    assert len(gce_positions) == 2
-    # frame 1: transparency ON for the palette index frame 2 uses
-    pal_idx_f2 = 1 if tuple(f1[0, 0]) < tuple(f2[0, 0]) else 0
-    blob[gce_positions[0] + 3] |= 1
-    blob[gce_positions[0] + 6] = pal_idx_f2
-    # frame 2: remove its GCE entirely (8 bytes)
-    del blob[gce_positions[1] : gce_positions[1] + 8]
-
-    frames, _ = decode_gif(bytes(blob))
-    assert np.array_equal(frames[1], f2), "stale transparency leaked into frame 2"

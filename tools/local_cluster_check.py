@@ -16,7 +16,10 @@ executor JVMs, each with its own Python daemon, the package shipped via
   tags every frame row ``fft``.  The argument reaches the executor
   processes only inside the UDF closure, and a fixed compressor is kept
   on every frame, so any other value means the closure lost it (the
-  ``max_error`` above cannot show this: 0.03 is also the default).
+  ``max_error`` above cannot show this: 0.03 is also the default);
+- ``lossless_roundtrip_exact``: the same series through ``fit_lossless``
+  then ``decode_lossless`` (the Gorilla branch of the shared decoder)
+  returns exactly the input rows, each once.
 
 Run directly (it builds its own session) or via spark-submit:
 
@@ -69,6 +72,7 @@ def main() -> None:
 
     from atsc_spark.fixtures import monitoring_series
     from atsc_spark.frames import decode_frames, fit_frames
+    from atsc_spark.lossless import decode_lossless, fit_lossless
 
     series = monitoring_series(spark, n_series=8, samples_per_series=512)
     n_in = series.count()
@@ -83,6 +87,14 @@ def main() -> None:
     ]
     closure_arg_reached = compressors == ["fft"]
 
+    points = series.select("conv_id", "metric", "bucket_ts", "value")
+    exact = decode_lossless(fit_lossless(series)).cache()
+    lossless_roundtrip_exact = (
+        exact.count() == n_in
+        and exact.exceptAll(points).count() == 0
+        and points.exceptAll(exact).count() == 0
+    )
+
     # sentinel prefix: Spark 4's structured logging emits JSON *log*
     # lines on stdout/stderr, so a bare startswith("{") scrape can
     # grab an ERROR record instead of the result
@@ -96,6 +108,7 @@ def main() -> None:
                 "max_error": max_err,
                 "fit_roundtrip_ok": fit_roundtrip_ok,
                 "closure_arg_reached": closure_arg_reached,
+                "lossless_roundtrip_exact": lossless_roundtrip_exact,
             }
         )
     )

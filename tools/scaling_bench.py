@@ -8,8 +8,8 @@ measurements are independent.
 
 The measured job is the engine's core workload: synthesize transcripts
 (fixed seed), derive per-conversation series, fit ATSC frames at 3%,
-decode and count — i.e. the full shuffle + applyInPandas + mapInPandas
-path.  Throughput metric: turns/sec.
+decode and count — i.e. the full shuffle + grouped_points/mapInPandas
+fit + mapInArrow decode path.  Throughput metric: turns/sec.
 
 Usage:
     python tools/scaling_bench.py              # runs N and 4N, prints JSON
