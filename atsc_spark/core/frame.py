@@ -7,8 +7,8 @@ stream layout (`atsc/src/data.rs:79-103`, `atsc/src/header.rs:60-84`).
 
 The tournament is a pure function of (frame values, max_error, speed
 level) — deterministic and embarrassingly parallel, which is what lets
-the Spark layer run it per series-day group inside ``mapInPandas``
-over ``frames.grouped_points`` rows.
+the Spark layer run it per series-day group inside one ``mapInArrow``
+fit body over ``frames.grouped_points`` rows.
 """
 
 from __future__ import annotations

@@ -130,7 +130,7 @@ def sized_slices(sizes, budget: int) -> list[tuple[int, int]]:
     its own.  Spark caps Arrow batches by record count, not by size,
     so every Arrow kernel whose working memory grows with its batch
     runs per slice (text bytes for the Gopher and minhash kernels,
-    decoded samples for the frame decoder)."""
+    decoded samples for the frame decoder, group points for the fit)."""
     n = len(sizes)
     if n <= 1 or int(np.sum(sizes)) <= budget:
         return [(0, n)]

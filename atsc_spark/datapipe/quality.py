@@ -148,7 +148,7 @@ def repetition_stats(
     implementations (``tests/test_quality.py`` proves them equal on
     the same hypothesis corpus):
 
-    - ``impl="arrow"`` (default, VERDICT r6 #3): one ``mapInPandas``
+    - ``impl="arrow"`` (default, VERDICT r6 #3): one ``mapInArrow``
       pass — tokens are integer-coded with hash-based
       ``pd.factorize`` and every n-gram size is counted by a C-speed
       ``np.unique`` over a strided window view of the id array, so no

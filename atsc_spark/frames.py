@@ -6,11 +6,11 @@ loop); here the same pure frame math (``atsc_spark.core``) runs inside
 Arrow-batched Python UDFs:
 
 - :func:`fit_frames` — :func:`grouped_points` (one row per
-  ``(conv_id, metric, day)`` with JVM-built point arrays) then
-  ``mapInPandas``.  One shuffle on the group key; group size is bounded
-  (<= 86,400 samples per series-day, ~0.7 MB), so executor memory is
-  safe at any total scale and hot conversations cannot create a giant
-  group.
+  ``(conv_id, metric, day)`` with JVM-built point arrays) then the one
+  ``mapInArrow`` fit body (:func:`arrow_fit_fn`), which
+  ``lossless.fit_lossless`` shares.  One shuffle on the group key;
+  group size is bounded (<= 86,400 samples per series-day, ~0.7 MB),
+  so hot conversations cannot create a giant group.
 - :func:`decode_compressed` — the one decoder of every compressed
   tier: a ``mapInArrow`` over the compressed-row view
   (:func:`compressed_rows`) of lossy frames and tier-0 Gorilla blocks
@@ -29,17 +29,17 @@ vectorized from gap detection rather than streaming appends
 from __future__ import annotations
 
 import logging
-import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .core.batchfit import compress_frames_batch
 from .core.frame import (
+    AUTO,
     COMPRESSOR_IDS,
     COMPRESSOR_NAMES,
     compress_frame,
@@ -127,47 +127,39 @@ def segments_to_ts(seg_interval, seg_start, seg_n) -> np.ndarray:
     return np.cumsum(steps)
 
 
+#: ``defaultParallelism`` multipliers of :func:`fit_task_count` and :func:`decode_granularity`
+FIT_TASK_FACTOR = 2
+DECODE_TASK_FACTOR = 1
+
+#: per-slice point budget of the fit body (the batched tournament keeps
+#: every frame of a slice alive).  A sample costs up to ~61 B of peak
+#: working memory (tracemalloc NumPy peak plus Arrow pool peak, 1 M
+#: samples of ~64-sample transcript groups; 4,320-sample monitoring days
+#: 30 B, Gorilla blocks 17-30 B): 16 M samples ~1.0 GB, near the other
+#: kernels' budgets.  A 65,536-row batch of 4,320-sample days is ~283 M.
+FIT_BATCH_SAMPLE_BUDGET = 16 << 20
+
+
 def fit_task_count(spark) -> int:
-    """Default fit-stage task count: ``defaultParallelism x factor``
-    (factor from ``$ATSC_FIT_TASK_FACTOR``, default 2) — scale-adaptive
-    (proportional to cluster cores), never a constant.
+    """Default fit-stage task count: ``defaultParallelism x``
+    :data:`FIT_TASK_FACTOR` (2) — scale-adaptive (proportional to
+    cluster cores), never a constant.
 
     The factor was 8 through round 7 ("plenty of slices for load
-    balance"); measured per-task mapInPandas cost made that a net loss
+    balance"); measured per-task Python-UDF cost made that a net loss
     on every graded corpus (monitoring fit noop at 32 cores: 1.65 s at
     1x, 3.82 s at 8x; transcripts 5.9/5.4/7.1 s at 1x/2x/8x; the
     hot-key corpus — one conversation owning half the turns — is 1.4 s
     at 1x vs 5.1 s at 8x, because fit groups are day-bounded so a hot
     key cannot pin a task and the extra slices buy nothing).
 
-    Most of that per-task cost was not dispatch: it was the Python
-    worker re-reading the central directories of ``pyspark.zip`` and
-    the spark-core jar on every task's ``importlib.invalidate_caches()``,
-    ~0.23-0.29 CPU-s per task on every core.  An identity mapInPandas
-    on local[4] (4-core Xeon host) took 1.11 s at 8 tasks and 3.10 s at
-    32 with the re-read, 0.50 s and 1.03 s with :mod:`atsc_spark.zipcache`
-    skipping it (a JVM-only job: ~0.2 s).  The 2x default was chosen with the re-read in place
-    and has not been re-measured without it; deployments with lumpier
-    groups can raise the factor per cluster.
+    Most of that per-task cost was the Python worker re-reading zip
+    central directories on every task, which :mod:`atsc_spark.zipcache`
+    now skips (see there).  The 2x factor was chosen with the re-read in
+    place and has not been re-measured since; it is a constant because
+    no measurement shows deployments needing different values.
     """
-    factor = float(os.environ.get("ATSC_FIT_TASK_FACTOR", "2"))
-    return max(1, int(spark.sparkContext.defaultParallelism * factor))
-
-
-_FRAME_COLS = [
-    "conv_id", "metric", "day", "frame_idx", "compressor", "compressor_id",
-    "sample_count", "seg_interval", "seg_start", "seg_n", "payload", "error",
-    "payload_bytes", "raw_bytes", "span_start_s", "span_end_s",
-]
-
-
-def _span_of_segments(m: np.ndarray, y0: np.ndarray, cnt: np.ndarray):
-    """(first_ts, last_ts) of a frame from its VSRI segment arrays;
-    (None, None) for an empty frame — null spans are KEPT by pruning,
-    never silently dropped."""
-    if len(y0) == 0:
-        return None, None
-    return int(y0[0]), int(y0[-1] + m[-1] * (cnt[-1] - 1))
+    return max(1, spark.sparkContext.defaultParallelism * FIT_TASK_FACTOR)
 
 
 def _frames_of(values: np.ndarray, ts: np.ndarray):
@@ -187,42 +179,18 @@ def _frames_of(values: np.ndarray, ts: np.ndarray):
         offset += size
 
 
-def _frame_row(conv_id, metric, day, frame_idx: int, size: int, seg, res) -> dict:
-    """One FRAME_SCHEMA row for a fitted frame (``res``: FrameResult)."""
-    m, y0, cnt = seg
-    s0, s1 = _span_of_segments(m, y0, cnt)
-    return {
-        "conv_id": conv_id,
-        "metric": metric,
-        "day": day,
-        "frame_idx": frame_idx,
-        "compressor": COMPRESSOR_NAMES[res.compressor],
-        "compressor_id": res.compressor,
-        "sample_count": res.sample_count,
-        "seg_interval": m,
-        "seg_start": y0,
-        "seg_n": cnt,
-        "payload": res.payload,
-        "error": float(res.error) if np.isfinite(res.error) else None,
-        "payload_bytes": len(res.payload),
-        "raw_bytes": int(size) * 8,
-        "span_start_s": s0,
-        "span_end_s": s1,
-    }
-
-
 def grouped_points(series: DataFrame, num_tasks: int) -> DataFrame:
     """One row per (conv_id, metric, day) with the group's points as
     JVM-built arrays: ``(conv_id, metric, day, ts_s array<long>,
     vals array<double>)``, points sorted by time.
 
     This is the Arrow-friendly formulation of "give each fit group its
-    series": shipping 10^7 skinny rows into mapInPandas pays an
+    series": shipping 10^7 skinny rows into a pandas UDF paid an
     object-string + per-row conversion cost that dominated the whole
     fit stage (measured 541 CPU-s of Python for ~80 CPU-s of actual
-    frame math); one row per group with numeric child arrays cuts the
-    fit wall ~3x at 32 cores.  Group size is day-bounded (<= 86,400
-    samples = 0.7 MB), so a group row can never blow executor memory.
+    frame math); one row per group with numeric child arrays, read as
+    NumPy views (:func:`_point_groups`), cut the fit wall ~3x at 32
+    cores.  Group size is day-bounded (<= 86,400 samples = 0.7 MB).
 
     The explicit hash repartition pins task count: the agg output is
     byte-light and AQE's coalescing would serialize the compute-dense
@@ -250,74 +218,80 @@ def grouped_points(series: DataFrame, num_tasks: int) -> DataFrame:
     )
 
 
-def _groups_of(pdf: pd.DataFrame):
-    """Unpack one :func:`grouped_points` pandas batch: yield
-    ``(conv_id, metric, day, values float64, ts int64)`` per group row."""
-    conv = pdf["conv_id"].to_numpy()
-    met = pdf["metric"].to_numpy()
-    day = pdf["day"].to_numpy()
-    ts_col = pdf["ts_s"].to_numpy()
-    val_col = pdf["vals"].to_numpy()
-    for i in range(len(pdf)):
-        values = np.asarray(val_col[i], dtype=np.float64)
-        ts = np.asarray(ts_col[i], dtype=np.int64)
-        yield conv[i], met[i], day[i], values, ts
+def _point_groups(rb: pa.RecordBatch):
+    """Unpack one :func:`grouped_points` batch: yield ``(values float64,
+    ts int64)`` per group row, as views of the list children."""
+    vals, ts = rb.column("vals"), rb.column("ts_s")
+    v = np.asarray(vals.values.to_numpy(zero_copy_only=False), dtype=np.float64)
+    t = np.asarray(ts.values.to_numpy(zero_copy_only=False), dtype=np.int64)
+    vo, to = np.asarray(vals.offsets).tolist(), np.asarray(ts.offsets).tolist()
+    for i in range(rb.num_rows):
+        yield v[vo[i] : vo[i + 1]], t[to[i] : to[i + 1]]
 
 
-def make_grouped_fit_fn(handle_group, columns: list[str]):
-    """mapInPandas body over :func:`grouped_points` rows.
-
-    ``handle_group(conv_id, metric, day, values, ts, rows)`` appends
-    output row dicts (with keys = ``columns``) for one group.
-    """
+def arrow_fit_fn(fit_slice):
+    """The one ``mapInArrow`` fit body over :func:`grouped_points` rows,
+    for lossy frames and Gorilla blocks alike: each input batch is cut
+    into :data:`FIT_BATCH_SAMPLE_BUDGET` slices by point count, and
+    ``fit_slice(slice)`` returns the output batch of each."""
 
     def run(batches):
-        for pdf in batches:
-            rows: list = []
-            for group in _groups_of(pdf):
-                handle_group(*group, rows)
-            yield pd.DataFrame(rows, columns=columns)
+        for rb in batches:
+            points = np.diff(np.asarray(rb.column("vals").offsets))
+            for lo, hi in sized_slices(points, FIT_BATCH_SAMPLE_BUDGET):
+                yield fit_slice(rb.slice(lo, hi - lo))
 
     return run
 
 
-def _make_fit_map_fn(compressor_id: int, max_error: float, speed: int):
-    from .core.frame import AUTO
-
+def _compress_fn(compressor_id: int, max_error: float, speed: int):
+    """``compress(frames) -> [FrameResult]``.  AUTO at speed 0 runs the
+    cross-frame batched tournament (core/batchfit.py): result-identical
+    to the per-frame path at ~2.6x its throughput on small frames."""
     if compressor_id == AUTO and speed == 0:
-        return _make_fit_map_fn_batched(max_error)
-
-    def handle(conv_id, metric, day, values, ts, rows):
-        for frame_idx, size, data, seg in _frames_of(values, ts):
-            res = compress_frame(data, compressor_id, max_error, speed)
-            rows.append(_frame_row(conv_id, metric, day, frame_idx, size, seg, res))
-
-    return make_grouped_fit_fn(handle, _FRAME_COLS)
+        return lambda datas: compress_frames_batch(datas, max_error)
+    return lambda datas: [compress_frame(d, compressor_id, max_error, speed) for d in datas]
 
 
-def _make_fit_map_fn_batched(max_error: float):
-    """AUTO/speed-0 fit with the CROSS-FRAME batched tournament
-    (core/batchfit.py): all frames of every group in the Arrow batch
-    are collected first, bucketed by length, and compressed in
-    vectorized cohorts — result-identical to the per-frame path
-    (pinned by equivalence tests) at ~2.6x the throughput on
-    small-frame-heavy (Zipf conversation) workloads."""
-
-    def run(batches):
-        from .core.batchfit import compress_frames_batch
-
-        for pdf in batches:
-            metas: list = []
-            datas: list = []
-            for conv_id, metric, day, values, ts in _groups_of(pdf):
-                for frame_idx, size, data, seg in _frames_of(values, ts):
-                    metas.append((conv_id, metric, day, frame_idx, size, seg))
-                    datas.append(data)
-            results = compress_frames_batch(datas, max_error)
-            rows = [_frame_row(*meta, res) for meta, res in zip(metas, results)]
-            yield pd.DataFrame(rows, columns=_FRAME_COLS)
-
-    return run
+def _frame_batch(compress, rb: pa.RecordBatch) -> pa.RecordBatch:
+    """One :func:`grouped_points` slice -> its FRAME_SCHEMA batch, built
+    as columns: keys by a ``take`` over the input rows, every frame of
+    the slice compressed in one ``compress`` call."""
+    rows, frames = [], []
+    for row, (values, ts) in enumerate(_point_groups(rb)):
+        for frame in _frames_of(values, ts):
+            rows.append(row)
+            frames.append(frame)
+    results = compress([f[2] for f in frames])
+    n = len(results)
+    m, y0, cnt = (
+        np.concatenate([np.empty(0, dt)] + [f[3][k] for f in frames])
+        for k, dt in enumerate((np.int64, np.int64, np.int32))
+    )
+    seg_off = np.concatenate([[0], np.cumsum([len(f[3][2]) for f in frames])]).astype(np.int32)
+    last = seg_off[1:] - 1  # chunk sizes are >= 1: every frame has segments and a span
+    ids = np.fromiter((r.compressor for r in results), np.int32, n)
+    err = np.fromiter((r.error for r in results), np.float64, n)
+    payload = pa.array([r.payload for r in results], pa.binary())
+    offsets = pa.array(seg_off)
+    return pa.RecordBatch.from_pydict(
+        {
+            **{k: rb.column(k).take(np.asarray(rows, np.int64)) for k in ("conv_id", "metric", "day")},
+            "frame_idx": pa.array(np.asarray([f[0] for f in frames], np.int32)),
+            "compressor": pa.array([COMPRESSOR_NAMES[r.compressor] for r in results], pa.string()),
+            "compressor_id": pa.array(ids),
+            "sample_count": pa.array(np.fromiter((r.sample_count for r in results), np.int32, n)),
+            "seg_interval": pa.ListArray.from_arrays(offsets, pa.array(m)),
+            "seg_start": pa.ListArray.from_arrays(offsets, pa.array(y0)),
+            "seg_n": pa.ListArray.from_arrays(offsets, pa.array(cnt)),
+            "payload": payload,
+            "error": pa.array(err, mask=~np.isfinite(err)),
+            "payload_bytes": pc.binary_length(payload),
+            "raw_bytes": pa.array(np.asarray([f[1] for f in frames], np.int64) * 8),
+            "span_start_s": pa.array(y0[seg_off[:-1]]),
+            "span_end_s": pa.array(y0[last] + m[last] * (cnt[last] - 1)),
+        }
+    )
 
 
 def quantize_relative(series: DataFrame, rel_err: float, value_col: str = "value") -> DataFrame:
@@ -360,7 +334,8 @@ def fit_frames(
     cadence one series-day is <= 4,320 samples -> chunk plan
     [4096, 224].  Groups arrive as one row each with JVM-built point
     arrays (:func:`grouped_points` — see there for the Arrow-cost and
-    partitioning rationale); everything inside the UDF is numpy.
+    partitioning rationale) into one ``mapInArrow`` fit body
+    (:func:`arrow_fit_fn`); everything inside it is NumPy and Arrow.
 
     ``gap_fill`` ('locf' | 'linear') regularizes the cadence on a
     ``gap_fill_interval_s`` grid before fitting.  Irregular noisy
@@ -378,8 +353,9 @@ def fit_frames(
     comp_id = COMPRESSOR_IDS[compressor] if isinstance(compressor, str) else compressor
     if num_tasks is None:
         num_tasks = fit_task_count(series.sparkSession)
-    fit = _make_fit_map_fn(comp_id, max_error, speed)
-    return grouped_points(series, num_tasks).mapInPandas(fit, FRAME_SCHEMA)
+    compress = _compress_fn(comp_id, max_error, speed)
+    fit = arrow_fit_fn(lambda rb: _frame_batch(compress, rb))
+    return grouped_points(series, num_tasks).mapInArrow(fit, FRAME_SCHEMA)
 
 
 #: the compressor id tier-0 Gorilla blocks carry in the compressed-row
@@ -477,7 +453,9 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
     A fit output carries the fit's partitioning (see
     :func:`fit_task_count`), which leaves few byte-light rows per
     decode task — per-task Python-worker and Arrow overhead then
-    dominates (measured 6x on tier-0 decode: 0.44 vs 2.3+ Msamples/s).  Strategy by input kind:
+    dominates (measured 6x on tier-0 decode: 0.44 vs 2.3+ Msamples/s).
+    In-memory inputs get ``defaultParallelism x``
+    :data:`DECODE_TASK_FACTOR` (1) tasks at most.  Strategy by input kind:
 
     - file-backed: untouched — parquet splits are already sized by
       ``maxPartitionBytes`` of COMPRESSED payloads, and merging them
@@ -493,13 +471,12 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
         return sel.coalesce(num_tasks)
     if len(source.inputFiles()) > 0:
         return sel
-    # 1x parallelism by default: at 32 cores a second task wave cost
+    # 1x parallelism (DECODE_TASK_FACTOR): at 32 cores a second task wave cost
     # more than the 2x transfer overlap saved (sf1.0 monitoring 0.75 ->
     # 0.57 s, gorilla 0.76 -> 0.50 s, transcripts 1.23 -> 0.94 s at 1x
     # vs 2x), measured while every task still paid the zip directory
     # re-read that atsc_spark.zipcache now skips; not re-measured since.
-    factor = float(os.environ.get("ATSC_DECODE_TASK_FACTOR", "1"))
-    par = max(1, int(source.sparkSession.sparkContext.defaultParallelism * factor))
+    par = max(1, source.sparkSession.sparkContext.defaultParallelism * DECODE_TASK_FACTOR)
     if source.storageLevel.useMemory or source.storageLevel.useDisk:
         # cached input: floor the per-task decode work at ~64 KB of
         # compressed rows.  Smaller tasks cost more in worker round-trip

@@ -636,11 +636,12 @@ class TieredStore:
         measured 6 s of a 12 s cagg refresh at 30 days x 4 tiers.  Here
         the JVM stringifies the whole ``globStatus`` array in one call
         (``Arrays.toString`` of FileStatus, whose ``toString`` carries
-        path/isDirectory/length) and Python parses it — 2 py4j calls
-        per TIER, independent of file count.  Falls back to the
-        per-day path if the FileStatus format ever stops parsing
-        (parse count mismatch), so a Hadoop format change degrades to
-        slow-but-correct."""
+        path/isDirectory/length) and Python parses it — a few py4j calls
+        per TIER, independent of file count.  ``FileStatus.toString``
+        is a private format: if the call fails or the parse count
+        differs from the file count, a warning names the tier and the
+        reason and the per-day path answers, so a Hadoop format change
+        degrades to slow-but-correct, visibly."""
         import re
 
         if TieredStore._FILESTATUS_RE is None:
@@ -657,11 +658,21 @@ class TieredStore:
             n = len(arr)
             if n == 0:
                 return out
-            blob = jvm.java.util.Arrays.toString(arr)
-        except Exception:
+            # py4j does not pass a FileStatus[] for Arrays.toString's
+            # Object[] parameter: copy it into an Object[] first
+            objs = self.spark.sparkContext._gateway.new_array(jvm.java.lang.Object, n)
+            jvm.java.lang.System.arraycopy(arr, 0, objs, 0, n)
+            blob = jvm.java.util.Arrays.toString(objs)
+        except Exception as e:
+            reason = str(e).splitlines()[0] if str(e) else type(e).__name__
+            _log.warning("tier listing of %s: bulk glob failed (%s); listing per day", tier, reason)
             return self._list_tier_files_slow(tier)
         matches = TieredStore._FILESTATUS_RE.findall(blob)
         if len(matches) != n:  # format drift — degrade to the slow path
+            _log.warning(
+                "tier listing of %s: FileStatus format parsed %d of %d entries; listing per day",
+                tier, len(matches), n,
+            )
             return self._list_tier_files_slow(tier)
         for full_path, is_dir, length in matches:
             if is_dir == "true":

@@ -426,7 +426,7 @@ def test_crash_between_grain_commits_self_heals(spark, cagg_series, tmp_path):
 
 
 def test_bulk_tier_listing_matches_per_day(spark, cagg_series, tmp_path):
-    """The 2-py4j-call bulk listing (globStatus + Arrays.toString parse)
+    """The bulk listing (one globStatus + one Arrays.toString parse)
     must see exactly the files the per-day listStatus path sees — and
     its fallback must engage (not crash) on a missing tier."""
     store = TieredStore(
@@ -444,6 +444,31 @@ def test_bulk_tier_listing_matches_per_day(spark, cagg_series, tmp_path):
     by_tier = cagg._bulk_listing()
     for day in list(bulk)[:3]:
         assert cagg._day_fingerprint(day, by_tier) == cagg._day_fingerprint(day)
+
+
+def test_bulk_tier_listing_warns_on_format_drift(spark, cagg_series, tmp_path, monkeypatch, caplog):
+    """When the private FileStatus format stops parsing, the bulk
+    listing says so in one warning naming the tier and still returns
+    what the parsed listing returns."""
+    import logging
+    import re
+
+    store = TieredStore(
+        spark,
+        str(tmp_path / "driftstore"),
+        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
+    )
+    store.write_raw(cagg_series)
+    with caplog.at_level(logging.WARNING, logger="atsc_spark.retention"):
+        fast = store._list_tier_files("raw")
+        assert store._list_tier_files("tier0") == {}  # missing tier dir
+    assert fast and not caplog.records  # the bulk path answered
+    monkeypatch.setattr(TieredStore, "_FILESTATUS_RE", re.compile(r"(?!)(x)(x)(x)"))
+    with caplog.at_level(logging.WARNING, logger="atsc_spark.retention"):
+        drifted = store._list_tier_files("raw")
+    assert drifted == fast
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 1 and "raw" in msgs[0] and "parsed 0 of" in msgs[0], msgs
 
 
 def test_state_log_mixed_spark_and_pyarrow_files(spark, cagg_series, tmp_path):

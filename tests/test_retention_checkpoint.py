@@ -491,7 +491,7 @@ def test_read_series_range_prunes_partitions_in_plan(spark, series, tier1_store)
     assert scan_lines, "scan shows no PartitionFilters"
     assert any("day" in l and ">=" in l and "<=" in l for l in scan_lines), scan_lines
     # the pruned file-backed tier read stays shuffle-free end to end:
-    # every pruning layer is a scan-stage filter, decode is mapInPandas
+    # every pruning layer is a scan-stage filter, decode is mapInArrow
     import re
 
     assert not re.findall(r"^\(\d+\) Exchange", plan, re.M), "pruned read shuffled"
@@ -693,7 +693,7 @@ def test_read_series_span_filters_reach_tier_scan(spark, series, tier1_store):
 
 def test_read_series_key_pruning(spark, series, tier1_store):
     """conv_ids/metrics filters hit the COMPRESSED frame rows (a filter
-    after mapInPandas cannot push through the decoder): the pruned read
+    after mapInArrow cannot push through the decoder): the pruned read
     equals the full read filtered, and the scan reaches the parquet
     PushedFilters."""
     one_conv = series.select("conv_id").distinct().limit(1).collect()[0].conv_id

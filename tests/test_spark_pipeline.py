@@ -154,21 +154,9 @@ def test_quantize_relative_bound(spark):
     assert len(np.unique(out2)) < 10
 
 
-@pytest.mark.parametrize(
-    "compressor,digest",
-    [
-        # batched cross-frame tournament (auto, speed 0)
-        ("auto", "af2b3329eeb75eba4f968671aee57d34eebe156f95987c6459a75446a5493aa4"),
-        # per-frame path (one fixed compressor)
-        ("fft", "04aa6def398da3442ffa2efa132be68646d10da4db8e952dce05436b0fb16374"),
-    ],
-)
-def test_fit_paths_frame_rows_pinned(spark, compressor, digest):
-    """Both fit paths' FRAME_SCHEMA rows, pinned: a sha256 over the
-    sorted rows of a monitoring corpus with NaN/inf samples plus
-    transcript series."""
-    import hashlib
-
+@pytest.fixture(scope="module")
+def fit_corpus(spark):
+    """A monitoring corpus with NaN/inf samples plus transcript series."""
     from pyspark.sql import functions as F
 
     from atsc_spark.fixtures import monitoring_series
@@ -182,12 +170,114 @@ def test_fit_paths_frame_rows_pinned(spark, compressor, digest):
         .otherwise(F.col("value")),
     )
     tr = derive_series(transcripts(spark, n_convs=12, window_days=1))
-    series = mon.unionByName(tr.select(*mon.columns))
+    return mon.unionByName(tr.select(*mon.columns))
+
+
+@pytest.mark.parametrize(
+    "compressor,digest",
+    [
+        # batched cross-frame tournament (auto, speed 0)
+        ("auto", "af2b3329eeb75eba4f968671aee57d34eebe156f95987c6459a75446a5493aa4"),
+        # per-frame path (one fixed compressor)
+        ("fft", "04aa6def398da3442ffa2efa132be68646d10da4db8e952dce05436b0fb16374"),
+        # BLOCK_SCHEMA rows of the lossless fit
+        ("lossless", "6216b3559700910e50b49f499ca43eae27e3162ddfd8bdf03fb11b1408cbd8c0"),
+    ],
+)
+def test_fit_paths_frame_rows_pinned(fit_corpus, compressor, digest):
+    """Both lossy fit paths' FRAME_SCHEMA rows and the lossless fit's
+    BLOCK_SCHEMA rows, pinned: a sha256 over the sorted rows of
+    :func:`fit_corpus`."""
+    import hashlib
+
+    from atsc_spark.lossless import fit_lossless
+
+    if compressor == "lossless":
+        fitted = fit_lossless(fit_corpus)
+    else:
+        fitted = fit_frames(fit_corpus, 0.02, compressor)
     rows = sorted(
-        (tuple(r) for r in fit_frames(series, 0.02, compressor).collect()),
+        (tuple(r) for r in fitted.collect()),
         key=lambda t: (t[0], t[1], str(t[2]), t[3]),
     )
     sha = hashlib.sha256()
     for r in rows:
         sha.update(repr(tuple(bytes(x) if isinstance(x, bytearray) else x for x in r)).encode())
     assert sha.hexdigest() == digest
+
+
+def test_fits_run_one_arrow_stage(fit_corpus):
+    """``fit_frames`` and ``fit_lossless`` each run ONE mapInArrow fit
+    body: no pandas UDF in either physical plan."""
+    from atsc_spark.lossless import fit_lossless
+
+    for fitted in (fit_frames(fit_corpus), fit_lossless(fit_corpus)):
+        plan = fitted._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+
+
+def _frame_fit_slice(max_error=0.02):
+    from atsc_spark import frames as fr
+    from atsc_spark.core.frame import AUTO
+
+    compress = fr._compress_fn(AUTO, max_error, 0)
+    return lambda rb: fr._frame_batch(compress, rb)
+
+
+def _one_batch(df):
+    return df.toArrow().combine_chunks().to_batches()[0]
+
+
+def test_fit_batch_sample_budget(spark, fit_corpus, monkeypatch):
+    """With the fit's per-batch sample budget forced down, one batch of
+    groups fits in several slices to the same FRAME_SCHEMA and
+    BLOCK_SCHEMA rows."""
+    import pyarrow as pa
+
+    from atsc_spark import frames as fr
+    from atsc_spark.lossless import _block_batch
+
+    rb = _one_batch(fr.grouped_points(fit_corpus, 2))
+
+    def run(fit_slice):
+        return pa.Table.from_batches(list(fr.arrow_fit_fn(fit_slice)([rb])))
+
+    kernels = (_frame_fit_slice(), _block_batch)
+    whole = [run(k) for k in kernels]
+    monkeypatch.setattr(fr, "FIT_BATCH_SAMPLE_BUDGET", 5_000)
+    for kernel, want in zip(kernels, whole):
+        seen = []
+
+        def spy(s, kernel=kernel):
+            seen.append(s.num_rows)
+            return kernel(s)
+
+        got = run(spy)
+        assert len(seen) > 1 and sum(seen) == rb.num_rows
+        assert want.num_rows > 0 and got.equals(want)
+
+
+def test_fit_non_finite_groups_give_no_frames(spark):
+    """A series-day whose values are all NaN/+-inf fits to zero frames
+    next to normal groups; a batch whose every group is non-finite fits
+    to an empty batch of the FRAME_SCHEMA types, not an error."""
+    from datetime import datetime, timedelta
+
+    from atsc_spark import frames as fr
+
+    t0 = datetime(2024, 3, 1)
+    bad = [float("nan"), float("inf"), float("-inf")]
+    rows = [("ok", "m", t0 + timedelta(seconds=20 * i), float(i % 7)) for i in range(300)]
+    rows += [("bad", "m", t0 + timedelta(seconds=20 * i), bad[i % 3]) for i in range(300)]
+    series = spark.createDataFrame(rows, "conv_id string, metric string, bucket_ts timestamp, value double")
+    fitted = fit_frames(series, num_tasks=2).collect()
+    assert fitted and {r.conv_id for r in fitted} == {"ok"}
+    only_bad = series.filter("conv_id = 'bad'")
+    assert fit_frames(only_bad, num_tasks=2).collect() == []
+
+    fit_slice = _frame_fit_slice()
+    empty = fit_slice(_one_batch(fr.grouped_points(only_bad, 1)))
+    normal = fit_slice(_one_batch(fr.grouped_points(series.filter("conv_id = 'ok'"), 1)))
+    assert empty.num_rows == 0 and normal.num_rows > 0
+    assert empty.schema.names == fit_frames(series).columns
+    assert [f.type for f in empty.schema] == [f.type for f in normal.schema]

@@ -21,7 +21,7 @@ Default levels: 2 executors vs 8 executors, 1 core each.  Two reasons:
 The measured job is the engine's core workload (identical to
 scaling_bench.py): synthesize transcripts (fixed seed), derive
 per-conversation series, fit ATSC frames at 3% max-error, decode and count —
-the full shuffle + grouped_points/mapInPandas fit + mapInArrow decode path,
+the full shuffle + grouped_points/mapInArrow fit + mapInArrow decode path,
 identical input at both levels.  Protocol is also identical: input
 materialized and Python workers warmed outside the timed window (a cluster
 pays daemon-fork/import once per executor lifetime), best-of-3 passes inside

@@ -8,7 +8,7 @@ measurements are independent.
 
 The measured job is the engine's core workload: synthesize transcripts
 (fixed seed), derive per-conversation series, fit ATSC frames at 3%,
-decode and count — i.e. the full shuffle + grouped_points/mapInPandas
+decode and count — i.e. the full shuffle + grouped_points/mapInArrow
 fit + mapInArrow decode path.  Throughput metric: turns/sec.
 
 Usage:
