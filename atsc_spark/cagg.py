@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointLog
 from .retention import _POINT_TIERS, _epoch_range
-from .rollup import rollup, rollup_cascade_step
+from .rollup import ROLLUP_SCHEMA, rollup, rollup_cascade_step
 
 GRAINS: dict[str, str] = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
@@ -185,13 +185,11 @@ class ContinuousRollups:
     # ----------------------------------------------------------- read
 
     def read(self, grain: str) -> DataFrame | None:
-        """The materialized rollup table for ``grain`` ('1m'/'1h'/'1d')."""
+        """The materialized rollup table for ``grain`` ('1m'/'1h'/'1d');
+        None before its first refresh."""
         if grain not in GRAINS:
             raise ValueError(f"unknown grain {grain!r}; want one of {list(GRAINS)}")
-        try:
-            return self.spark.read.parquet(f"{self.base}/{grain}")
-        except Exception:
-            return None
+        return self.store._read_or_empty(f"_rollups/{grain}", ROLLUP_SCHEMA)
 
     def serve(
         self,

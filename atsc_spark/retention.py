@@ -32,6 +32,14 @@ of Spark jobs as one day.  Partition drops go through the Hadoop
 FileSystem API, so any object store with a Hadoop connector works (no
 local-FS ``shutil`` assumptions).
 
+Every tier write (raw rows, Gorilla blocks, frames, the 1h rollup) is
+clustered by ``day`` with the AQE ``rebalance`` hint after the fit, so
+only compressed rows cross that exchange and a tier-day is ONE file up
+to ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (a larger day
+splits at that size): the file count follows the bytes, not the
+cluster's task count.  Every tier opens with its declared schema
+(``_TIER_SCHEMA``), so opening one runs no schema-inference job.
+
 The store owns every tier decision the engine makes — which tier holds
 a day (:meth:`TieredStore.holders`), how a tier's rows become points
 (:meth:`TieredStore.tier_points`) and how a staged write is checked
@@ -58,15 +66,30 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .frames import compressed_rows, decode_compressed, fit_frames, prune_frames_to_range
-from .lossless import fit_lossless
-from .rollup import rollup
+from .frames import (
+    FRAME_SCHEMA,
+    compressed_rows,
+    decode_compressed,
+    fit_frames,
+    prune_frames_to_range,
+)
+from .lossless import BLOCK_SCHEMA, fit_lossless
+from .rollup import ROLLUP_SCHEMA, rollup
 
 _log = logging.getLogger(__name__)
 
 _TIER_ORDER = {"raw": 0, "tier0": 1, "tier1": 2, "tier2": 3, "rollup": 4}
 # tiers that hold points (rollup holds only aggregates), most faithful first
 _POINT_TIERS = tuple(t for t in sorted(_TIER_ORDER, key=_TIER_ORDER.get) if t != "rollup")
+# what each tier's writer puts on disk, ``day`` being the partition
+# column: opening a tier with it runs no schema-inference job
+_TIER_SCHEMA = {
+    "raw": "conv_id string, metric string, bucket_ts timestamp, value double, day date",
+    "tier0": BLOCK_SCHEMA,
+    "tier1": FRAME_SCHEMA,
+    "tier2": FRAME_SCHEMA,
+    "rollup": ROLLUP_SCHEMA,
+}
 
 
 class RetentionLockHeld(RuntimeError):
@@ -133,18 +156,32 @@ class TieredStore:
     # ------------------------------------------------------------ write
 
     def write_raw(self, series: DataFrame) -> None:
+        """Append the ``(conv_id, metric, bucket_ts, value)`` columns of
+        ``series`` to the raw tier, one ``day=`` directory per UTC day
+        (other columns are not kept: the tier opens with its declared
+        schema).  The rows are clustered by day first (AQE
+        ``rebalance``), so each call adds one file per day up to the
+        advisory partition size, however many partitions ``series``
+        has."""
         (
-            series.withColumn("day", F.to_date("bucket_ts"))
+            series.select("conv_id", "metric", "bucket_ts", "value")
+            .withColumn("day", F.to_date("bucket_ts"))
+            .hint("rebalance", "day")
             .write.mode("append")
             .partitionBy("day")
             .parquet(self.path("raw"))
         )
 
-    def _read_or_empty(self, name: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path(name))
-        except Exception:
-            return None
+    def _open(self, name: str, schema: str | None = None) -> DataFrame:
+        """The table at ``<base>/<name>`` read with its declared schema
+        (the tier's, when ``schema`` is not given)."""
+        return self.spark.read.schema(schema or _TIER_SCHEMA[name]).parquet(self.path(name))
+
+    def _read_or_empty(self, name: str, schema: str | None = None) -> DataFrame | None:
+        """:meth:`_open`, or None when the directory does not exist.
+        Any other error (permissions, a broken file system) raises."""
+        fs, root = self._fs(self.path(name))
+        return self._open(name, schema) if fs.exists(root) else None
 
     def tier_days(self, name: str) -> list[date]:
         """Days present in a tier — a FileSystem METADATA listing of the
@@ -490,8 +527,9 @@ class TieredStore:
         """Age every day partition in every tier to its policy tier.
 
         Returns [(day, tier)] transitions performed.  Grouped: all days
-        sharing a (source, target) pair are decoded + re-fitted in ONE
-        Spark job, staged under ``_staging/<target>``, validated there,
+        sharing a (source, target) pair are decoded, re-fitted and
+        written together, staged under ``_staging/<target>`` as one
+        file per day (up to the advisory partition size), validated there,
         then published per-day with an atomic FileSystem rename before
         the source partitions are dropped.
 
@@ -550,9 +588,7 @@ class TieredStore:
         for (source, target), days in sorted(plan.items()):
             self._heartbeat_lease()
             t_group = _time_mod.time()
-            src = self.spark.read.parquet(self.path(source)).filter(
-                F.col("day").isin(days)
-            )
+            src = self._open(source).filter(F.col("day").isin(days))
             series = self.tier_points({source: src})
 
             if target == "tier0":
@@ -566,15 +602,17 @@ class TieredStore:
                     "day", F.to_date("bucket_ts")
                 )
 
-            # fit all moved days into the staging area
+            # fit all moved days into the staging area, clustered by
+            # day after the fit: one exchange of compressed rows makes
+            # each staged day one file (a day above the advisory
+            # partition size splits at that size)
             staging = f"{self.path('_staging')}/{target}"
+            out = out.hint("rebalance", "day")
             if "span_start_s" in out.columns:
-                # cluster frame rows by time inside each task (no
-                # shuffle): per-day files then carry tight
-                # span_start_s/span_end_s row-group statistics, so a
-                # sub-day read's pushed span filter skips whole row
-                # groups; sorting by day first also minimizes the
-                # partitionBy writer's concurrently-open files
+                # order frame rows by time inside each file: per-day
+                # files then carry tight span_start_s/span_end_s
+                # row-group statistics, so a sub-day read's pushed span
+                # filter skips whole row groups
                 out = out.sortWithinPartitions("day", "span_start_s")
             # validate staged counts before touching target or source
             counts, src_counts = self._stage(out, staging, src=src)
@@ -784,9 +822,7 @@ class TieredStore:
                 return []
             fs.delete(self._jpath(self.path("_staging")), True)
             planned = {day: self._list_day_files(tier, day) for day in days}
-            src = self.spark.read.parquet(self.path(tier)).filter(
-                F.col("day").isin(days)
-            )
+            src = self._open(tier).filter(F.col("day").isin(days))
             staging = f"{self.path('_staging')}/{tier}"
             counts, src_counts = self._stage(
                 src.repartition(len(days), "day"), staging, src=src

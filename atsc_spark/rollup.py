@@ -26,6 +26,13 @@ KEYS = ["conv_id", "metric"]
 
 ROLLUP_COLS = ["cnt", "sum", "min", "max"]
 
+# a day-partitioned rollup table on disk: the 1h rollup tier and the
+# continuous-aggregate grain tables
+ROLLUP_SCHEMA = (
+    "conv_id string, metric string, bucket_ts timestamp, cnt long, "
+    "sum double, min double, max double, avg double, day date"
+)
+
 
 def rollup(series: DataFrame, interval: str = "1 minute") -> DataFrame:
     """Raw series -> rollup at `interval`:
