@@ -45,14 +45,17 @@ from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .checkpoint import CheckpointLog
+from .checkpoint import CheckpointLog, append_rows
 from .retention import _POINT_TIERS, _epoch_range
 from .rollup import ROLLUP_SCHEMA, rollup, rollup_cascade_step
 
 GRAINS: dict[str, str] = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
-_STATE_SCHEMA = "day string, fingerprint string, updated_at timestamp"
+_STATE_SCHEMA = (
+    StructType().add("day", "string").add("fingerprint", "string").add("updated_at", "timestamp")
+)
 
 
 class ContinuousRollups:
@@ -107,52 +110,12 @@ class ContinuousRollups:
         return {r["day"]: r["fingerprint"] for r in rows}
 
     def _record_fingerprints(self, fps: dict[date, str]) -> None:
-        """Append one small parquet file to the state log.  Written
-        DRIVER-SIDE with pyarrow (tmp file + atomic rename): the log
-        is a few dozen rows, and routing it through a Spark write job
-        cost 5.8 s of the measured 13 s one-day refresh floor (r7
-        profile) — pure job-scheduling overhead for a ~1 KB append.
-        Spark reads the file back fine (same parquet, explicit
-        schema).  Non-local stores (a real hdfs://-style URI) keep the
-        Spark writer — the atomic-rename trick is a local-FS
-        property."""
-        if not fps:
-            return
-        path = f"{self.base}/_state"
-        # driver-side pyarrow only when the path is local AND the
-        # session itself is local-mode: on a cluster a scheme-less path
-        # resolves against the session's default Hadoop FS, which need
-        # not be the driver's local filesystem
-        local_session = self.spark.sparkContext.master.startswith("local")
-        if ("://" in path and not path.startswith("file:")) or not local_session:
-            df = self.spark.createDataFrame(
-                [(d.isoformat(), fp) for d, fp in fps.items()],
-                "day string, fingerprint string",
-            ).withColumn("updated_at", F.current_timestamp())
-            df.coalesce(1).write.mode("append").parquet(path)
-            return
-        import os
-        import uuid
-        from datetime import datetime, timezone
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        local = path[7:] if path.startswith("file://") else path
-        os.makedirs(local, exist_ok=True)
-        now = datetime.now(timezone.utc)
-        tbl = pa.table(
-            {
-                "day": pa.array([d.isoformat() for d in fps], pa.string()),
-                "fingerprint": pa.array(list(fps.values()), pa.string()),
-                "updated_at": pa.array(
-                    [now] * len(fps), pa.timestamp("us", tz="UTC")
-                ),
-            }
-        )
-        tmp = os.path.join(local, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(local, f"fp-{uuid.uuid4().hex}.parquet"))
+        """Append one small parquet file to the state log
+        (:func:`~atsc_spark.checkpoint.append_rows`: driver-side on a
+        local store, where a Spark write job cost 5.8 s of the measured
+        13 s one-day refresh floor for a ~1 KB append)."""
+        rows = [(d.isoformat(), fp, None) for d, fp in fps.items()]
+        append_rows(self.spark, f"{self.base}/_state", _STATE_SCHEMA, rows, "fp")
 
     def _dirty_map(self, by_tier: dict) -> dict[date, str]:
         """{dirty day: its CURRENT fingerprint} from a
@@ -258,11 +221,8 @@ class ContinuousRollups:
         duplicates for the next compaction.  Returns True if a
         compaction ran.  Called from :meth:`refresh` under the writer
         lease."""
-        fs, root = self.store._fs(f"{self.base}/_state")
-        try:
-            old_files = [s.getPath() for s in fs.listStatus(root) if s.isFile()]
-        except Exception:
-            return False
+        fs, _ = self.store._fs(self.base)
+        old_files = [s.getPath() for s in self.store._ls(f"{self.base}/_state") if s.isFile()]
         if len(old_files) <= max_files:
             return False
         latest = self.spark.createDataFrame(

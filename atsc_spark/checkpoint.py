@@ -84,70 +84,68 @@ class CheckpointLog:
         return (row.a or 0) + 1
 
     def record(self, rows: list[dict]) -> None:
-        """Append lineage rows.  Local stores write DRIVER-SIDE with
-        pyarrow (tmp + atomic rename; same r7 rationale as the cagg
-        fingerprint log — a Spark write job costs ~1 s of scheduling
-        overhead for a few-KB append, which at one append per stage
-        per refresh dominates the incremental-refresh floor).  Remote
-        URIs keep the Spark writer."""
-        if not rows:
-            return
-        norm = [
-            (
-                r["stage"],
-                r["partition_key"],
-                r.get("status", "done"),
-                int(r.get("rows_in", 0)),
-                int(r.get("rows_out", 0)),
-                int(r.get("bytes_out", 0)),
-                float(r["max_err"]) if r.get("max_err") is not None else None,
-                int(r.get("wall_ms", 0)),
-                int(r.get("attempt", 1)),
-                r.get("updated_at"),
-            )
-            for r in rows
-        ]
-        # same gate as cagg._record_fingerprints: driver-side pyarrow
-        # needs BOTH a local path and a local-mode session (elsewhere a
-        # scheme-less path resolves against the session's Hadoop FS)
-        local_session = self.spark.sparkContext.master.startswith("local")
-        if ("://" in self.path and not self.path.startswith("file:")) or not local_session:
-            df = self.spark.createDataFrame(norm, LINEAGE_SCHEMA).withColumn(
-                "updated_at", F.coalesce("updated_at", F.current_timestamp())
-            )
-            df.write.mode("append").parquet(self.path)
-            return
-        import os
-        import uuid
-        from datetime import datetime, timezone
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        now = datetime.now(timezone.utc)
-        local = self.path[7:] if self.path.startswith("file://") else self.path
-        os.makedirs(local, exist_ok=True)
-        cols = list(zip(*norm))
-        tbl = pa.table(
-            {
-                "stage": pa.array(cols[0], pa.string()),
-                "partition_key": pa.array(cols[1], pa.string()),
-                "status": pa.array(cols[2], pa.string()),
-                "rows_in": pa.array(cols[3], pa.int64()),
-                "rows_out": pa.array(cols[4], pa.int64()),
-                "bytes_out": pa.array(cols[5], pa.int64()),
-                "max_err": pa.array(cols[6], pa.float64()),
-                "wall_ms": pa.array(cols[7], pa.int64()),
-                "attempt": pa.array(cols[8], pa.int32()),
-                "updated_at": pa.array(
-                    [u if u is not None else now for u in cols[9]],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-            }
+        """Append lineage rows (:func:`append_rows`)."""
+        append_rows(
+            self.spark,
+            self.path,
+            LINEAGE_SCHEMA,
+            [
+                (
+                    r["stage"],
+                    r["partition_key"],
+                    r.get("status", "done"),
+                    int(r.get("rows_in", 0)),
+                    int(r.get("rows_out", 0)),
+                    int(r.get("bytes_out", 0)),
+                    float(r["max_err"]) if r.get("max_err") is not None else None,
+                    int(r.get("wall_ms", 0)),
+                    int(r.get("attempt", 1)),
+                    r.get("updated_at"),
+                )
+                for r in rows
+            ],
+            "lin",
         )
-        tmp = os.path.join(local, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, os.path.join(local, f"lin-{uuid.uuid4().hex}.parquet"))
+
+
+def append_rows(
+    spark: SparkSession, path: str, schema: StructType, rows: list[tuple], prefix: str
+) -> None:
+    """Append ``rows`` (tuples in ``schema`` order; a None
+    ``updated_at`` becomes now) to the small parquet table at ``path``
+    as one file.  A local path in a local-mode session is written
+    DRIVER-SIDE with pyarrow (tmp file + atomic ``os.replace``, named
+    ``<prefix>-<uuid>.parquet``): a Spark write job costs ~1 s of
+    scheduling for a few-KB append, which at one append per stage per
+    refresh dominated the incremental-refresh floor.  Elsewhere a
+    scheme-less path resolves against the session's default Hadoop FS,
+    which need not be the driver's disk, so the Spark writer appends."""
+    if not rows:
+        return
+    local_session = spark.sparkContext.master.startswith("local")
+    if ("://" in path and not path.startswith("file:")) or not local_session:
+        df = spark.createDataFrame(rows, schema).withColumn(
+            "updated_at", F.coalesce("updated_at", F.current_timestamp())
+        )
+        df.coalesce(1).write.mode("append").parquet(path)
+        return
+    import os
+    import uuid
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    now, i = datetime.now(timezone.utc), schema.names.index("updated_at")
+    rows = [r[:i] + (r[i] or now,) + r[i + 1 :] for r in rows]
+    local = path[7:] if path.startswith("file://") else path
+    os.makedirs(local, exist_ok=True)
+    arrow = to_arrow_schema(schema)
+    tbl = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)], schema=arrow)
+    tmp = os.path.join(local, f".tmp-{uuid.uuid4().hex}.parquet")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(local, f"{prefix}-{uuid.uuid4().hex}.parquet"))
 
 
 def run_stage(

@@ -24,8 +24,9 @@ source partitions.  A crash at any point leaves *both* copies, never
 neither, readers never observe a partially-written target partition,
 and the next pass re-stages idempotently and finishes the drop).
 
-Scale shape: per (source_tier -> target_tier) pair, not per day, one
-fit/write whose output is ``partitionBy("day")`` plus one count action
+Scale shape: per target tier, not per day and not per source, one
+decode of the days it receives (each from its own source tier), one
+fit/write whose output is ``partitionBy("day")`` and one count action
 that reads the staged files back and counts the source days with them
 (:meth:`TieredStore._stage`) — a year of aged days is the same handful
 of Spark jobs as one day.  Partition drops go through the Hadoop
@@ -38,10 +39,14 @@ only compressed rows cross that exchange and a tier-day is ONE file up
 to ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (a larger day
 splits at that size): the file count follows the bytes, not the
 cluster's task count.  Every tier opens with its declared schema
-(``_TIER_SCHEMA``), so opening one runs no schema-inference job.
+(``_TIER_SCHEMA``), so opening one runs no schema-inference job, and a
+point tier is only ever opened at the ``day=`` directories its listing
+names (:meth:`TieredStore._open_days`), so no read discovers
+partitions over a whole tier root.
 
 The store owns every tier decision the engine makes — which tier holds
-a day (:meth:`TieredStore.holders`), how a tier's rows become points
+a day (:meth:`TieredStore.holders`, read through
+:meth:`TieredStore._first_holder_rows`), how a tier's rows become points
 (:meth:`TieredStore.tier_points`) and how a staged write is checked
 (:meth:`TieredStore._stage`).  The retention pass, the reads and the
 continuous-aggregate refresh (:mod:`atsc_spark.cagg`) all go through
@@ -60,7 +65,7 @@ from __future__ import annotations
 import logging
 import time as _time_mod
 from dataclasses import dataclass, field
-from datetime import date, datetime, timezone
+from datetime import date, datetime, timedelta, timezone
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,8 +88,9 @@ _TIER_ORDER = {"raw": 0, "tier0": 1, "tier1": 2, "tier2": 3, "rollup": 4}
 _POINT_TIERS = tuple(t for t in sorted(_TIER_ORDER, key=_TIER_ORDER.get) if t != "rollup")
 # what each tier's writer puts on disk, ``day`` being the partition
 # column: opening a tier with it runs no schema-inference job
+_POINT_SCHEMA = "conv_id string, metric string, bucket_ts timestamp, value double"
 _TIER_SCHEMA = {
-    "raw": "conv_id string, metric string, bucket_ts timestamp, value double, day date",
+    "raw": f"{_POINT_SCHEMA}, day date",
     "tier0": BLOCK_SCHEMA,
     "tier1": FRAME_SCHEMA,
     "tier2": FRAME_SCHEMA,
@@ -121,6 +127,10 @@ def _epoch_range(t0, t1) -> tuple[int | None, int | None]:
     if hi_s is not None and isinstance(t1, date) and not isinstance(t1, datetime):
         hi_s += 86_400 - 1
     return lo_s, hi_s
+
+
+def _utc_day(s: int) -> date:
+    return date(1970, 1, 1) + timedelta(days=s // 86_400)
 
 
 @dataclass
@@ -174,7 +184,8 @@ class TieredStore:
 
     def _open(self, name: str, schema: str | None = None) -> DataFrame:
         """The table at ``<base>/<name>`` read with its declared schema
-        (the tier's, when ``schema`` is not given)."""
+        (the tier's, when ``schema`` is not given): the rollup tier and
+        the cagg grain tables.  Point tiers open with :meth:`_open_days`."""
         return self.spark.read.schema(schema or _TIER_SCHEMA[name]).parquet(self.path(name))
 
     def _read_or_empty(self, name: str, schema: str | None = None) -> DataFrame | None:
@@ -183,19 +194,36 @@ class TieredStore:
         fs, root = self._fs(self.path(name))
         return self._open(name, schema) if fs.exists(root) else None
 
+    def _open_days(self, tier: str, days) -> DataFrame:
+        """The rows of ``tier`` on ``days`` (non-empty, each a listed
+        ``day=`` directory), read with the tier's declared schema from
+        one path per day, ``basePath`` at the tier root so ``day``
+        stays a column.  Spark lists only those directories: no
+        partition discovery over the whole tier, and no listing job
+        below ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        days."""
+        root = self.path(tier)
+        return (
+            self.spark.read.schema(_TIER_SCHEMA[tier])
+            .option("basePath", root)
+            .parquet(*(f"{root}/day={d.isoformat()}" for d in sorted(days)))
+        )
+
+    def _ls(self, path: str) -> list:
+        """``listStatus`` of ``path``; empty when it does not exist.  Any
+        other error raises: a failing listing must not read as "no
+        days", which would drop a tier from reads and retention."""
+        fs, p = self._fs(path)
+        return list(fs.listStatus(p)) if fs.exists(p) else []
+
     def tier_days(self, name: str) -> list[date]:
         """Days present in a tier — a FileSystem METADATA listing of the
         ``day=...`` partition directories, not a parquet scan.  A
         ``select(day).distinct()`` would read every footer (and without
         partition pruning, every row group) of a year-scale tier on
         each retention pass."""
-        fs, root = self._fs(self.path(name))
-        try:
-            statuses = fs.listStatus(root)
-        except Exception:  # tier directory does not exist yet
-            return []
         days = []
-        for st in statuses:
+        for st in self._ls(self.path(name)):
             dirname = st.getPath().getName()
             if st.isDirectory() and dirname.startswith("day="):
                 try:
@@ -280,6 +308,15 @@ class TieredStore:
                 out.setdefault(day, []).append(tier)
         return out
 
+    def _first_holder_rows(self, days, holders: dict[date, list[str]]) -> dict[str, DataFrame]:
+        """``{tier: rows}`` of ``days``, each day opened in its first
+        (most faithful) holder only; days no tier holds are left out."""
+        by_tier: dict[str, list[date]] = {}
+        for day in days:
+            if day in holders:
+                by_tier.setdefault(holders[day][0], []).append(day)
+        return {tier: self._open_days(tier, ds) for tier, ds in by_tier.items()}
+
     def tier_points(
         self, parts: dict[str, DataFrame], span: tuple[int, int] | None = None
     ) -> DataFrame | None:
@@ -306,7 +343,8 @@ class TieredStore:
     def read_days(self, days: list[date], listing=None) -> DataFrame | None:
         """Points of the given days, each day read from its most
         faithful holder only (:meth:`holders`, from ``listing`` when
-        given); None when no tier holds readable rows for them.
+        given, opened at its ``day=`` directories by
+        :meth:`_first_holder_rows`); None when no tier holds them.
 
         Decoded tiers lose the partition column through the decoder, so
         rows are kept by ``to_date(bucket_ts)`` — the same expression
@@ -315,19 +353,12 @@ class TieredStore:
         reproduces the partition value exactly; a deployment that
         overrides the session TZ between write and read would
         mis-bucket boundary rows and must not do that."""
-        holders = self.holders(listing)
         # frame spans, widened by the same ±2 days as read_series
         span = (
             _epoch_s(min(days)) - 2 * 86_400,
             _epoch_s(max(days)) + 3 * 86_400,
         )
-        parts = {}
-        for tier in _POINT_TIERS:
-            isos = [d.isoformat() for d in days if d in holders and holders[d][0] == tier]
-            rows = self._read_or_empty(tier) if isos else None
-            if rows is not None:
-                parts[tier] = rows.filter(F.col("day").isin(isos))
-        points = self.tier_points(parts, span)
+        points = self.tier_points(self._first_holder_rows(days, self.holders(listing)), span)
         if points is None:
             return None
         return points.filter(F.to_date("bucket_ts").isin([d.isoformat() for d in days]))
@@ -478,7 +509,7 @@ class TieredStore:
 
     def _start_heartbeat(self, ttl_s: int):
         """Background daemon beating the lease every ttl/3 — a single
-        (source, target) fit job can legitimately run longer than the
+        target's fit job can legitimately run longer than the
         ttl at large tiers, and a live holder must never look crashed.
         Returns a stop callable."""
         import threading
@@ -526,12 +557,15 @@ class TieredStore:
     ) -> list[tuple[str, str]]:
         """Age every day partition in every tier to its policy tier.
 
-        Returns [(day, tier)] transitions performed.  Grouped: all days
-        sharing a (source, target) pair are decoded, re-fitted and
-        written together, staged under ``_staging/<target>`` as one
-        file per day (up to the advisory partition size), validated there,
-        then published per-day with an atomic FileSystem rename before
-        the source partitions are dropped.
+        Returns [(day, tier)] transitions performed.  Planned by target
+        tier: all days bound for one target are decoded together (ONE
+        :meth:`tier_points` over their source tiers, each day opened at
+        its ``day=`` directory in its own source), re-fitted and written
+        together, staged under ``_staging/<target>`` as one file per
+        day (up to the advisory partition size), validated there with
+        one count over the staged files and the source days, then
+        published per-day with an atomic FileSystem rename before the
+        source partitions are dropped.
 
         A crash mid-move can leave a day in two source tiers; days are
         deduped across sources keeping the most faithful (lowest-order)
@@ -573,11 +607,11 @@ class TieredStore:
         # each day moves from its most faithful holder; the lossier
         # crash-leftover copies are dropped with the move
         holders = self.holders()
-        plan: dict[tuple[str, str], list[date]] = {}
-        for day, (source, *_) in holders.items():
+        plan: dict[str, list[date]] = {}
+        for day, (source, *_) in sorted(holders.items()):
             target = self.policy.tier_for_age((today - day).days)
             if _TIER_ORDER[target] > _TIER_ORDER[source]:
-                plan.setdefault((source, target), []).append(day)
+                plan.setdefault(target, []).append(day)
         if not plan:
             return moves
 
@@ -585,11 +619,11 @@ class TieredStore:
 
         lineage = CheckpointLog(self.spark, self.path("_lineage"))
 
-        for (source, target), days in sorted(plan.items()):
+        for target, days in sorted(plan.items(), key=lambda kv: _TIER_ORDER[kv[0]]):
             self._heartbeat_lease()
             t_group = _time_mod.time()
-            src = self._open(source).filter(F.col("day").isin(days))
-            series = self.tier_points({source: src})
+            parts = self._first_holder_rows(days, holders)
+            series = self.tier_points(parts)
 
             if target == "tier0":
                 out = fit_lossless(series)
@@ -615,12 +649,14 @@ class TieredStore:
                 # filter skips whole row groups
                 out = out.sortWithinPartitions("day", "span_start_s")
             # validate staged counts before touching target or source
+            src = reduce(DataFrame.unionByName, [rows.select("day") for rows in parts.values()])
             counts, src_counts = self._stage(out, staging, src=src)
             lineage_rows = []
             # the group runs as ONE staged job; amortize its wall over
             # the days so SUM(wall_ms) over the log reads as real wall
             wall_ms = int((_time_mod.time() - t_group) * 1000) // max(len(days), 1)
             for day in days:
+                source = holders[day][0]
                 if counts.get(day, 0) == 0 and src_counts.get(day, 0) > 0:
                     raise RuntimeError(
                         f"retention: empty staged {target} output for {day}; "
@@ -653,15 +689,11 @@ class TieredStore:
     def _list_day_files(self, tier: str, day: date) -> set[tuple[str, int]]:
         """(name, length) of the data files in a day dir — the change
         detector for concurrent appends."""
-        fs, _ = self._fs(self.base)
         out = set()
-        try:
-            for st in fs.listStatus(self._jpath(f"{self.path(tier)}/day={day.isoformat()}")):
-                name = st.getPath().getName()
-                if st.isFile() and not name.startswith("_"):
-                    out.add((name, int(st.getLen())))
-        except Exception:
-            pass
+        for st in self._ls(f"{self.path(tier)}/day={day.isoformat()}"):
+            name = st.getPath().getName()
+            if st.isFile() and not name.startswith("_"):
+                out.add((name, int(st.getLen())))
         return out
 
     _FILESTATUS_RE = None  # compiled lazily; class attr so it's shared
@@ -743,11 +775,7 @@ class TieredStore:
         compaction and retention pass — a crash can never leave a day's
         only copy in a wipe-zone."""
         fs, root = self._fs(self.path("_compact_old"))
-        try:
-            tiers = fs.listStatus(root)
-        except Exception:
-            return
-        for tdir in tiers:
+        for tdir in self._ls(self.path("_compact_old")):
             tier = tdir.getPath().getName()
             for st in fs.listStatus(tdir.getPath()):
                 dirname = st.getPath().getName()
@@ -822,7 +850,7 @@ class TieredStore:
                 return []
             fs.delete(self._jpath(self.path("_staging")), True)
             planned = {day: self._list_day_files(tier, day) for day in days}
-            src = self._open(tier).filter(F.col("day").isin(days))
+            src = self._open_days(tier, days)
             staging = f"{self.path('_staging')}/{tier}"
             counts, src_counts = self._stage(
                 src.repartition(len(days), "day"), staging, src=src
@@ -873,11 +901,13 @@ class TieredStore:
         :class:`~datetime.datetime` or :class:`~datetime.date`), the
         read is pruned in three layers BEFORE any payload decode:
 
-        1. **day partition pruning** — ``day`` is the partition column,
-           so a foldable day-bounds filter makes Catalyst skip whole
-           partition directories at the parquet scan (widened ±2 days —
-           write/read session timezones can legally differ by up to
-           26 h, so ±1 could skip a boundary day);
+        1. **day directory selection** — the days come from the
+           :meth:`holders` listing, on the driver, and each tier opens
+           only the ``day=`` directories it serves
+           (:meth:`_first_holder_rows`), so no other directory is even
+           listed (widened ±2 days — write/read session timezones can
+           legally differ by up to 26 h, so ±1 could skip a boundary
+           day);
         2. **frame-level span pruning** (tier1/2) — the VSRI segment
            metadata gives every frame's min/max timestamp without
            touching the payload (:func:`atsc_spark.frames.prune_frames_to_range`);
@@ -911,24 +941,6 @@ class TieredStore:
                 df = df.filter(F.col("metric").isin(list(metrics)))
             return df
 
-        # ±2 days, not ±1: session timezones span UTC-12..UTC+14, so a
-        # store written in one TZ and read in another can skew a row's
-        # day partition by up to 26 h relative to the read session's
-        # to_date.  Two days covers the worst legal pair; the exact
-        # bucket_ts trim below makes the extra partition harmless.
-        def day_bound(df: DataFrame) -> DataFrame:
-            if lo_s is not None:
-                df = df.filter(
-                    F.col("day")
-                    >= F.date_sub(F.to_date(F.timestamp_seconds(F.lit(lo_s))), 2)
-                )
-            if hi_s is not None:
-                df = df.filter(
-                    F.col("day")
-                    <= F.date_add(F.to_date(F.timestamp_seconds(F.lit(hi_s))), 2)
-                )
-            return df
-
         span = None
         if lo_s is not None or hi_s is not None:
             span = (
@@ -936,22 +948,23 @@ class TieredStore:
                 hi_s if hi_s is not None else 2**62,
             )
         holders = self.holders()
-        parts: dict[str, DataFrame] = {}
-        for tier in _POINT_TIERS:
-            held = [d for d, h in holders.items() if tier in h]
-            rows = self._read_or_empty(tier) if held else None
-            if rows is None:
-                continue
-            rows = key_bound(day_bound(rows))
-            # a crash-leftover copy is served by its more faithful
-            # holder; the filter exists only while such a copy does
-            dup = [d.isoformat() for d in held if holders[d][0] != tier]
-            if dup:
-                rows = rows.filter(~F.col("day").isin(dup))
-            parts[tier] = rows
-        out = self.tier_points(parts, span)
-        if out is None:
+        if not holders:
             raise RuntimeError("empty store")
+        # ±2 days, not ±1: session timezones span UTC-12..UTC+14, so a
+        # store written in one TZ and read in another can skew a row's
+        # day partition by up to 26 h relative to its UTC day.  Two days
+        # covers the worst legal pair; the exact bucket_ts trim below
+        # makes the extra days harmless.
+        days = [
+            d
+            for d in holders
+            if (lo_s is None or d >= _utc_day(lo_s - 2 * 86_400))
+            and (hi_s is None or d <= _utc_day(hi_s + 2 * 86_400))
+        ]
+        parts = {t: key_bound(rows) for t, rows in self._first_holder_rows(days, holders).items()}
+        out = self.tier_points(parts, span)
+        if out is None:  # the store holds no day in the range
+            return self.spark.createDataFrame([], _POINT_SCHEMA)
         if lo_s is not None:  # the exact trim, once for every tier
             out = out.filter(F.col("bucket_ts") >= F.timestamp_seconds(F.lit(lo_s)))
         if hi_s is not None:

@@ -139,6 +139,36 @@ def test_checkpoint_resume(spark, series, tmp_path):
     assert (lineage.rows_in > 0).all() and (lineage.rows_out > 0).all()
 
 
+def test_append_rows_writers_read_back_identical(spark, tmp_path, monkeypatch):
+    """The driver-side pyarrow append and the Spark-writer append of
+    the same rows read back identical; a missing ``updated_at`` is
+    filled with the time of the append by both."""
+    from datetime import datetime, timezone
+
+    from atsc_spark.checkpoint import LINEAGE_SCHEMA, append_rows
+
+    at = datetime(2024, 5, 1, 12, 30, tzinfo=timezone.utc)
+    rows = [
+        ("retention:raw->tier0", "2024-01-01", "done", 10, 4, 0, None, 7, 1, at),
+        ("cagg:1m", "2024-01-02", "done", 0, 3, 128, 0.0125, 0, 2, None),
+    ]
+
+    def read(path):
+        got = spark.read.schema(LINEAGE_SCHEMA).parquet(path).orderBy("partition_key").collect()
+        return [tuple(r) for r in got]
+
+    floor = datetime.now().replace(microsecond=0)
+    append_rows(spark, str(tmp_path / "arrow"), LINEAGE_SCHEMA, rows, "lin")
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    append_rows(spark, str(tmp_path / "spark"), LINEAGE_SCHEMA, rows, "lin")
+    monkeypatch.undo()
+    arrow, spark_written = read(str(tmp_path / "arrow")), read(str(tmp_path / "spark"))
+    assert arrow[0] == spark_written[0]
+    assert arrow[0][-1] == at.astimezone().replace(tzinfo=None)
+    assert arrow[1][:-1] == spark_written[1][:-1] == rows[1][:-1]
+    assert min(arrow[1][-1], spark_written[1][-1]) >= floor
+
+
 def test_retention_tier_progression(spark, series, tmp_path):
     """Data already in tier0 keeps aging: a later pass re-fits it into
     tier1 (ADVICE: tiers must progress, not only raw)."""
@@ -305,6 +335,59 @@ def test_retention_dedupes_days_across_source_tiers(spark, series, tmp_path):
     with np.errstate(divide="ignore", invalid="ignore"):
         mape = np.nanmean(np.abs((g - o) / o))
     assert mape <= 0.01 + 1e-9
+
+
+def test_retention_plans_by_target_tier(spark, series, tmp_path, monkeypatch):
+    """A target receiving days from two source tiers (a late raw day
+    and tier0 days) decodes, fits and stages them together: one
+    ``_stage`` call, each day's lineage row naming its own source, and
+    the same points as moving each source in a pass of its own."""
+    import hashlib
+
+    days = sorted(r[0] for r in series.select(F.to_date("bucket_ts")).distinct().collect())
+    late = series.filter(F.to_date("bucket_ts") == F.lit(days[0]))
+    rest = series.filter(F.to_date("bucket_ts") > F.lit(days[0]))
+
+    def tier0_store(name):
+        store = TieredStore(spark, str(tmp_path / name), TierPolicy(0, 10000, 20000, 30000))
+        store.write_raw(rest)
+        assert store.retention_pass(date(2024, 3, 1))
+        store.policy = TierPolicy(0, 0, 20000, 30000)
+        return store
+
+    def digest(store):
+        rows = sorted(tuple(r) for r in store.read_series().selectExpr(
+            "conv_id", "metric", "CAST(bucket_ts AS LONG)", "value"
+        ).collect())
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    mixed = tier0_store("mixed")
+    mixed.write_raw(late)
+    staged = []
+    real_stage = TieredStore._stage
+
+    def spy(self, out, staging, *args, **kwargs):
+        staged.append(staging.rsplit("/", 1)[-1])
+        return real_stage(self, out, staging, *args, **kwargs)
+
+    monkeypatch.setattr(TieredStore, "_stage", spy)
+    moves = mixed.retention_pass(date(2024, 3, 2))
+    monkeypatch.undo()
+    assert sorted(moves) == [(d.isoformat(), "tier1") for d in days]
+    assert staged == ["tier1"]
+    log = CheckpointLog(spark, mixed.path("_lineage")).read().toPandas()
+    to_tier1 = log[log.stage.str.endswith("->tier1")]
+    assert dict(zip(to_tier1.partition_key, to_tier1.stage)) == {
+        days[0].isoformat(): "retention:raw->tier1",
+        **{d.isoformat(): "retention:tier0->tier1" for d in days[1:]},
+    }
+
+    apart = tier0_store("apart")
+    assert apart.retention_pass(date(2024, 3, 2))  # tier0 -> tier1
+    apart.write_raw(late)
+    assert apart.retention_pass(date(2024, 3, 2))  # raw -> tier1
+    assert digest(mixed) == digest(apart)
+    assert mixed.read_series().count() == series.count()
 
 
 def test_retention_crash_injection_every_step(spark, series, tmp_path):
@@ -482,18 +565,24 @@ def test_read_series_range_matches_full_read_filtered(spark, series, tier1_store
 
 
 def test_read_series_range_prunes_partitions_in_plan(spark, series, tier1_store):
-    """The day-bounds filter must reach the parquet scan as a
-    PartitionFilter (directory-level pruning), not a post-scan filter."""
+    """A time-bounded read opens only the ``day=`` directories within
+    ±2 days of the range: its days come from the holder listing, and
+    every file the plan reads lies under one of them."""
+    from datetime import timedelta
+
     lo = series.agg(F.min("bucket_ts")).collect()[0][0]
     t0 = int(lo.timestamp())
-    plan = _plan_of(tier1_store.read_series(t0, t0 + 3600))
-    scan_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan_lines, "scan shows no PartitionFilters"
-    assert any("day" in l and ">=" in l and "<=" in l for l in scan_lines), scan_lines
+    pruned = tier1_store.read_series(t0, t0 + 3600)
+    first = date(1970, 1, 1) + timedelta(days=t0 // 86_400)
+    window = {f"day={first + timedelta(days=k)}" for k in range(-2, 3)}
+    files = pruned.inputFiles()
+    assert files
+    assert {p.rstrip("/").rsplit("/", 2)[-2] for p in files} <= window, files
     # the pruned file-backed tier read stays shuffle-free end to end:
     # every pruning layer is a scan-stage filter, decode is mapInArrow
     import re
 
+    plan = _plan_of(pruned)
     assert not re.findall(r"^\(\d+\) Exchange", plan, re.M), "pruned read shuffled"
 
 

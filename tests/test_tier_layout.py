@@ -4,12 +4,16 @@
   rows had, and a day above the advisory partition size splits.
 - Every tier and cagg grain opens with its declared schema, which must
   equal what the writers put on disk; planning a read runs no job.
-- An error while opening a tier raises instead of reading as "tier
-  missing".
+- A point tier opens only the ``day=`` directories a read needs: a
+  one-day read of a 40-day store plans without a job and its input
+  files all lie within the ±2-day window.
+- An error while opening or listing a tier raises instead of reading
+  as "tier missing" or "no days"; a range the store holds no day of
+  reads as an empty frame.
 """
 
 import hashlib
-from datetime import timedelta
+from datetime import date, timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,3 +177,79 @@ def test_hot_day_splits_at_the_advisory_size(spark, tmp_path):
         assert _digest(store.read_series(), POINT_COLS) == want
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.fixture(scope="module")
+def raw_40_days(spark, tmp_path_factory):
+    """A raw store holding 40 days of two series, four samples each a day:
+    more ``day=`` directories than Spark lists without a job
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``, 32)."""
+    t0 = 1_704_067_200  # 2024-01-01
+    day, hour = (F.col("id") / 8).cast("long"), F.col("id") % 8
+    series = spark.range(0, 40 * 8, numPartitions=2).select(
+        F.concat(F.lit("c"), (F.col("id") % 2).cast("string")).alias("conv_id"),
+        F.lit("m").alias("metric"),
+        F.timestamp_seconds(F.lit(t0) + day * 86_400 + hour * 3600).alias("bucket_ts"),
+        F.col("id").cast("double").alias("value"),
+    )
+    store = TieredStore(spark, str(tmp_path_factory.mktemp("days40") / "store"))
+    store.write_raw(series)
+    assert len(store.tier_days("raw")) == 40
+    return store
+
+
+def test_one_day_read_opens_only_its_day_directories(spark, raw_40_days):
+    store = raw_40_days
+    day = date(2024, 1, 20)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-one-day", "plan a one-day read_series", False)
+    try:
+        df = store.read_series(day, day)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert list(sc.statusTracker().getJobIdsForGroup("plan-one-day")) == []
+    window = {f"day={day + timedelta(days=k)}" for k in range(-2, 3)}
+    opened = {p.rstrip("/").rsplit("/", 2)[-2] for p in df.inputFiles()}
+    assert opened == window, opened
+    assert df.count() == 8
+
+
+def test_a_range_without_days_reads_empty(spark, raw_40_days):
+    df = raw_40_days.read_series(date(2025, 1, 1), date(2025, 1, 2))
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("conv_id", "string"),
+        ("metric", "string"),
+        ("bucket_ts", "timestamp"),
+        ("value", "double"),
+    ]
+    assert df.count() == 0
+
+
+def test_a_listing_error_is_not_an_empty_tier(spark, raw_40_days, monkeypatch):
+    """A ``listStatus`` failure raises out of reads and retention: read
+    as "no days", it would drop the tier from both."""
+    real_fs = TieredStore._fs
+
+    class FailingList:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def listStatus(self, *args):
+            raise OSError("injected listStatus failure")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def failing_fs(self, path):
+        fs, p = real_fs(self, path)
+        return FailingList(fs), p
+
+    monkeypatch.setattr(TieredStore, "_fs", failing_fs)
+    with pytest.raises(OSError, match="injected listStatus failure"):
+        raw_40_days.read_series()
+    with pytest.raises(OSError, match="injected listStatus failure"):
+        raw_40_days.retention_pass(date(2024, 3, 1))
+    monkeypatch.undo()
+    fs, lock = raw_40_days._lock_path()
+    assert not fs.exists(lock)  # the failed pass released its lease
+    assert len(raw_40_days.tier_days("raw")) == 40
