@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .checkpoint import CheckpointLog, append_rows
-from .retention import _POINT_TIERS, _epoch_range
+from .retention import _POINT_TIERS, _epoch_range, _utc_day
 from .rollup import ROLLUP_SCHEMA, rollup, rollup_cascade_step
 
 GRAINS: dict[str, str] = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
@@ -97,13 +97,16 @@ class ContinuousRollups:
 
     def _recorded_fingerprints(self) -> dict[str, str]:
         """Latest recorded fingerprint per day (append-only log; last
-        write wins by updated_at)."""
-        try:
-            df = self.spark.read.schema(_STATE_SCHEMA).parquet(f"{self.base}/_state")
-        except Exception:
+        write wins by updated_at); empty before the first refresh.  Any
+        error but a missing log raises: read as "no log", it would mark
+        every day dirty."""
+        path = f"{self.base}/_state"
+        fs, root = self.store._fs(path)
+        if not fs.exists(root):  # no refresh recorded yet
             return {}
         rows = (
-            df.groupBy("day")
+            self.spark.read.schema(_STATE_SCHEMA).parquet(path)
+            .groupBy("day")
             .agg(F.max_by("fingerprint", "updated_at").alias("fingerprint"))
             .collect()
         )
@@ -166,7 +169,8 @@ class ContinuousRollups:
         pick the finest grain that keeps each series under
         ``max_points`` (same grain table as
         ``TieredStore.choose_resolution``), then read that rollup table
-        pruned by day partitions and trimmed to the bucket range — no
+        at its listed ``day=`` directories in range (no partition
+        discovery over the whole table), trimmed to the bucket range — no
         tier decode, no re-aggregation.  This is what the continuous
         aggregates exist for: the query cost is proportional to the
         OUTPUT points, not the underlying raw data.
@@ -184,27 +188,28 @@ class ContinuousRollups:
         every grain it can return)."""
         lo_s, hi_s = _epoch_range(t0, t1)
         interval = self.store.choose_resolution(max(hi_s - lo_s, 1), max_points)
-        grain = _GRAIN_BY_INTERVAL.get(interval)
-        tbl = self.read(grain) if grain else None
-        if tbl is None:
+        name = f"_rollups/{_GRAIN_BY_INTERVAL[interval]}"
+        fs, root = self.store._fs(self.store.path(name))
+        if not fs.exists(root):
             return self.store.read_auto(
                 t0, t1, max_points, conv_ids=conv_ids, metrics=metrics
             )
-        # day partition pruning (±2-day TZ widening as in read_series),
-        # then the exact bucket trim
-        out = tbl.filter(
-            (F.col("day") >= F.date_sub(F.to_date(F.timestamp_seconds(F.lit(lo_s))), 2))
-            & (F.col("day") <= F.date_add(F.to_date(F.timestamp_seconds(F.lit(hi_s))), 2))
-            & (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(lo_s)))
+        cols = ("conv_id", "metric", "bucket_ts", "cnt", "sum", "min", "max", "avg")
+        # open only the listed day directories within ±2 days of the
+        # range (the TZ widening of read_series), then trim exactly
+        lo_day, hi_day = _utc_day(lo_s - 2 * 86_400), _utc_day(hi_s + 2 * 86_400)
+        days = [d for d in self.store.tier_days(name) if lo_day <= d <= hi_day]
+        if not days:
+            return self.spark.createDataFrame([], ROLLUP_SCHEMA).select(*cols)
+        out = self.store._open_days(name, days, ROLLUP_SCHEMA).filter(
+            (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(lo_s)))
             & (F.col("bucket_ts") <= F.timestamp_seconds(F.lit(hi_s)))
         )
         if conv_ids is not None:
             out = out.filter(F.col("conv_id").isin(list(conv_ids)))
         if metrics is not None:
             out = out.filter(F.col("metric").isin(list(metrics)))
-        return out.select(
-            "conv_id", "metric", "bucket_ts", "cnt", "sum", "min", "max", "avg"
-        )
+        return out.select(*cols)
 
     def compact_state(self, max_files: int = 64) -> bool:
         """The fingerprint state log appends one small file per refresh;

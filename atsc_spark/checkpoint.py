@@ -57,10 +57,13 @@ class CheckpointLog:
         self.path = path
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
-        except Exception:  # first run: no log yet
+        """The log; empty before its first record.  Any error but a
+        missing log raises: read as "no log yet", an unreadable log
+        would make :func:`run_stage` redo every key."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        if not path.getFileSystem(self.spark._jsc.hadoopConfiguration()).exists(path):
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
     def completed_keys(self, stage: str) -> DataFrame:
         return (

@@ -29,9 +29,12 @@ decode of the days it receives (each from its own source tier), one
 fit/write whose output is ``partitionBy("day")`` and one count action
 that reads the staged files back and counts the source days with them
 (:meth:`TieredStore._stage`) — a year of aged days is the same handful
-of Spark jobs as one day.  Partition drops go through the Hadoop
-FileSystem API, so any object store with a Hadoop connector works (no
-local-FS ``shutil`` assumptions).
+of Spark jobs as one day.  The targets of a pass share nothing until
+commit, so they stage concurrently, one driver thread per target (at
+most four), and their small jobs overlap on the cores; the commits
+then run one target at a time in tier order.  Partition drops go
+through the Hadoop FileSystem API, so any object store with a Hadoop
+connector works (no local-FS ``shutil`` assumptions).
 
 Every tier write (raw rows, Gorilla blocks, frames, the 1h rollup) is
 clustered by ``day`` with the AQE ``rebalance`` hint after the fit, so
@@ -64,10 +67,12 @@ from __future__ import annotations
 
 import logging
 import time as _time_mod
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta, timezone
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -184,8 +189,9 @@ class TieredStore:
 
     def _open(self, name: str, schema: str | None = None) -> DataFrame:
         """The table at ``<base>/<name>`` read with its declared schema
-        (the tier's, when ``schema`` is not given): the rollup tier and
-        the cagg grain tables.  Point tiers open with :meth:`_open_days`."""
+        (the tier's, when ``schema`` is not given): the whole rollup
+        tier and the cagg grain tables.  A read of some days opens them
+        with :meth:`_open_days`."""
         return self.spark.read.schema(schema or _TIER_SCHEMA[name]).parquet(self.path(name))
 
     def _read_or_empty(self, name: str, schema: str | None = None) -> DataFrame | None:
@@ -194,17 +200,18 @@ class TieredStore:
         fs, root = self._fs(self.path(name))
         return self._open(name, schema) if fs.exists(root) else None
 
-    def _open_days(self, tier: str, days) -> DataFrame:
-        """The rows of ``tier`` on ``days`` (non-empty, each a listed
-        ``day=`` directory), read with the tier's declared schema from
-        one path per day, ``basePath`` at the tier root so ``day``
-        stays a column.  Spark lists only those directories: no
-        partition discovery over the whole tier, and no listing job
+    def _open_days(self, name: str, days, schema: str | None = None) -> DataFrame:
+        """The rows of the day-partitioned table at ``<base>/<name>`` on
+        ``days`` (non-empty, each a listed ``day=`` directory), read
+        with its declared schema (the tier's, when ``schema`` is not
+        given) from one path per day, ``basePath`` at the table root so
+        ``day`` stays a column.  Spark lists only those directories: no
+        partition discovery over the whole table, and no listing job
         below ``spark.sql.sources.parallelPartitionDiscovery.threshold``
         days."""
-        root = self.path(tier)
+        root = self.path(name)
         return (
-            self.spark.read.schema(_TIER_SCHEMA[tier])
+            self.spark.read.schema(schema or _TIER_SCHEMA[name])
             .option("basePath", root)
             .parquet(*(f"{root}/day={d.isoformat()}" for d in sorted(days)))
         )
@@ -562,10 +569,22 @@ class TieredStore:
         :meth:`tier_points` over their source tiers, each day opened at
         its ``day=`` directory in its own source), re-fitted and written
         together, staged under ``_staging/<target>`` as one file per
-        day (up to the advisory partition size), validated there with
-        one count over the staged files and the source days, then
-        published per-day with an atomic FileSystem rename before the
-        source partitions are dropped.
+        day (up to the advisory partition size) and counted there with
+        one action over the staged files and the source days
+        (:meth:`_stage_target`).
+
+        The pass runs in two steps.  *Stage:* every target stages at
+        once, each on its own driver thread that inherits the caller's
+        Spark job group and tags; the pass waits for all of them.
+        *Commit:* only when every target staged, the targets commit one
+        after another in tier order — per day, a staged day that came
+        out empty for a non-empty source raises, otherwise it is
+        published with an atomic FileSystem rename before its source
+        partition is dropped.  So a target that fails to stage (a
+        failed decode, fit or write) raises out of the pass with
+        NOTHING committed, not even the targets ahead of it in tier
+        order: no target tier gains a day and every source day stays in
+        place.
 
         A crash mid-move can leave a day in two source tiers; days are
         deduped across sources keeping the most faithful (lowest-order)
@@ -579,8 +598,11 @@ class TieredStore:
         instead of double-staging and double-deleting the same days.
 
         Every committed move appends a lineage row (day, source→target,
-        rows in/out, wall) to ``<base>/_lineage`` — the north rule's
-        per-partition lineage + metrics.  Resumability itself is
+        rows in/out, wall) to ``<base>/_lineage`` after the last commit
+        — the north rule's per-partition lineage + metrics.  The rows
+        share the pass's wall from the start of staging to the last
+        commit, split evenly, so ``SUM(wall_ms)`` over one pass is its
+        real wall.  Resumability itself is
         FS-state-driven (the tier directories are the truth; a rerun
         re-stages only days still in a lower tier), so the log is an
         observability artifact, not a correctness dependency.
@@ -618,44 +640,31 @@ class TieredStore:
         from .checkpoint import CheckpointLog
 
         lineage = CheckpointLog(self.spark, self.path("_lineage"))
+        order = sorted(plan, key=_TIER_ORDER.get)
 
-        for target, days in sorted(plan.items(), key=lambda kv: _TIER_ORDER[kv[0]]):
-            self._heartbeat_lease()
-            t_group = _time_mod.time()
-            parts = self._first_holder_rows(days, holders)
-            series = self.tier_points(parts)
-
-            if target == "tier0":
-                out = fit_lossless(series)
-            elif target == "tier1":
-                out = fit_frames(series, max_error=self.policy.err_tier1)
-            elif target == "tier2":
-                out = fit_frames(series, max_error=self.policy.err_tier2)
-            else:  # rollup-only
-                out = rollup(series, "1 hour").withColumn(
-                    "day", F.to_date("bucket_ts")
+        # stage every target at once, one driver thread each: the
+        # targets share nothing before commit, so their jobs overlap
+        # on the cores.  Each thread inherits the caller's job group
+        # and tags (one wrap per target: each gets its own copy of the
+        # caller's local properties).  Leaving the block waits for
+        # every target; the first failure in tier order then raises
+        # before anything is committed.
+        t_pass = _time_mod.time()
+        with ThreadPoolExecutor(len(order), thread_name_prefix="retention-stage") as pool:
+            futures = {
+                target: pool.submit(
+                    inheritable_thread_target(self.spark)(self._stage_target),
+                    target, plan[target], holders,
                 )
+                for target in order
+            }
+        staged = {target: futures[target].result() for target in order}
 
-            # fit all moved days into the staging area, clustered by
-            # day after the fit: one exchange of compressed rows makes
-            # each staged day one file (a day above the advisory
-            # partition size splits at that size)
-            staging = f"{self.path('_staging')}/{target}"
-            out = out.hint("rebalance", "day")
-            if "span_start_s" in out.columns:
-                # order frame rows by time inside each file: per-day
-                # files then carry tight span_start_s/span_end_s
-                # row-group statistics, so a sub-day read's pushed span
-                # filter skips whole row groups
-                out = out.sortWithinPartitions("day", "span_start_s")
-            # validate staged counts before touching target or source
-            src = reduce(DataFrame.unionByName, [rows.select("day") for rows in parts.values()])
-            counts, src_counts = self._stage(out, staging, src=src)
-            lineage_rows = []
-            # the group runs as ONE staged job; amortize its wall over
-            # the days so SUM(wall_ms) over the log reads as real wall
-            wall_ms = int((_time_mod.time() - t_group) * 1000) // max(len(days), 1)
-            for day in days:
+        lineage_rows = []
+        for target in order:
+            self._heartbeat_lease()
+            staging, counts, src_counts = staged[target]
+            for day in plan[target]:
                 source = holders[day][0]
                 if counts.get(day, 0) == 0 and src_counts.get(day, 0) > 0:
                     raise RuntimeError(
@@ -674,12 +683,52 @@ class TieredStore:
                         "partition_key": day.isoformat(),
                         "rows_in": src_counts.get(day, 0),
                         "rows_out": counts.get(day, 0),
-                        "wall_ms": wall_ms,
                     }
                 )
-            lineage.record(lineage_rows)
             fs.delete(self.spark._jvm.org.apache.hadoop.fs.Path(staging), True)
+        # the targets stage together: amortize the pass's wall (first
+        # stage to last commit) over its days, so SUM(wall_ms) over one
+        # pass reads as its real wall
+        wall_ms = int((_time_mod.time() - t_pass) * 1000) // len(lineage_rows)
+        lineage.record([{**row, "wall_ms": wall_ms} for row in lineage_rows])
         return moves
+
+    def _stage_target(
+        self, target: str, days: list[date], holders: dict[date, list[str]]
+    ) -> tuple[str, dict, dict]:
+        """Decode ``days`` (each from its first holder), fit them for
+        ``target`` and stage the result under ``_staging/<target>``;
+        returns the staging path and :meth:`_stage`'s staged and source
+        counts per day.  Touches nothing outside its staging directory,
+        so the targets of a pass stage concurrently."""
+        parts = self._first_holder_rows(days, holders)
+        series = self.tier_points(parts)
+
+        if target == "tier0":
+            out = fit_lossless(series)
+        elif target == "tier1":
+            out = fit_frames(series, max_error=self.policy.err_tier1)
+        elif target == "tier2":
+            out = fit_frames(series, max_error=self.policy.err_tier2)
+        else:  # rollup-only
+            out = rollup(series, "1 hour").withColumn("day", F.to_date("bucket_ts"))
+
+        # fit all moved days into the staging area, clustered by day
+        # after the fit: one exchange of compressed rows makes each
+        # staged day one file (a day above the advisory partition size
+        # splits at that size)
+        staging = f"{self.path('_staging')}/{target}"
+        out = out.hint("rebalance", "day")
+        if "span_start_s" in out.columns:
+            # order frame rows by time inside each file: per-day files
+            # then carry tight span_start_s/span_end_s row-group
+            # statistics, so a sub-day read's pushed span filter skips
+            # whole row groups
+            out = out.sortWithinPartitions("day", "span_start_s")
+        # count the staged files and the source days in one action
+        src = reduce(DataFrame.unionByName, [rows.select("day") for rows in parts.values()])
+        counts, src_counts = self._stage(out, staging, src=src)
+        return staging, counts, src_counts
 
     # ------------------------------------------------------- compaction
 

@@ -623,3 +623,50 @@ def test_refresh_source_read_agrees_with_read_series(spark, cagg_series, aged_st
         per_day(store.read_days(days, cagg._bulk_listing())), want
     )
     pd.testing.assert_frame_equal(per_day(store.read_series()), want)
+
+
+def test_a_log_read_error_is_not_a_missing_log(spark, cagg_series, tmp_path, monkeypatch):
+    """The state log and the lineage log read as "no log yet" only when
+    their directory is missing, which a fresh store's first refresh and
+    a first stage find without opening a missing path.  Any other read
+    error raises: read as "no log", an unreadable state log would mark
+    every day dirty and an unreadable lineage log would redo every
+    key."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from atsc_spark.checkpoint import CheckpointLog, run_stage
+
+    store = TieredStore(
+        spark, str(tmp_path / "caggerr"), TierPolicy(10000, 20000, 30000, 40000)
+    )
+    store.write_raw(cagg_series)
+    cagg = ContinuousRollups(spark, store)
+    log = CheckpointLog(spark, str(tmp_path / "stage_lineage"))
+
+    missing_opens = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **kwargs):
+        missing_opens.extend(p for p in paths if not store._fs(p)[0].exists(store._jpath(p)))
+        return real_parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    assert cagg.refresh()
+    run_stage(
+        log, "count", cagg_series, F.col("metric"),
+        lambda df: df.groupBy("partition_key").count(), str(tmp_path / "stage_out"),
+    )
+    monkeypatch.undo()
+    assert missing_opens == []
+    assert cagg.dirty_days() == []
+
+    def broken_open(self, *paths, **kwargs):
+        raise OSError("injected log read failure")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", broken_open)
+    with pytest.raises(OSError, match="injected log read failure"):
+        cagg.dirty_days()
+    with pytest.raises(OSError, match="injected log read failure"):
+        cagg.lineage.read()
+    with pytest.raises(OSError, match="injected log read failure"):
+        log.completed_keys("count")

@@ -1,5 +1,6 @@
 """Tiered retention + checkpoint/resume tests."""
 
+import time
 from datetime import date
 
 import numpy as np
@@ -390,6 +391,58 @@ def test_retention_plans_by_target_tier(spark, series, tmp_path, monkeypatch):
     assert mixed.read_series().count() == series.count()
 
 
+def test_failing_target_commits_nothing(spark, series, tmp_path, monkeypatch):
+    """The targets of a pass stage together and commit only when all of
+    them staged: a target whose fit raises (the last in tier order,
+    after the tier0 and tier1 targets staged) fails the pass with no
+    target tier gaining a day and every source day in place, the lease
+    released, and a clean rerun ends where an uninterrupted pass does."""
+    import hashlib
+    from datetime import timedelta
+
+    from atsc_spark import retention
+
+    def digest(store):
+        rows = sorted(tuple(r) for r in store.read_series().selectExpr(
+            "conv_id", "metric", "CAST(bucket_ts AS LONG)", "value"
+        ).collect())
+        return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+    def raw_store(name):
+        store = TieredStore(spark, str(tmp_path / name), TierPolicy(1, 2, 3, 4))
+        store.write_raw(series)
+        return store
+
+    store = raw_store("failing")
+    raw_days = store.tier_days("raw")
+    today = raw_days[-1] + timedelta(days=1)
+
+    real_fit = retention.fit_frames
+
+    def failing_fit(series, max_error, **kwargs):
+        if max_error == store.policy.err_tier2:  # the last target in tier order
+            raise RuntimeError("injected tier2 fit failure")
+        return real_fit(series, max_error=max_error, **kwargs)
+
+    monkeypatch.setattr(retention, "fit_frames", failing_fit)
+    with pytest.raises(RuntimeError, match="injected tier2 fit failure"):
+        store.retention_pass(today)
+    monkeypatch.undo()
+    assert store.tier_days("raw") == raw_days
+    for tier in ("tier0", "tier1", "tier2", "rollup"):
+        assert store.tier_days(tier) == [], tier
+    fs, lock = store._lock_path()
+    assert not fs.exists(lock)
+    assert not fs.exists(store._jpath(store.path("_lineage")))
+
+    moves = store.retention_pass(today)
+    assert sorted(t for _, t in moves) == ["tier0", "tier1", "tier2"]
+    assert store.tier_days("raw") == []
+    clean = raw_store("clean")
+    assert sorted(clean.retention_pass(today)) == sorted(moves)
+    assert digest(store) == digest(clean)
+
+
 def test_retention_crash_injection_every_step(spark, series, tmp_path):
     """Staged-commit crash matrix: kill the pass (a) after staging but
     before any commit, (b) after commit but before the source drop.
@@ -449,21 +502,41 @@ def test_retention_pass_job_budget(spark, series, tmp_path, monkeypatch):
     action over the staged files and the source days, so a three-move
     pass has a fixed job budget (24 jobs when each move re-read and
     counted both sides in four jobs); compaction counts with one
-    action too."""
+    action too.  The targets stage on their own threads, and every job
+    they run stays in the caller's job group: a job outside it would
+    escape the budget."""
+    import warnings
     from datetime import timedelta
+
+    from atsc_spark import retention
 
     store = TieredStore(spark, str(tmp_path / "budget"), TierPolicy(1, 2, 3, 4))
     store.write_raw(series)
     today = store.tier_days("raw")[-1] + timedelta(days=1)
+    wrapped = []
+    real_wrap = retention.inheritable_thread_target
+
+    def spy_wrap(session):
+        wrapped.append(session)
+        return real_wrap(session)
+
+    monkeypatch.setattr(retention, "inheritable_thread_target", spy_wrap)
     sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup("retention-job-budget", "one retention pass", False)
     try:
-        moves = store.retention_pass(today)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            moves = store.retention_pass(today)
     finally:
         sc.setJobGroup("", "", False)
+    monkeypatch.undo()
     assert sorted(t for _, t in moves) == ["tier0", "tier1", "tier2"]
     jobs = sc.statusTracker().getJobIdsForGroup("retention-job-budget")
     assert len(jobs) <= 15, len(jobs)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
+    assert wrapped == [spark] * 3  # one wrap per target, with the session
+    assert not [w for w in caught if "Spark session is not provided" in str(w.message)]
     assert store.read_series().count() == series.count()
 
     compact = TieredStore(spark, str(tmp_path / "budget_compact"), store.policy)
@@ -856,11 +929,16 @@ def test_retention_writes_lineage_rows(spark, series, tmp_path):
         TierPolicy(t0_days=0, t1_days=10000, t2_days=20000, t3_days=30000),
     )
     store.write_raw(series)
+    t0 = time.perf_counter()
     moves = store.retention_pass(date(2024, 3, 1))
+    wall_ms = (time.perf_counter() - t0) * 1000
     assert moves
     log = CheckpointLog(spark, store.path("_lineage")).read().toPandas()
     assert len(log) == len(moves)
     assert set(log.stage) == {"retention:raw->tier0"}
+    # the pass's wall is split over its days: the rows sum to no more
+    # than the measured wall of the call
+    assert 0 < log.wall_ms.sum() <= wall_ms
     assert sorted(log.partition_key) == sorted(d for d, _ in moves)
     assert (log.rows_in > 0).all() and (log.rows_out > 0).all()
     assert (log.status == "done").all()

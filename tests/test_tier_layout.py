@@ -214,6 +214,33 @@ def test_one_day_read_opens_only_its_day_directories(spark, raw_40_days):
     assert df.count() == 8
 
 
+def test_one_day_serve_opens_only_its_day_directories(spark, raw_40_days):
+    """A one-day ``serve`` over a grain table of 40 refreshed days plans
+    without a job, opens only the in-window ``day=`` directories, and
+    returns the grain table's buckets in the range."""
+    store = raw_40_days
+    cagg = ContinuousRollups(spark, store)
+    if cagg.read("1m") is None:
+        cagg.refresh()
+    assert len(store.tier_days("_rollups/1m")) == 40
+    day = date(2024, 1, 20)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-one-day-serve", "plan a one-day serve", False)
+    try:
+        df = cagg.serve(day, day)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert list(sc.statusTracker().getJobIdsForGroup("plan-one-day-serve")) == []
+    window = {f"day={day + timedelta(days=k)}" for k in range(-2, 3)}
+    opened = {p.rstrip("/").rsplit("/", 2)[-2] for p in df.inputFiles()}
+    assert opened == window, opened
+    cols = ("conv_id", "metric", "CAST(bucket_ts AS LONG)", "cnt", "sum", "min", "max", "avg")
+    want = cagg.read("1m").filter(F.to_date("bucket_ts") == F.lit(day))
+    assert want.count() == 8
+    assert _digest(df, cols) == _digest(want, cols)
+    assert cagg.serve(date(2025, 1, 1), date(2025, 1, 2)).count() == 0
+
+
 def test_a_range_without_days_reads_empty(spark, raw_40_days):
     df = raw_40_days.read_series(date(2025, 1, 1), date(2025, 1, 2))
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
