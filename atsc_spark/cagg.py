@@ -12,24 +12,38 @@ changed.
 
 Change detection is a per-day FILE-SET FINGERPRINT (tier, file name,
 file length — pure FileSystem metadata, no data scan) across the
-raw/tier0/tier1/tier2 tiers, recorded in an append-only state log next
-to the rollups.  A day is dirty when its current fingerprint differs
-from the last recorded one — this catches streaming appends,
-compaction rewrites, and retention tier moves alike, without trusting
-any writer to report what it touched.
+raw/tier0/tier1/tier2 tiers.  A day is dirty when its current
+fingerprint differs from the last recorded one — this catches
+streaming appends, compaction rewrites, and retention tier moves
+alike, without trusting any writer to report what it touched.
+
+The recorded fingerprints live in ONE JSON file, read and written on
+the driver: ``_rollups/_state.json`` (``{day iso: fingerprint}``,
+``EMPTY`` entries included).  A refresh writes the merged map to a temp file and renames
+it over the state file (``FileContext.rename`` with ``OVERWRITE``, one
+atomic replace on HDFS and POSIX), so a lease-free ``dirty_days`` sees
+the old map or the new one, never a partial or missing file.  A
+missing file means no refresh was recorded; any other read error, an
+unparseable file included, raises.  The parquet state log of older
+stores (``_rollups/_state/``) is ignored: their first refresh
+recomputes every day once.
 
 Refresh shape (scale notes):
 
+- one bulk listing of the point tiers serves the fingerprints and the
+  source read, and the state file is read once;
 - only dirty day partitions are READ, each from its most faithful
   tier, through the store's own reader (``TieredStore.read_days``);
 - the cascade re-aggregates the next-finer grain (1h from the fresh
-  1m, 1d from the fresh 1h) — one shuffle per grain over already
-  day-bounded data, mirroring ``rollup_cascade``;
-- each grain's day partitions are staged and published with the same
-  atomic rename commit the retention pass uses, so readers never see a
+  1m, 1d from the fresh 1h); the three grains are staged by ONE Spark
+  write partitioned by (grain, day);
+- each grain's day partitions are published with the same atomic
+  rename commit the retention pass uses, so readers never see a
   half-refreshed day;
 - per-(grain, day) lineage rows (rows in/out, wall) go to the shared
-  CheckpointLog schema — the north rule's per-partition lineage.
+  CheckpointLog schema — the north rule's per-partition lineage;
+- the state file is replaced last, so a refresh that dies before it
+  leaves its days dirty and the next refresh redoes them.
 
 Days aged all the way to the rollup-only retention tier have no
 points left to re-aggregate; their materialized rollups are KEPT (the
@@ -40,33 +54,41 @@ and the day is marked clean so it stops showing up as dirty.
 from __future__ import annotations
 
 import hashlib
+import json
 import time as _time_mod
 from datetime import date
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from .checkpoint import CheckpointLog, append_rows
+from .checkpoint import CheckpointLog
 from .retention import _POINT_TIERS, _epoch_range, _utc_day
 from .rollup import ROLLUP_SCHEMA, rollup, rollup_cascade_step
 
 GRAINS: dict[str, str] = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
-_STATE_SCHEMA = (
-    StructType().add("day", "string").add("fingerprint", "string").add("updated_at", "timestamp")
-)
-
 
 class ContinuousRollups:
     """Materialized 1m/1h/1d rollups over a :class:`TieredStore`,
-    refreshed incrementally per dirty day partition."""
+    refreshed incrementally per dirty day partition.
+
+    Everything it keeps lives under the store's ``ROOT`` directory:
+    the grain tables (``ROOT/<grain>``), the state file, the lineage
+    log and the refresh staging."""
+
+    ROOT = "_rollups"
 
     def __init__(self, spark: SparkSession, store) -> None:
         self.spark = spark
         self.store = store
-        self.base = store.path("_rollups")
+        self.base = store.path(self.ROOT)
+        self.state = f"{self.base}/_state.json"
         self.lineage = CheckpointLog(spark, f"{self.base}/_lineage")
+
+    def _table(self, grain: str) -> str:
+        """The store-relative name of ``grain``'s rollup table."""
+        return f"{self.ROOT}/{grain}"
 
     # ----------------------------------------------------- fingerprints
 
@@ -96,37 +118,39 @@ class ContinuousRollups:
         return {t: self.store._list_tier_files(t) for t in _POINT_TIERS}
 
     def _recorded_fingerprints(self) -> dict[str, str]:
-        """Latest recorded fingerprint per day (append-only log; last
-        write wins by updated_at); empty before the first refresh.  Any
-        error but a missing log raises: read as "no log", it would mark
-        every day dirty."""
-        path = f"{self.base}/_state"
-        fs, root = self.store._fs(path)
-        if not fs.exists(root):  # no refresh recorded yet
+        """The recorded ``{day iso: fingerprint}`` map; empty when the
+        state file is missing.  Any other error raises: read as
+        "nothing recorded", it would mark every day dirty."""
+        fs, path = self.store._fs(self.state)
+        if not fs.exists(path):  # no refresh recorded yet
             return {}
-        rows = (
-            self.spark.read.schema(_STATE_SCHEMA).parquet(path)
-            .groupBy("day")
-            .agg(F.max_by("fingerprint", "updated_at").alias("fingerprint"))
-            .collect()
-        )
-        return {r["day"]: r["fingerprint"] for r in rows}
+        stream = fs.open(path)
+        try:
+            data = bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+        recorded = json.loads(data)
+        if not isinstance(recorded, dict):
+            raise ValueError(f"cagg state {self.state} is not a day -> fingerprint map")
+        return recorded
 
-    def _record_fingerprints(self, fps: dict[date, str]) -> None:
-        """Append one small parquet file to the state log
-        (:func:`~atsc_spark.checkpoint.append_rows`: driver-side on a
-        local store, where a Spark write job cost 5.8 s of the measured
-        13 s one-day refresh floor for a ~1 KB append)."""
-        rows = [(d.isoformat(), fp, None) for d, fp in fps.items()]
-        append_rows(self.spark, f"{self.base}/_state", _STATE_SCHEMA, rows, "fp")
+    def _record_fingerprints(self, recorded: dict[str, str]) -> None:
+        """Write ``recorded`` to a temp file and :func:`_replace` the
+        state file with it.  Only the lease holder writes, so the temp
+        name is fixed and a crash's leftover is overwritten next time."""
+        fs, state = self.store._fs(self.state)
+        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.state}.tmp")
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(json.dumps(recorded, sort_keys=True).encode()))
+        finally:
+            out.close()
+        _replace(self.spark, fs, tmp, state)
 
-    def _dirty_map(self, by_tier: dict) -> dict[date, str]:
+    def _dirty_map(self, by_tier: dict, recorded: dict[str, str]) -> dict[date, str]:
         """{dirty day: its CURRENT fingerprint} from a
-        :meth:`_bulk_listing` — computed once so the refresh can record
-        exactly what it compared against (a second fingerprint pass
-        would double the per-day listStatus calls, thousands of
-        redundant object-store LISTs at year scale)."""
-        recorded = self._recorded_fingerprints()
+        :meth:`_bulk_listing` and the recorded map — computed once so
+        the refresh records exactly what it compared against."""
         seen: set[date] = set()
         for tier in _POINT_TIERS:
             seen.update(by_tier[tier])
@@ -146,7 +170,7 @@ class ContinuousRollups:
         """Days whose source file set changed since the last refresh
         (new days included; fully-aged-to-rollup days show as EMPTY and
         are handled by :meth:`refresh`)."""
-        return sorted(self._dirty_map(self._bulk_listing()))
+        return sorted(self._dirty_map(self._bulk_listing(), self._recorded_fingerprints()))
 
     # ----------------------------------------------------------- read
 
@@ -155,7 +179,7 @@ class ContinuousRollups:
         None before its first refresh."""
         if grain not in GRAINS:
             raise ValueError(f"unknown grain {grain!r}; want one of {list(GRAINS)}")
-        return self.store._read_or_empty(f"_rollups/{grain}", ROLLUP_SCHEMA)
+        return self.store._read_or_empty(self._table(grain), ROLLUP_SCHEMA)
 
     def serve(
         self,
@@ -188,7 +212,7 @@ class ContinuousRollups:
         every grain it can return)."""
         lo_s, hi_s = _epoch_range(t0, t1)
         interval = self.store.choose_resolution(max(hi_s - lo_s, 1), max_points)
-        name = f"_rollups/{_GRAIN_BY_INTERVAL[interval]}"
+        name = self._table(_GRAIN_BY_INTERVAL[interval])
         fs, root = self.store._fs(self.store.path(name))
         if not fs.exists(root):
             return self.store.read_auto(
@@ -211,52 +235,6 @@ class ContinuousRollups:
             out = out.filter(F.col("metric").isin(list(metrics)))
         return out.select(*cols)
 
-    def compact_state(self, max_files: int = 64) -> bool:
-        """The fingerprint state log appends one small file per refresh;
-        at one refresh per hour that is ~9k files/year of pure metadata
-        churn.  When the file count exceeds ``max_files``, write a
-        latest-per-day snapshot and move its files INTO the live log
-        dir (each move an atomic file rename), then delete the
-        pre-snapshot files.  The live dir is never absent or empty, so
-        a concurrent lease-free reader (``dirty_days`` from a
-        monitoring process) always sees a complete log: before the move
-        it reads the old files; between the move and the deletes it
-        reads old + snapshot, where latest-per-updated_at dedup yields
-        the same answer; a crash mid-delete just leaves harmless
-        duplicates for the next compaction.  Returns True if a
-        compaction ran.  Called from :meth:`refresh` under the writer
-        lease."""
-        fs, _ = self.store._fs(self.base)
-        old_files = [s.getPath() for s in self.store._ls(f"{self.base}/_state") if s.isFile()]
-        if len(old_files) <= max_files:
-            return False
-        latest = self.spark.createDataFrame(
-            [(iso, fp) for iso, fp in self._recorded_fingerprints().items()],
-            "day string, fingerprint string",
-        ).withColumn("updated_at", F.current_timestamp())
-        staged = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.base}/_state_new")
-        fs.delete(staged, True)
-        latest.coalesce(1).write.parquet(str(staged))
-        import uuid as _uuid
-
-        tag = _uuid.uuid4().hex[:8]
-        moved = False
-        for st in fs.listStatus(staged):
-            name = st.getPath().getName()
-            if st.isFile() and name.endswith(".parquet"):
-                dst = self.spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{self.base}/_state/compacted-{tag}-{name}"
-                )
-                if not fs.rename(st.getPath(), dst):
-                    raise RuntimeError(f"cagg state compaction: rename to {dst} failed")
-                moved = True
-        fs.delete(staged, True)
-        if not moved:
-            return False
-        for p in old_files:
-            fs.delete(p, False)
-        return True
-
     # -------------------------------------------------------- refresh
 
     def refresh(self, days: list[date] | None = None, lease_ttl_s: int = 1800) -> list[str]:
@@ -267,35 +245,15 @@ class ContinuousRollups:
         a retention pass mutating the same store must serialize — the
         fingerprints read here must not race a tier move's
         rename/delete)."""
-        holder = self.store._acquire_lease(lease_ttl_s)
-        stop_heartbeat = self.store._start_heartbeat(lease_ttl_s)
-        try:
+        with self.store._leased(lease_ttl_s):
             return self._refresh_locked(days)
-        finally:
-            stop_heartbeat()
-            self.store._release_lease(holder)
-
-    def _recover_state(self) -> None:
-        """Clean up after a crashed :meth:`compact_state`: drop any
-        orphaned ``_state_new`` staging (a crash before the move-in
-        leaves it; the live log is untouched).  Also restores a legacy
-        ``_state_old`` parking dir from the earlier dir-swap design,
-        should one exist on disk."""
-        fs, root = self.store._fs(f"{self.base}/_state")
-        old = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.base}/_state_old")
-        if not fs.exists(root) and fs.exists(old):
-            fs.rename(old, root)
-        fs.delete(old, True)
-        fs.delete(
-            self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.base}/_state_new"), True
-        )
 
     def _refresh_locked(self, days: list[date] | None) -> list[str]:
-        self._recover_state()
         # one listing serves the fingerprints and the source read
         by_tier = self._bulk_listing()
+        recorded = self._recorded_fingerprints()
         if days is None:
-            fps = self._dirty_map(by_tier)  # one fingerprint pass, reused below
+            fps = self._dirty_map(by_tier, recorded)  # one fingerprint pass, reused below
             days = sorted(fps)
         else:
             fps = {d: self._day_fingerprint(d, by_tier) for d in days}
@@ -317,40 +275,27 @@ class ContinuousRollups:
                     "readable tier data; fix or drop the partitions"
                 )
             isos = [d.isoformat() for d in compute]
-            fs, _ = self.store._fs(self.base)
-            lineage_rows = []
-            # ONE Spark write job for all three grains (VERDICT r7 #6;
-            # was one write + one count job per grain = 6 jobs whose
-            # scheduling overhead dominated the one-dirty-day floor):
-            # the grains are unioned under a `grain` partition column
-            # and written partitionBy(grain, day) in one action.  The
-            # 1m subplan feeds every branch and the 1h subplan two, and
-            # exchange reuse does NOT dedupe them: the day filter is
-            # pushed below the 1m aggregate in the 1m branch only, so
-            # the branches differ.  r1m is therefore persisted for the
-            # write — the source tiers (and any tier-0/1/2 frame
-            # decode) are scanned and the 1m aggregate runs once per
-            # refresh, not once per grain; the 1h aggregate over the
-            # cached 1m rows still runs twice.  Commit renames are
-            # unchanged: per (grain, day), same staged-rename protocol.
+            # ONE Spark write stages all three grains, partitioned by
+            # (grain, day).  r1m feeds every branch but the day filter
+            # sits below the 1m aggregate in the 1m branch only, so
+            # exchange reuse cannot share the branches: r1m is persisted
+            # so the source read (and any frame decode) and the 1m
+            # aggregate run once per refresh, not once per grain (the 1h
+            # aggregate over the cached 1m rows still runs twice).
             t_group = _time_mod.time()
             # re-attach the partition day from the bucket (buckets at
             # 1m/1h/1d granularity never straddle a UTC day boundary)
-            r1m = rollup(src, GRAINS["1m"]).withColumn(
-                "day", F.to_date("bucket_ts")
-            ).persist()
-            r1h = rollup_cascade_step(r1m.drop("day"), GRAINS["1h"]).withColumn(
-                "day", F.to_date("bucket_ts")
+            day = F.to_date("bucket_ts")
+            r1m = rollup(src, GRAINS["1m"]).withColumn("day", day).persist()
+            r1h = rollup_cascade_step(r1m.drop("day"), GRAINS["1h"]).withColumn("day", day)
+            r1d = rollup_cascade_step(r1h.drop("day"), GRAINS["1d"]).withColumn("day", day)
+            union = reduce(
+                DataFrame.unionByName,
+                (
+                    df.filter(F.col("day").isin(isos)).withColumn("grain", F.lit(grain))
+                    for grain, df in (("1m", r1m), ("1h", r1h), ("1d", r1d))
+                ),
             )
-            r1d = rollup_cascade_step(r1h.drop("day"), GRAINS["1d"]).withColumn(
-                "day", F.to_date("bucket_ts")
-            )
-            union = None
-            for grain, df in (("1m", r1m), ("1h", r1h), ("1d", r1d)):
-                part = df.filter(F.col("day").isin(isos)).withColumn(
-                    "grain", F.lit(grain)
-                )
-                union = part if union is None else union.unionByName(part)
             staging = f"{self.base}/_staging/all"
             try:
                 counts, _ = self.store._stage(
@@ -361,33 +306,45 @@ class ContinuousRollups:
                 )
             finally:
                 r1m.unpersist()
-            wall_ms = int((_time_mod.time() - t_group) * 1000) // max(
-                3 * len(compute), 1
-            )
-            for grain in ("1m", "1h", "1d"):
+            wall_ms = int((_time_mod.time() - t_group) * 1000) // (3 * len(compute))
+            for grain in GRAINS:
                 for d in compute:
-                    self._commit_rollup_partition(
-                        f"{staging}/grain={grain}", grain, d
-                    )
-                    lineage_rows.append(
-                        {
-                            "stage": f"cagg:{grain}",
-                            "partition_key": d.isoformat(),
-                            "rows_out": counts.get((grain, d), 0),
-                            "wall_ms": wall_ms,
-                        }
-                    )
-            fs.delete(self.spark._jvm.org.apache.hadoop.fs.Path(staging), True)
-            self.lineage.record(lineage_rows)
-        self._record_fingerprints(fps)
-        self.compact_state()
+                    self._commit_rollup_partition(f"{staging}/grain={grain}", grain, d)
+            fs, staged = self.store._fs(staging)
+            fs.delete(staged, True)
+            self.lineage.record(
+                [
+                    {
+                        "stage": f"cagg:{grain}",
+                        "partition_key": d.isoformat(),
+                        "rows_out": counts.get((grain, d), 0),
+                        "wall_ms": wall_ms,
+                    }
+                    for grain in GRAINS
+                    for d in compute
+                ]
+            )
+        self._record_fingerprints({**recorded, **{d.isoformat(): fp for d, fp in fps.items()}})
         return [d.isoformat() for d in days]
 
     def _commit_rollup_partition(self, staging: str, grain: str, day: date) -> None:
         # delegate to the store's staged-commit (raises on rename
         # failure — a swallowed failure here would leave the day's
         # rollup DELETED while the fingerprint marks it clean)
-        self.store._commit_partition(staging, f"_rollups/{grain}", day)
+        self.store._commit_partition(staging, self._table(grain), day)
 
 
 _GRAIN_BY_INTERVAL = {v: k for k, v in GRAINS.items()}
+
+
+def _replace(spark: SparkSession, fs, src, dst) -> None:
+    """Rename the file ``src`` over ``dst`` in one atomic replace: the
+    public ``FileContext.rename`` with ``Options.Rename.OVERWRITE``
+    (``FileSystem.rename`` refuses an existing target)."""
+    hfs = spark._jvm.org.apache.hadoop.fs
+    overwrite = spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+    overwrite[0] = hfs.Options.Rename.OVERWRITE
+    dst = fs.makeQualified(dst)
+    hfs.FileContext.getFileContext(dst.toUri(), spark._jsc.hadoopConfiguration()).rename(
+        fs.makeQualified(src), dst, overwrite
+    )

@@ -107,18 +107,15 @@ class CheckpointLog:
                 )
                 for r in rows
             ],
-            "lin",
         )
 
 
-def append_rows(
-    spark: SparkSession, path: str, schema: StructType, rows: list[tuple], prefix: str
-) -> None:
+def append_rows(spark: SparkSession, path: str, schema: StructType, rows: list[tuple]) -> None:
     """Append ``rows`` (tuples in ``schema`` order; a None
     ``updated_at`` becomes now) to the small parquet table at ``path``
     as one file.  A local path in a local-mode session is written
     DRIVER-SIDE with pyarrow (tmp file + atomic ``os.replace``, named
-    ``<prefix>-<uuid>.parquet``): a Spark write job costs ~1 s of
+    ``lin-<uuid>.parquet``): a Spark write job costs ~1 s of
     scheduling for a few-KB append, which at one append per stage per
     refresh dominated the incremental-refresh floor.  Elsewhere a
     scheme-less path resolves against the session's default Hadoop FS,
@@ -148,7 +145,7 @@ def append_rows(
     tbl = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)], schema=arrow)
     tmp = os.path.join(local, f".tmp-{uuid.uuid4().hex}.parquet")
     pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(local, f"{prefix}-{uuid.uuid4().hex}.parquet"))
+    os.replace(tmp, os.path.join(local, f"lin-{uuid.uuid4().hex}.parquet"))
 
 
 def run_stage(

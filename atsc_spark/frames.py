@@ -447,7 +447,7 @@ def _decode_batches(batches):
             yield _decode_slice(rb.slice(lo, hi - lo))
 
 
-def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None) -> DataFrame:
+def decode_granularity(sel: DataFrame, source: DataFrame) -> DataFrame:
     """Right-size decode task granularity for a compressed-rows input.
 
     A fit output carries the fit's partitioning (see
@@ -467,8 +467,6 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
       does NOT propagate a lower partition count back into the
       compute-dense fit stage.
     """
-    if num_tasks is not None:
-        return sel.coalesce(num_tasks)
     if len(source.inputFiles()) > 0:
         return sel
     # 1x parallelism (DECODE_TASK_FACTOR): at 32 cores a second task wave cost
@@ -499,9 +497,7 @@ def decode_granularity(sel: DataFrame, source: DataFrame, num_tasks: int | None)
     return sel.repartition(par)
 
 
-def decode_compressed(
-    view: DataFrame, source: DataFrame | None = None, num_tasks: int | None = None
-) -> DataFrame:
+def decode_compressed(view: DataFrame, source: DataFrame | None = None) -> DataFrame:
     """Compressed-row view (:func:`compressed_rows`, any mix of tiers)
     -> ``(conv_id, metric, bucket_ts, value)``: the one decoder of
     every compressed tier, one shuffle-free ``mapInArrow`` stage.
@@ -509,16 +505,16 @@ def decode_compressed(
     (`data.rs:104-109`, `csv-compressor/src/metric.rs:88-98`); Gorilla
     blocks are its lossless sibling.  Task granularity via
     :func:`decode_granularity` over ``source`` (default: ``view``)."""
-    sel = decode_granularity(view, view if source is None else source, num_tasks)
+    sel = decode_granularity(view, view if source is None else source)
     decoded = sel.mapInArrow(_decode_batches, DECODED_SCHEMA)
     return decoded.select(
         "conv_id", "metric", F.timestamp_seconds("epoch_s").alias("bucket_ts"), "value"
     )
 
 
-def decode_frames(frames: DataFrame, num_tasks: int | None = None) -> DataFrame:
+def decode_frames(frames: DataFrame) -> DataFrame:
     """frames table -> ``(conv_id, metric, bucket_ts, value)``, zero shuffle."""
-    return decode_compressed(compressed_rows(frames), frames, num_tasks)
+    return decode_compressed(compressed_rows(frames), frames)
 
 
 def frame_time_span(frames: DataFrame) -> DataFrame:

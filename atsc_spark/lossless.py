@@ -59,8 +59,8 @@ def fit_lossless(series: DataFrame, num_tasks: int | None = None) -> DataFrame:
     return grouped_points(series, num_tasks).mapInArrow(arrow_fit_fn(_block_batch), BLOCK_SCHEMA)
 
 
-def decode_lossless(blocks: DataFrame, num_tasks: int | None = None) -> DataFrame:
+def decode_lossless(blocks: DataFrame) -> DataFrame:
     """blocks -> (conv_id, metric, bucket_ts, value), shuffle-free,
     through the shared decoder (task granularity as in
     :func:`atsc_spark.frames.decode_granularity`)."""
-    return decode_compressed(compressed_rows(blocks), blocks, num_tasks)
+    return decode_compressed(compressed_rows(blocks), blocks)

@@ -2,7 +2,7 @@
 tiers, checkpointed and resumable.
 
 Run:
-    spark-submit --py-files atsc_spark.zip -m atsc_spark.pipeline \\
+    spark-submit --py-files atsc_spark.zip tools/submit_job.py \\
         --input <transcripts parquet/iceberg> --store <base dir>
 
 or locally:

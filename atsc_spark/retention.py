@@ -68,6 +68,7 @@ from __future__ import annotations
 import logging
 import time as _time_mod
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta, timezone
 from functools import reduce
@@ -514,28 +515,6 @@ class TieredStore:
             )
         return False
 
-    def _start_heartbeat(self, ttl_s: int):
-        """Background daemon beating the lease every ttl/3 — a single
-        target's fit job can legitimately run longer than the
-        ttl at large tiers, and a live holder must never look crashed.
-        Returns a stop callable."""
-        import threading
-
-        stop = threading.Event()
-
-        def beat():
-            while not stop.wait(max(ttl_s / 3.0, 1.0)):
-                self._heartbeat_lease()
-
-        t = threading.Thread(target=beat, name="retention-lease-heartbeat", daemon=True)
-        t.start()
-
-        def cancel():
-            stop.set()
-            t.join(timeout=5)
-
-        return cancel
-
     def _release_lease(self, holder: str | None = None) -> None:
         """Delete the lock — only if we still own it (a takeover may
         have replaced it; deleting the usurper's lock would admit a
@@ -556,6 +535,32 @@ class TieredStore:
         if holder is not None and self._read_lock_holder() != holder:
             return
         fs.delete(lock, False)
+
+    @contextmanager
+    def _leased(self, ttl_s: int):
+        """Hold the single-writer lease for the ``with`` block: acquire
+        it (:meth:`_acquire_lease`), beat it every ttl/3 from a daemon
+        thread (:meth:`_heartbeat_lease`; a single target's fit job can
+        legitimately run longer than the ttl at large tiers, and a live
+        holder must never look crashed), and release it however the
+        block ends."""
+        import threading
+
+        holder = self._acquire_lease(ttl_s)
+        stop = threading.Event()
+
+        def beat():
+            while not stop.wait(max(ttl_s / 3.0, 1.0)):
+                self._heartbeat_lease()
+
+        t = threading.Thread(target=beat, name="retention-lease-heartbeat", daemon=True)
+        t.start()
+        try:
+            yield
+        finally:
+            stop.set()
+            t.join(timeout=5)
+            self._release_lease(holder)
 
     # -------------------------------------------------------- retention
 
@@ -607,13 +612,8 @@ class TieredStore:
         re-stages only days still in a lower tier), so the log is an
         observability artifact, not a correctness dependency.
         """
-        holder = self._acquire_lease(lease_ttl_s)
-        stop_heartbeat = self._start_heartbeat(lease_ttl_s)
-        try:
+        with self._leased(lease_ttl_s):
             return self._retention_pass_locked(today)
-        finally:
-            stop_heartbeat()
-            self._release_lease(holder)
 
     def _retention_pass_locked(self, today: date) -> list[tuple[str, str]]:
         moves: list[tuple[str, str]] = []
@@ -887,9 +887,7 @@ class TieredStore:
         ):
             return []
 
-        holder = self._acquire_lease(lease_ttl_s)
-        stop_heartbeat = self._start_heartbeat(lease_ttl_s)
-        try:
+        with self._leased(lease_ttl_s):
             # recovery and everything after it mutate live/_compact_old/
             # _staging — single-writer territory, so only under the lease
             # (retention_pass likewise recovers inside its locked section)
@@ -928,9 +926,6 @@ class TieredStore:
                 done.append(iso)
             fs.delete(self._jpath(staging), True)
             return done
-        finally:
-            stop_heartbeat()
-            self._release_lease(holder)
 
     # ------------------------------------------------------------- read
 

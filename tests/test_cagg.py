@@ -172,11 +172,12 @@ def test_fully_aged_day_keeps_materialized_rollup(spark, cagg_series, tmp_path):
     assert cagg.refresh() == []  # and they are clean now
 
 
-def test_serve_from_materialized_tables(spark, cagg_series, tmp_path):
+def test_serve_from_materialized_tables(spark, cagg_series, tmp_path, monkeypatch):
     """serve() answers a dashboard read from the materialized rollup
     (no decode, no re-aggregation) and equals the on-the-fly
-    rollup(read_series(...)) on a bucket-aligned range; a native-grain
-    request falls back to the store's pruned read path."""
+    rollup(read_series(...)) on a bucket-aligned range; on a store
+    that was never refreshed it falls back to the store's pruned
+    ``read_auto`` path."""
     from datetime import datetime, timezone
 
     store = TieredStore(
@@ -213,47 +214,27 @@ def test_serve_from_materialized_tables(spark, cagg_series, tmp_path):
     )
     assert "cnt" in small.columns and small.count() > 0
 
-    # un-refreshed store (no materialized tables) -> read_auto fallback
-    fresh = ContinuousRollups(
-        spark,
-        TieredStore(
-            spark, str(tmp_path / "caggserve"), store.policy
-        ),
+    # un-refreshed store (no _rollups at all) -> read_auto fallback
+    fresh_store = TieredStore(spark, str(tmp_path / "caggserve_fresh"), store.policy)
+    fresh_store.write_raw(cagg_series)
+    auto_calls = []
+    real_read_auto = TieredStore.read_auto
+
+    def spy_read_auto(self, *args, **kwargs):
+        auto_calls.append(self.base)
+        return real_read_auto(self, *args, **kwargs)
+
+    monkeypatch.setattr(TieredStore, "read_auto", spy_read_auto)
+    fallback = ContinuousRollups(spark, fresh_store).serve(t0, t1, max_points=max_points)
+    monkeypatch.undo()
+    assert auto_calls == [fresh_store.base]
+    assert not fresh_store._fs(fresh_store.path("_rollups"))[0].exists(
+        fresh_store._jpath(fresh_store.path("_rollups"))
     )
-    fresh.base = str(tmp_path / "nowhere")  # no _rollups here
-    fallback = fresh.serve(t0, t1, max_points=max_points)
-    assert {"cnt", "sum"} <= set(fallback.columns)  # read_auto coarsened
-
-
-def test_state_log_compaction_and_crash_recovery(spark, cagg_series, tmp_path):
-    """The per-refresh fingerprint appends compact into one snapshot
-    once the file count passes the bound; a crash between the two
-    renames is recovered at the next refresh; fingerprints survive both
-    (nothing spuriously dirty)."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "caggstate"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    store.write_raw(cagg_series)
-    cagg = ContinuousRollups(spark, store)
-    cagg.refresh()
-    for _ in range(3):  # extra no-op-ish appends: more state files
-        cagg._record_fingerprints({d: cagg._day_fingerprint(d) for d in cagg.store.tier_days("raw")})
-
-    fs, root = store._fs(f"{cagg.base}/_state")
-    n_before = len([s for s in fs.listStatus(root) if s.isFile()])
-    assert cagg.compact_state(max_files=2) is True
-    n_after = len([s for s in fs.listStatus(root) if s.isFile()])
-    assert n_after < n_before
-    assert cagg.refresh() == []  # fingerprints preserved, nothing dirty
-
-    # crash window: log parked at _state_old, live _state missing
-    old = spark._jvm.org.apache.hadoop.fs.Path(f"{cagg.base}/_state_old")
-    assert fs.rename(root, old)
-    cagg._recover_state()
-    assert fs.exists(root) and not fs.exists(old)
-    assert cagg.refresh() == []  # restored log still clean
+    c = _pdf(fallback)
+    assert len(c) == len(b) > 0
+    assert np.array_equal(c["cnt"].to_numpy(), b["cnt"].to_numpy())
+    assert np.allclose(c["sum"].to_numpy(), b["sum"].to_numpy(), rtol=0, atol=1e-9)
 
 
 def test_streaming_ingestion_feeds_incremental_rollups(spark, tmp_path):
@@ -295,52 +276,6 @@ def test_streaming_ingestion_feeds_incremental_rollups(spark, tmp_path):
     ingested = store.read_series()
     for g in GRAINS:
         _assert_rollup_equal(cagg.read(g), _recompute(ingested, g))
-
-
-def test_state_compaction_crash_mid_delete_leaves_correct_log(spark, cagg_series, tmp_path):
-    """compact_state's only crash window is between moving the snapshot
-    in and deleting the old files: readers then see old + snapshot,
-    latest-per-updated_at dedup keeps the answer right, and the next
-    compaction sweeps the duplicates."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "caggcrash"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    store.write_raw(cagg_series)
-    cagg = ContinuousRollups(spark, store)
-    cagg.refresh()
-    truth = cagg._recorded_fingerprints()
-
-    # simulate the crash: run a compaction whose old-file deletes never
-    # happen by snapshotting INTO the live dir ourselves
-    fs, root = store._fs(f"{cagg.base}/_state")
-    import pandas as pd
-
-    snap = spark.createDataFrame(
-        pd.DataFrame(
-            {"day": list(truth), "fingerprint": [truth[d] for d in truth]}
-        )
-    ).withColumn("updated_at", F.current_timestamp())
-    staged = spark._jvm.org.apache.hadoop.fs.Path(f"{cagg.base}/_state_new")
-    snap.coalesce(1).write.mode("overwrite").parquet(str(staged))
-    for st in fs.listStatus(staged):
-        if st.isFile() and st.getPath().getName().endswith(".parquet"):
-            fs.rename(
-                st.getPath(),
-                spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{cagg.base}/_state/compacted-crash-{st.getPath().getName()}"
-                ),
-            )
-    fs.delete(staged, True)
-
-    # duplicates present: the log still reads correctly, nothing dirty
-    assert cagg._recorded_fingerprints() == truth
-    assert cagg.refresh() == []
-    # next compaction (forced) sweeps everything into one snapshot
-    assert cagg.compact_state(max_files=1) is True
-    assert cagg._recorded_fingerprints() == truth
-    assert cagg.refresh() == []
 
 
 def test_crash_leftover_duplicate_day_not_double_counted(spark, cagg_series, tmp_path):
@@ -471,38 +406,6 @@ def test_bulk_tier_listing_warns_on_format_drift(spark, cagg_series, tmp_path, m
     assert len(msgs) == 1 and "raw" in msgs[0] and "parsed 0 of" in msgs[0], msgs
 
 
-def test_state_log_mixed_spark_and_pyarrow_files(spark, cagg_series, tmp_path):
-    """Upgrade path for the r7 driver-side log appends: a store whose
-    state log was written by the OLD Spark writer keeps working when
-    the new pyarrow writer appends into the same directory — the read
-    path must consume a MIX of both file vintages (and the lineage log
-    likewise)."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "store"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    store.write_raw(cagg_series)
-    cagg = ContinuousRollups(spark, store)
-    # simulate an r6-era log: one Spark-written append
-    old = spark.createDataFrame(
-        [("1999-01-01", "stale-fp")], "day string, fingerprint string"
-    ).withColumn("updated_at", F.current_timestamp())
-    old.coalesce(1).write.mode("append").parquet(f"{cagg.base}/_state")
-    # the new writer appends pyarrow files next to it
-    refreshed = cagg.refresh()
-    assert refreshed  # all real days were dirty
-    rec = cagg._recorded_fingerprints()
-    # the Spark-written stale row WAS read: the refresh saw the
-    # recorded-but-absent 1999 day and re-marked it EMPTY (the
-    # aged-away handling) — it could only know about that day from
-    # the old-format file
-    assert rec.get("1999-01-01") == "EMPTY"
-    assert all(iso in rec for iso in refreshed)
-    # nothing dirty on a second pass: the mixed log read back exactly
-    assert cagg.refresh() == []
-
-
 def _count_nodes(spark, plan, name, seen_caches):
     """``name`` nodes a physical plan executes: descends into adaptive
     plans and query stages, and into each cached relation's plan once
@@ -626,12 +529,12 @@ def test_refresh_source_read_agrees_with_read_series(spark, cagg_series, aged_st
 
 
 def test_a_log_read_error_is_not_a_missing_log(spark, cagg_series, tmp_path, monkeypatch):
-    """The state log and the lineage log read as "no log yet" only when
-    their directory is missing, which a fresh store's first refresh and
+    """The state file and the lineage log read as "nothing recorded"
+    only when they are missing, which a fresh store's first refresh and
     a first stage find without opening a missing path.  Any other read
-    error raises: read as "no log", an unreadable state log would mark
-    every day dirty and an unreadable lineage log would redo every
-    key."""
+    error raises: read as "nothing recorded", an unreadable state file
+    would mark every day dirty and an unreadable lineage log would redo
+    every key."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from atsc_spark.checkpoint import CheckpointLog, run_stage
@@ -660,13 +563,137 @@ def test_a_log_read_error_is_not_a_missing_log(spark, cagg_series, tmp_path, mon
     assert missing_opens == []
     assert cagg.dirty_days() == []
 
+    class FailingOpen:
+        """The state file's FileSystem, with a failing ``open``."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def open(self, path):
+            raise OSError("injected state read failure")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs = TieredStore._fs
+
+    def state_fs(self, path):
+        fs, p = real_fs(self, path)
+        return (FailingOpen(fs) if path == cagg.state else fs), p
+
+    monkeypatch.setattr(TieredStore, "_fs", state_fs)
+    with pytest.raises(OSError, match="injected state read failure"):
+        cagg.dirty_days()
+    monkeypatch.undo()
+
     def broken_open(self, *paths, **kwargs):
         raise OSError("injected log read failure")
 
     monkeypatch.setattr(DataFrameReader, "parquet", broken_open)
     with pytest.raises(OSError, match="injected log read failure"):
-        cagg.dirty_days()
-    with pytest.raises(OSError, match="injected log read failure"):
         cagg.lineage.read()
     with pytest.raises(OSError, match="injected log read failure"):
         log.completed_keys("count")
+
+
+def _split_last_day(series):
+    last = _max_day(series)
+    return (
+        series.filter(F.to_date("bucket_ts") < F.lit(last)),
+        series.filter(F.to_date("bucket_ts") == F.lit(last)),
+        last,
+    )
+
+
+def test_refresh_job_budget(spark, cagg_series, tmp_path):
+    """A full refresh of two days and a one-dirty-day refresh run a
+    fixed number of Spark jobs.  The fingerprint state is one JSON file
+    read on the driver, so it adds no job to either (the parquet state
+    log it replaced cost 2 jobs per refresh that found one: 11 and 13
+    jobs before, 11 and 11 now)."""
+    store = TieredStore(spark, str(tmp_path / "caggjobs"), TierPolicy(10000, 20000, 30000, 40000))
+    first_days, last_day, last = _split_last_day(cagg_series)
+    store.write_raw(first_days)
+    cagg = ContinuousRollups(spark, store)
+    sc = spark.sparkContext
+
+    def jobs_of_refresh(group):
+        sc.setJobGroup(group, group, False)
+        try:
+            refreshed = cagg.refresh()
+        finally:
+            sc.setJobGroup("", "", False)
+        return refreshed, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    refreshed, full_jobs = jobs_of_refresh("cagg-full-refresh")
+    assert len(refreshed) == 2
+    store.write_raw(last_day)
+    refreshed, one_day_jobs = jobs_of_refresh("cagg-one-day-refresh")
+    assert refreshed == [last.isoformat()]
+    assert full_jobs <= 11, full_jobs
+    assert one_day_jobs <= 11, one_day_jobs
+
+
+def test_state_replace_crash_keeps_the_old_map(spark, cagg_series, tmp_path, monkeypatch):
+    """A refresh that dies after writing the temp state file but before
+    renaming it over the state file raises, leaves the old map in
+    place (its days stay dirty), and a rerun converges to a clean store
+    whose grain tables equal a full recompute."""
+    from atsc_spark import cagg as cagg_mod
+
+    store = TieredStore(spark, str(tmp_path / "caggreplace"), TierPolicy(10000, 20000, 30000, 40000))
+    first_days, last_day, last = _split_last_day(cagg_series)
+    store.write_raw(first_days)
+    cagg = ContinuousRollups(spark, store)
+    cagg.refresh()
+    old_map = cagg._recorded_fingerprints()
+    store.write_raw(last_day)
+
+    tmp_seen = []
+
+    def crashing_replace(spark_, fs, src, dst):
+        tmp_seen.append(fs.exists(src))
+        raise RuntimeError("injected crash before the state rename")
+
+    monkeypatch.setattr(cagg_mod, "_replace", crashing_replace)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cagg.refresh()
+    monkeypatch.undo()
+    assert tmp_seen == [True]  # the temp file was written
+    assert cagg._recorded_fingerprints() == old_map
+    assert cagg.dirty_days() == [last]
+
+    assert cagg.refresh() == [last.isoformat()]
+    assert cagg.dirty_days() == []
+    for grain in GRAINS:
+        _assert_rollup_equal(cagg.read(grain), _recompute(cagg_series, grain))
+
+
+@pytest.mark.parametrize("content", [b'{"2024-01-01": "abc', b"[]"])
+def test_a_corrupt_state_file_raises(spark, cagg_series, tmp_path, content):
+    """An unparseable state file, or one that is not a day -> fingerprint
+    map, raises from ``dirty_days`` and ``refresh``: read as "nothing
+    recorded", it would mark every day dirty.  The failed refresh
+    releases the lease and leaves the file as it was."""
+    store = TieredStore(spark, str(tmp_path / "caggcorrupt"), TierPolicy(10000, 20000, 30000, 40000))
+    store.write_raw(cagg_series)
+    cagg = ContinuousRollups(spark, store)
+    cagg.refresh()
+    fs, state = store._fs(cagg.state)
+    out = fs.create(state, True)  # through the FileSystem: checksums stay valid
+    try:
+        out.write(bytearray(content))
+    finally:
+        out.close()
+
+    with pytest.raises(ValueError):
+        cagg.dirty_days()
+    with pytest.raises(ValueError):
+        cagg.refresh()
+    lock_fs, lock = store._lock_path()
+    assert not lock_fs.exists(lock)
+    stream = fs.open(state)
+    try:
+        assert bytes(stream.readAllBytes()) == content
+    finally:
+        stream.close()

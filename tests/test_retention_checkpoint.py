@@ -159,9 +159,9 @@ def test_append_rows_writers_read_back_identical(spark, tmp_path, monkeypatch):
         return [tuple(r) for r in got]
 
     floor = datetime.now().replace(microsecond=0)
-    append_rows(spark, str(tmp_path / "arrow"), LINEAGE_SCHEMA, rows, "lin")
+    append_rows(spark, str(tmp_path / "arrow"), LINEAGE_SCHEMA, rows)
     monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
-    append_rows(spark, str(tmp_path / "spark"), LINEAGE_SCHEMA, rows, "lin")
+    append_rows(spark, str(tmp_path / "spark"), LINEAGE_SCHEMA, rows)
     monkeypatch.undo()
     arrow, spark_written = read(str(tmp_path / "arrow")), read(str(tmp_path / "spark"))
     assert arrow[0] == spark_written[0]
