@@ -3,19 +3,17 @@
 The reference positions ATSC downstream of "databases that roll their
 time series over" (`/root/reference/README.md:66`); the rollups
 themselves are the continuous-aggregate layer every such database
-maintains.  Round-4 ingestion (`streaming.stream_transcripts_to_store`)
-lands raw rows continuously, but the rollup queries recomputed from
-scratch — at the 100 TB tier that reprocesses a year to pick up one
-day.  This module maintains materialized 1m/1h/1d rollup tables that
-are refreshed ONLY for the day partitions whose underlying tier data
-changed.
+maintains.  Recomputing the rollups from scratch reprocesses a year
+to pick up one appended day at the 100 TB tier.  This module maintains
+materialized 1m/1h/1d rollup tables that are refreshed ONLY for the
+day partitions whose underlying tier data changed.
 
 Change detection is a per-day FILE-SET FINGERPRINT (tier, file name,
 file length — pure FileSystem metadata, no data scan) across the
 raw/tier0/tier1/tier2 tiers.  A day is dirty when its current
-fingerprint differs from the last recorded one — this catches
-streaming appends, compaction rewrites, and retention tier moves
-alike, without trusting any writer to report what it touched.
+fingerprint differs from the last recorded one — this catches raw
+appends and retention tier moves alike, without trusting any writer to
+report what it touched.
 
 The recorded fingerprints live in ONE JSON file, read and written on
 the driver: ``_rollups/_state.json`` (``{day iso: fingerprint}``,

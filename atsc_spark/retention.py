@@ -618,12 +618,20 @@ class TieredStore:
     def _retention_pass_locked(self, today: date) -> list[tuple[str, str]]:
         moves: list[tuple[str, str]] = []
 
-        # finish/roll back any crashed compaction FIRST (its backups
-        # live outside _staging precisely so this wipe stays safe)
-        self._recover_compaction()
+        # an older version's small-files compaction could crash between
+        # its two renames with a day's only copy under _compact_old;
+        # nothing reads it there, so refuse to touch such a store
+        fs, parked = self._fs(self.path("_compact_old"))
+        if fs.exists(parked):
+            raise RuntimeError(
+                f"retention: {parked} holds day directories parked by an older "
+                f"compaction; for each <tier>/day=X under it, move it back to "
+                f"{self.base}/<tier>/day=X if that directory is missing, else "
+                f"delete it, then remove {parked} and rerun"
+            )
         # clear staging leftovers from any crashed previous pass —
         # nothing in _staging is ever committed, so this is safe
-        fs, staging_root = self._fs(self.path("_staging"))
+        _, staging_root = self._fs(self.path("_staging"))
         fs.delete(staging_root, True)
 
         # each day moves from its most faithful holder; the lossier
@@ -730,14 +738,15 @@ class TieredStore:
         counts, src_counts = self._stage(out, staging, src=src)
         return staging, counts, src_counts
 
-    # ------------------------------------------------------- compaction
+    # ---------------------------------------------------------- listing
 
     def _jpath(self, p: str):
         return self.spark._jvm.org.apache.hadoop.fs.Path(p)
 
     def _list_day_files(self, tier: str, day: date) -> set[tuple[str, int]]:
-        """(name, length) of the data files in a day dir — the change
-        detector for concurrent appends."""
+        """(name, length) of the data files in a day dir: a day's
+        fingerprint in :mod:`atsc_spark.cagg` and the per-day fallback of
+        :meth:`_list_tier_files`."""
         out = set()
         for st in self._ls(f"{self.path(tier)}/day={day.isoformat()}"):
             name = st.getPath().getName()
@@ -815,117 +824,6 @@ class TieredStore:
             for day in self.tier_days(tier)
             if (files := self._list_day_files(tier, day))
         }
-
-    def _recover_compaction(self) -> None:
-        """Finish or roll back a crashed compaction: for every day
-        parked under ``_compact_old``, restore it if the live day dir
-        vanished (crash between the two renames), else drop the backup
-        (the new copy committed).  Runs at the start of every
-        compaction and retention pass — a crash can never leave a day's
-        only copy in a wipe-zone."""
-        fs, root = self._fs(self.path("_compact_old"))
-        for tdir in self._ls(self.path("_compact_old")):
-            tier = tdir.getPath().getName()
-            for st in fs.listStatus(tdir.getPath()):
-                dirname = st.getPath().getName()
-                live = self._jpath(f"{self.path(tier)}/{dirname}")
-                if fs.exists(live):
-                    fs.delete(st.getPath(), True)  # commit finished: drop backup
-                else:
-                    fs.mkdirs(live.getParent())
-                    fs.rename(st.getPath(), live)  # crashed mid-swap: restore
-        fs.delete(root, True)
-
-    def compact_tier(
-        self,
-        tier: str = "raw",
-        max_files_per_day: int = 4,
-        before: date | None = None,
-        lease_ttl_s: int = 1800,
-    ) -> list[str]:
-        """Rewrite day partitions that have accumulated more than
-        ``max_files_per_day`` files into one file per day — the
-        small-files maintenance pass (streaming/append ingestion writes
-        a file per micro-batch/job, and at the 100 TB tier a year of
-        that turns every scan into open()-bound metadata churn).
-
-        ONE Spark job for all days needing compaction (rows hash-
-        partition on ``day`` → one output file per day), then a per-day
-        TWO-RENAME swap: live dir → ``_compact_old`` backup, staged dir
-        → live, drop backup.  Every crash window leaves a copy OUTSIDE
-        the ``_staging`` wipe-zone, and :meth:`_recover_compaction`
-        (run at the start of every compaction/retention pass) restores
-        or finishes the swap — a crash can never lose a day.
-
-        Concurrent ingestion: appends do not take the writer lease, so
-        a day that changes between planning and commit (new files /
-        sizes) is SKIPPED this pass, not clobbered; pass ``before``
-        (e.g. today) so actively-ingesting days are never candidates —
-        the standard compact-only-settled-days operating mode.
-        Returns the compacted days.
-        """
-        fs, _ = self._fs(self.base)
-        # Pre-lease QUICK scan only decides whether to bother taking the
-        # lease at all; the authoritative candidate list is rebuilt under
-        # the lease below.  If a crashed swap left backups in
-        # _compact_old we must take the lease too — recovery mutates
-        # live day dirs, and doing it lease-free races a live holder
-        # mid two-rename swap (restoring the backup while the holder's
-        # rename(staged, live) is in flight lands the staged dir INSIDE
-        # the restored live dir → nested day=X/day=X).
-        def _scan_candidates() -> list[date]:
-            out = []
-            for day in self.tier_days(tier):
-                if before is not None and day >= before:
-                    continue
-                if len(self._list_day_files(tier, day)) > max_files_per_day:
-                    out.append(day)
-            return out
-
-        if not _scan_candidates() and not fs.exists(
-            self._jpath(self.path("_compact_old"))
-        ):
-            return []
-
-        with self._leased(lease_ttl_s):
-            # recovery and everything after it mutate live/_compact_old/
-            # _staging — single-writer territory, so only under the lease
-            # (retention_pass likewise recovers inside its locked section)
-            self._recover_compaction()
-            days = _scan_candidates()
-            if not days:
-                return []
-            fs.delete(self._jpath(self.path("_staging")), True)
-            planned = {day: self._list_day_files(tier, day) for day in days}
-            src = self._open_days(tier, days)
-            staging = f"{self.path('_staging')}/{tier}"
-            counts, src_counts = self._stage(
-                src.repartition(len(days), "day"), staging, src=src
-            )
-            done: list[str] = []
-            for day in days:
-                iso = day.isoformat()
-                if counts.get(day, 0) != src_counts.get(day, 0):
-                    # stale staged copy (concurrent append between the
-                    # staging write and validation) or a staging bug —
-                    # either way the LIVE day is the good copy for a
-                    # source==dest rewrite: skip it, never swap stale in
-                    continue
-                if self._list_day_files(tier, day) != planned[day]:
-                    continue  # concurrent append since planning: skip, keep live
-                live = self._jpath(f"{self.path(tier)}/day={iso}")
-                backup = self._jpath(f"{self.path('_compact_old')}/{tier}/day={iso}")
-                staged = self._jpath(f"{staging}/day={iso}")
-                fs.mkdirs(backup.getParent())
-                if not fs.rename(live, backup):
-                    continue  # raced; keep live copy untouched
-                if not fs.rename(staged, live):
-                    fs.rename(backup, live)  # roll back, never leave a gap
-                    raise RuntimeError(f"compaction: swap failed for {iso}")
-                fs.delete(backup, True)
-                done.append(iso)
-            fs.delete(self._jpath(staging), True)
-            return done
 
     # ------------------------------------------------------------- read
 

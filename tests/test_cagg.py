@@ -237,47 +237,6 @@ def test_serve_from_materialized_tables(spark, cagg_series, tmp_path, monkeypatc
     assert np.allclose(c["sum"].to_numpy(), b["sum"].to_numpy(), rtol=0, atol=1e-9)
 
 
-def test_streaming_ingestion_feeds_incremental_rollups(spark, tmp_path):
-    """The full continuous loop: stream transcripts into the store,
-    refresh the continuous aggregates (fingerprints catch the streamed
-    appends without any writer cooperation), stream MORE data, refresh
-    again — the materialized rollups always equal a full recompute of
-    everything ingested so far, and the second refresh touches only
-    the streamed-to days."""
-    from atsc_spark.fixtures import transcripts
-    from atsc_spark.streaming import stream_transcripts_to_store
-
-    inp = str(tmp_path / "incoming")
-    store = TieredStore(
-        spark,
-        str(tmp_path / "streamcagg"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    t1 = transcripts(spark, n_convs=8, window_days=1)
-    t1.write.mode("overwrite").parquet(inp)
-    stream_transcripts_to_store(spark, inp, store).awaitTermination(120)
-
-    cagg = ContinuousRollups(spark, store)
-    assert cagg.refresh()
-    ingested = store.read_series()
-    _assert_rollup_equal(cagg.read("1m"), rollup(ingested, GRAINS["1m"]))
-    assert cagg.refresh() == []  # settled
-
-    # stream a second batch, shifted PAST the first batch's watermark
-    # (same-window data would be dropped as late); fingerprints flag
-    # the newly-appended days
-    t2 = transcripts(spark, n_convs=8, window_days=1, seed=7).withColumn(
-        "ts", F.col("ts") + F.expr("INTERVAL 2 DAYS")
-    )
-    t2.write.mode("append").parquet(inp)
-    stream_transcripts_to_store(spark, inp, store).awaitTermination(120)
-    refreshed = cagg.refresh()
-    assert refreshed  # the appended day(s) went dirty
-    ingested = store.read_series()
-    for g in GRAINS:
-        _assert_rollup_equal(cagg.read(g), _recompute(ingested, g))
-
-
 def test_crash_leftover_duplicate_day_not_double_counted(spark, cagg_series, tmp_path):
     """A crash mid-tier-move can leave a day's data in TWO tiers; the
     refresh must aggregate it from the most faithful copy only, never

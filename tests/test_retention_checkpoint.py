@@ -62,6 +62,35 @@ def test_retention_tiers_and_reads(spark, series, tmp_path):
     assert store.retention_pass(date(2024, 3, 1)) == []
 
 
+def test_appended_raw_day_moves_to_one_tier0_file(spark, series, tmp_path):
+    """Each ``write_raw`` adds a file per day, so a day fed by repeated
+    appends holds many raw files.  The pass that ages it rewrites it as
+    ONE tier0 file with every row, bit-exact: the store needs no
+    separate small-files rewrite."""
+    store = TieredStore(
+        spark,
+        str(tmp_path / "appended"),
+        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
+    )
+    convs = sorted(r.conv_id for r in series.select("conv_id").distinct().collect())
+    for i in range(5):  # five disjoint conv_id slices, one append each
+        store.write_raw(series.filter(F.col("conv_id").isin(convs[i::5])))
+    raw_files = store._list_tier_files("raw")
+    assert raw_files and all(len(f) >= 5 for f in raw_files.values()), raw_files
+    keys = ["conv_id", "metric", "bucket_ts"]
+    before = store.read_series().toPandas().sort_values(keys).reset_index(drop=True)
+
+    store.policy = TierPolicy(t0_days=0, t1_days=10000, t2_days=20000, t3_days=30000)
+    moves = store.retention_pass(date(2024, 3, 1))
+    assert sorted(d for d, _ in moves) == sorted(d.isoformat() for d in raw_files)
+    assert store.tier_days("raw") == []
+    tier0_files = store._list_tier_files("tier0")
+    assert set(tier0_files) == set(raw_files)
+    assert all(len(f) == 1 for f in tier0_files.values()), tier0_files
+    after = store.read_series().toPandas().sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(before, after)
+
+
 def test_retention_lossy_tier(spark, series, tmp_path):
     store = TieredStore(
         spark,
@@ -497,14 +526,48 @@ def test_retention_crash_injection_every_step(spark, series, tmp_path):
     assert store2.read_series().count() == n
 
 
+def test_store_with_parked_compaction_day_fails_loudly(spark, series, tmp_path):
+    """An older version's small-files compaction could crash between
+    its two renames and leave a day's only copy under ``_compact_old``.
+    Nothing reads that copy, so a pass over such a store raises before
+    it changes anything (the ``_staging`` wipe included), names the
+    path, and frees the lease."""
+    store = TieredStore(
+        spark,
+        str(tmp_path / "parked"),
+        TierPolicy(t0_days=0, t1_days=10000, t2_days=20000, t3_days=30000),
+    )
+    store.write_raw(series)
+    iso = store.tier_days("raw")[0].isoformat()
+    fs, _ = store._fs(store.base)
+    parked = store._jpath(f"{store.path('_compact_old')}/raw/day={iso}")
+    fs.mkdirs(parked.getParent())
+    assert fs.rename(store._jpath(f"{store.path('raw')}/day={iso}"), parked)
+    stale = store._jpath(f"{store.path('_staging')}/tier0/leftover")
+    fs.create(stale, True).close()
+
+    def snapshot():
+        tiers = {t: store._list_tier_files(t) for t in ("raw", "tier0", "tier1", "tier2", "rollup")}
+        files = {(st.getPath().getName(), st.getLen()) for st in fs.listStatus(parked)}
+        return tiers, files
+
+    before = snapshot()
+    with pytest.raises(RuntimeError, match="_compact_old"):
+        store.retention_pass(date(2024, 3, 1))
+    assert snapshot() == before
+    assert fs.exists(stale)
+    _, lock = store._lock_path()
+    assert not fs.exists(lock)
+    store._release_lease(store._acquire_lease(ttl_s=1800))
+
+
 def test_retention_pass_job_budget(spark, series, tmp_path, monkeypatch):
     """Each (source -> target) move runs one fit/write and ONE count
     action over the staged files and the source days, so a three-move
     pass has a fixed job budget (24 jobs when each move re-read and
-    counted both sides in four jobs); compaction counts with one
-    action too.  The targets stage on their own threads, and every job
-    they run stays in the caller's job group: a job outside it would
-    escape the budget."""
+    counted both sides in four jobs).  The targets stage on their own
+    threads, and every job they run stays in the caller's job group: a
+    job outside it would escape the budget."""
     import warnings
     from datetime import timedelta
 
@@ -538,21 +601,6 @@ def test_retention_pass_job_budget(spark, series, tmp_path, monkeypatch):
     assert wrapped == [spark] * 3  # one wrap per target, with the session
     assert not [w for w in caught if "Spark session is not provided" in str(w.message)]
     assert store.read_series().count() == series.count()
-
-    compact = TieredStore(spark, str(tmp_path / "budget_compact"), store.policy)
-    for _ in range(5):
-        compact.write_raw(series)
-    collects = []
-    real_collect = type(series).collect
-
-    def counting_collect(self):
-        collects.append(self)
-        return real_collect(self)
-
-    monkeypatch.setattr(type(series), "collect", counting_collect)
-    assert compact.compact_tier("raw", max_files_per_day=4)
-    monkeypatch.undo()
-    assert len(collects) == 1
 
 
 def test_gorilla_magic_guards():
@@ -795,51 +843,6 @@ def test_heartbeat_failure_counted_and_content_fallback(spark, series, tmp_path)
     assert not fs.exists(lock)
 
 
-def test_compact_tier_recovers_under_lease(spark, series, tmp_path):
-    """compact_tier must NOT run crash recovery lease-free: with the
-    lease held by another writer it aborts BEFORE touching the parked
-    _compact_old backup (the lease-free-recovery race from ADVICE r4)."""
-    from atsc_spark.retention import RetentionLockHeld
-
-    store = TieredStore(
-        spark,
-        str(tmp_path / "leaserec"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    for _ in range(5):
-        store.write_raw(series)
-    day = store.tier_days("raw")[0]
-    iso = day.isoformat()
-    fs, lock = store._lock_path()
-
-    # simulate another holder mid two-rename swap: live parked in
-    # _compact_old, lease held
-    live = store._jpath(f"{store.path('raw')}/day={iso}")
-    backup = store._jpath(f"{store.path('_compact_old')}/raw/day={iso}")
-    fs.mkdirs(backup.getParent())
-    assert fs.rename(live, backup)
-    other = TieredStore(spark, store.base, store.policy)
-    other._acquire_lease(ttl_s=1800)
-
-    with pytest.raises(RetentionLockHeld):
-        store.compact_tier("raw", max_files_per_day=4)
-    # the parked backup was NOT touched while the lease was held
-    assert fs.exists(backup)
-    assert not fs.exists(live)
-
-    # holder releases → compaction recovers the day, then compacts
-    other._release_lease()
-    done = store.compact_tier("raw", max_files_per_day=4)
-    assert iso in done
-    assert day in store.tier_days("raw")
-    # no day remains PARKED in _compact_old (empty scaffolding dirs are
-    # fine — the next pass's recovery sweeps them)
-    old_root = store._jpath(store.path("_compact_old"))
-    if fs.exists(old_root):
-        for tdir in fs.listStatus(old_root):
-            assert len(fs.listStatus(tdir.getPath())) == 0
-
-
 def test_read_series_span_filters_reach_tier_scan(spark, series, tier1_store):
     """A time-bounded tier read's span predicate must reach the frames
     parquet scan as PushedFilters on the MATERIALIZED span columns
@@ -942,137 +945,3 @@ def test_retention_writes_lineage_rows(spark, series, tmp_path):
     assert sorted(log.partition_key) == sorted(d for d, _ in moves)
     assert (log.rows_in > 0).all() and (log.rows_out > 0).all()
     assert (log.status == "done").all()
-
-
-def test_compact_tier_merges_small_files(spark, series, tmp_path):
-    """Repeated appends leave many files per day; compaction rewrites
-    each hot day to ONE file via the staged atomic commit with data
-    bit-identical, and is idempotent."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "compact"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    for _ in range(5):  # 5 appends -> >= 5 files per day
-        store.write_raw(series)
-    n = store.read_series().count()
-
-    def files_per_day():
-        fs, _ = store._fs(store.base)
-        out = {}
-        for day in store.tier_days("raw"):
-            p = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{store.path('raw')}/day={day.isoformat()}"
-            )
-            out[day] = sum(
-                1
-                for st in fs.listStatus(p)
-                if st.isFile() and not st.getPath().getName().startswith("_")
-            )
-        return out
-
-    before = files_per_day()
-    assert all(v >= 5 for v in before.values())
-
-    a = store.read_series().toPandas().sort_values(
-        ["conv_id", "metric", "bucket_ts"]
-    ).reset_index(drop=True)
-    compacted = store.compact_tier("raw", max_files_per_day=4)
-    assert sorted(compacted) == sorted(d.isoformat() for d in before)
-    after = files_per_day()
-    assert all(v == 1 for v in after.values()), after
-    b = store.read_series().toPandas().sort_values(
-        ["conv_id", "metric", "bucket_ts"]
-    ).reset_index(drop=True)
-    assert store.read_series().count() == n
-    assert np.array_equal(a["value"].to_numpy(), b["value"].to_numpy())
-
-    # idempotent: nothing left over the threshold
-    assert store.compact_tier("raw", max_files_per_day=4) == []
-
-
-def test_compaction_crash_recovery_never_loses_a_day(spark, series, tmp_path):
-    """The two-rename swap's crash windows: a day parked in
-    _compact_old with the live dir missing is RESTORED by the next
-    pass; with the live dir present the backup is dropped."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "crashrec"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    store.write_raw(series)
-    n = store.read_series().count()
-    day = store.tier_days("raw")[0]
-    iso = day.isoformat()
-    fs, _ = store._fs(store.base)
-
-    # crash window A: live renamed to backup, staged swap never happened
-    live = store._jpath(f"{store.path('raw')}/day={iso}")
-    backup = store._jpath(f"{store.path('_compact_old')}/raw/day={iso}")
-    fs.mkdirs(backup.getParent())
-    assert fs.rename(live, backup)
-    assert store.tier_days("raw")[0] != day or len(store.tier_days("raw")) < 3
-    store._recover_compaction()
-    assert day in store.tier_days("raw")
-    assert store.read_series().count() == n
-
-    # crash window B: commit finished (live exists), stale backup remains
-    fs.mkdirs(backup.getParent())
-    dummy = store._jpath(f"{store.path('_compact_old')}/raw/day={iso}/stale")
-    fs.create(dummy, True).close()
-    store._recover_compaction()
-    assert not fs.exists(store._jpath(f"{store.path('_compact_old')}"))
-    assert store.read_series().count() == n
-
-
-def test_compaction_skips_concurrently_appended_day(spark, series, tmp_path):
-    """A day whose file set changes between planning and commit is
-    skipped (kept live), never clobbered with the stale staged copy."""
-    store = TieredStore(
-        spark,
-        str(tmp_path / "racecompact"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    for _ in range(5):
-        store.write_raw(series)
-    n = store.read_series().count()
-    days = store.tier_days("raw")
-    victim = days[0]
-
-    real_list = store._list_day_files
-    calls = {"n": 0}
-
-    def racing_list(tier, day):
-        out = real_list(tier, day)
-        if day == victim:
-            calls["n"] += 1
-            # per-victim call order: 1 = pre-lease quick scan, 2 =
-            # under-lease candidate scan, 3 = planning snapshot, 4+ =
-            # commit-time re-check.  "Append" lands after planning.
-            if calls["n"] >= 4:
-                out = out | {("concurrent-append.parquet", 123)}
-        return out
-
-    store._list_day_files = racing_list
-    done = store.compact_tier("raw", max_files_per_day=4)
-    store._list_day_files = real_list
-    assert victim.isoformat() not in done
-    assert len(done) == len(days) - 1
-    assert store.read_series().count() == n  # nothing lost either way
-
-
-def test_compact_tier_before_excludes_hot_days(spark, series, tmp_path):
-    from datetime import timedelta
-
-    store = TieredStore(
-        spark,
-        str(tmp_path / "beforec"),
-        TierPolicy(t0_days=10000, t1_days=20000, t2_days=30000, t3_days=40000),
-    )
-    for _ in range(5):
-        store.write_raw(series)
-    days = store.tier_days("raw")
-    cutoff = days[-1]  # treat the newest day as still-ingesting
-    done = store.compact_tier("raw", max_files_per_day=4, before=cutoff)
-    assert cutoff.isoformat() not in done
-    assert len(done) == len(days) - 1
