@@ -1,22 +1,28 @@
-"""Checkpoint / lineage table and resumable stage execution.
+"""Checkpoint / lineage table and the engine's one resumable stage.
 
 North-rule requirement with no reference equivalent (the reference is
-a one-shot CLI).  Every stage run writes one lineage row per partition
-key; a resumed job anti-joins completed keys and recomputes nothing.
+a one-shot CLI).  :func:`run_stage` writes one lineage row per
+partition key it processes; a rerun skips every key with a done-row
+and recomputes nothing.  The pipeline's per-day tier0 and frames
+stages run through it.
 
-The log is an append-only parquet table (an Iceberg table in
-production — append-only means plain parquet is safe here too: a
-partition is "done" iff a done-row exists; duplicate done-rows are
-harmless and resolved by max(attempt)).
+The log is an append-only parquet table: a partition is "done" iff a
+done-row exists, so duplicate done-rows are harmless.
+:func:`append_rows` is its one writer, on every master and filesystem.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -73,19 +79,6 @@ class CheckpointLog:
             .distinct()
         )
 
-    def pending(self, keys: DataFrame, stage: str) -> DataFrame:
-        """Anti-join candidate partition keys against completed ones."""
-        return keys.join(self.completed_keys(stage), "partition_key", "left_anti")
-
-    def attempt_number(self, stage: str) -> int:
-        row = (
-            self.read()
-            .filter(F.col("stage") == stage)
-            .agg(F.max("attempt").alias("a"))
-            .collect()[0]
-        )
-        return (row.a or 0) + 1
-
     def record(self, rows: list[dict]) -> None:
         """Append lineage rows (:func:`append_rows`)."""
         append_rows(
@@ -113,39 +106,35 @@ class CheckpointLog:
 def append_rows(spark: SparkSession, path: str, schema: StructType, rows: list[tuple]) -> None:
     """Append ``rows`` (tuples in ``schema`` order; a None
     ``updated_at`` becomes now) to the small parquet table at ``path``
-    as one file.  A local path in a local-mode session is written
-    DRIVER-SIDE with pyarrow (tmp file + atomic ``os.replace``, named
-    ``lin-<uuid>.parquet``): a Spark write job costs ~1 s of
+    as one file, with no Spark job: a write job costs ~1 s of
     scheduling for a few-KB append, which at one append per stage per
-    refresh dominated the incremental-refresh floor.  Elsewhere a
-    scheme-less path resolves against the session's default Hadoop FS,
-    which need not be the driver's disk, so the Spark writer appends."""
+    refresh would dominate the incremental-refresh floor.  pyarrow
+    builds the file in driver memory; the Hadoop FileSystem of
+    ``path`` (any scheme, or the session's default FS for a
+    scheme-less path) writes it under a ``.tmp-`` name, which readers
+    skip, and renames it to ``lin-<uuid>.parquet``.  The rename keeps a
+    torn file out of the table, where it would make
+    :meth:`CheckpointLog.read` raise."""
     if not rows:
         return
-    local_session = spark.sparkContext.master.startswith("local")
-    if ("://" in path and not path.startswith("file:")) or not local_session:
-        df = spark.createDataFrame(rows, schema).withColumn(
-            "updated_at", F.coalesce("updated_at", F.current_timestamp())
-        )
-        df.coalesce(1).write.mode("append").parquet(path)
-        return
-    import os
-    import uuid
-    from datetime import datetime, timezone
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     now, i = datetime.now(timezone.utc), schema.names.index("updated_at")
     rows = [r[:i] + (r[i] or now,) + r[i + 1 :] for r in rows]
-    local = path[7:] if path.startswith("file://") else path
-    os.makedirs(local, exist_ok=True)
     arrow = to_arrow_schema(schema)
-    tbl = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)], schema=arrow)
-    tmp = os.path.join(local, f".tmp-{uuid.uuid4().hex}.parquet")
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(local, f"lin-{uuid.uuid4().hex}.parquet"))
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(zip(*rows), arrow)], schema=arrow),
+        buf,
+    )
+    hpath, name = spark._jvm.org.apache.hadoop.fs.Path, uuid.uuid4().hex
+    tmp, dst = hpath(path, f".tmp-{name}.parquet"), hpath(path, f"lin-{name}.parquet")
+    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        raise RuntimeError(f"lineage: rename {tmp} -> {dst} failed")
 
 
 def run_stage(
@@ -157,49 +146,48 @@ def run_stage(
     output_path: str,
     metrics_agg=None,
 ) -> StageResult:
-    """Resumable stage: process only partition keys without a 'done'
-    lineage row, write output partitioned by the key, then log.
+    """Resumable stage: process only the partition keys without a
+    'done' lineage row, write the output partitioned by the key, then
+    log one row per processed key.
 
     key_col: a Column producing the string partition key for each
     input row; process: DataFrame -> DataFrame (must preserve a
-    `partition_key` column); metrics_agg: optional dict of extra agg
-    columns for the lineage row (e.g. max_err).
+    `partition_key` column); metrics_agg: optional list of extra agg
+    columns for the lineage row (e.g. bytes_out, max_err).
+
+    Partition keys name output directories, so they are few: one
+    collect gives every key with its ``rows_in``, one read of the
+    stage's log rows gives the done keys and the attempt, and the
+    pending keys are a driver-side list.  A rerun with nothing pending
+    runs those two reads only.
     """
     t0 = time.time()
     keyed = inputs.withColumn("partition_key", key_col)
-    all_keys = keyed.select("partition_key").distinct()
-    todo = log.pending(all_keys, stage)
-    n_total = all_keys.count()
-    n_todo = todo.count()
-    if n_todo == 0:
-        return StageResult(stage, 0, n_total, int((time.time() - t0) * 1000))
+    rows_in = {r["partition_key"]: r["count"] for r in keyed.groupBy("partition_key").count().collect()}
+    logged = log.read().filter(F.col("stage") == stage).select("status", "partition_key", "attempt").collect()
+    done = {r.partition_key for r in logged if r.status == "done"}
+    todo = [k for k in rows_in if k not in done]
+    if not todo:
+        return StageResult(stage, 0, len(rows_in), int((time.time() - t0) * 1000))
 
-    pending_rows = keyed.join(F.broadcast(todo), "partition_key")
-    out = process(pending_rows)
-    # Dynamic partition overwrite: a crash between this write and the
-    # lineage record leaves keys with data but no 'done' row; the
-    # resumed run then REPLACES those keys' partitions instead of
-    # appending duplicate rows (idempotent resume).
-    spark = log.spark
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("partition_key").parquet(output_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    written = log.spark.read.parquet(output_path).join(
-        F.broadcast(todo), "partition_key"
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("rows_out"),
-        *(metrics_agg or []),
-    ]
-    attempt = log.attempt_number(stage)
-    stats = {r["partition_key"]: r.asDict() for r in written.groupBy("partition_key").agg(*aggs).collect()}
-    rows_in = {
-        r["partition_key"]: r["c"]
-        for r in pending_rows.groupBy("partition_key").agg(F.count(F.lit(1)).alias("c")).collect()
+    attempt = max((r.attempt or 0 for r in logged), default=0) + 1
+    out = process(keyed.filter(F.col("partition_key").isin(todo)))
+    # Dynamic partition overwrite, set on this write only: a crash
+    # between this write and the lineage record leaves keys with data
+    # but no 'done' row; the resumed run then REPLACES those keys'
+    # partitions instead of appending duplicate rows (idempotent resume).
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "partition_key"
+    ).parquet(output_path)
+    # read back with the written schema: a day-shaped key stays a
+    # string (inference would make it a date) and no inference job runs
+    written = log.spark.read.schema(out.schema).parquet(output_path)
+    stats = {
+        r["partition_key"]: r.asDict()
+        for r in written.filter(F.col("partition_key").isin(todo))
+        .groupBy("partition_key")
+        .agg(F.count(F.lit(1)).alias("rows_out"), *(metrics_agg or []))
+        .collect()
     }
     wall = int((time.time() - t0) * 1000)
     log.record(
@@ -208,14 +196,14 @@ def run_stage(
                 "stage": stage,
                 "partition_key": k,
                 "status": "done",
-                "rows_in": rows_in.get(k, 0),
+                "rows_in": rows_in[k],
                 "rows_out": stats.get(k, {}).get("rows_out", 0),
-                "bytes_out": stats.get(k, {}).get("bytes_out", 0) or 0,
+                "bytes_out": stats.get(k, {}).get("bytes_out") or 0,
                 "max_err": stats.get(k, {}).get("max_err"),
                 "wall_ms": wall,
                 "attempt": attempt,
             }
-            for k in [r.partition_key for r in todo.collect()]
+            for k in todo
         ]
     )
-    return StageResult(stage, n_todo, n_total - n_todo, wall)
+    return StageResult(stage, len(todo), len(rows_in) - len(todo), wall)

@@ -8,12 +8,17 @@ Run:
 or locally:
     python -m atsc_spark.pipeline --n-convs 500 --store /tmp/store
 
-Stages (each writes per-partition lineage; rerun resumes):
-  1. derive   — transcripts -> series (one hash agg)
-  2. rollup   — 1m/1h/1d continuous aggregates
-  3. tier0    — gorilla lossless blocks
-  4. frames   — ATSC frames at the tier-2 error bound
-  5. retention — age-based raw -> tier replacement
+Stages (each writes lineage rows; a rerun resumes):
+  1. derive    — transcripts -> series (one hash agg); one row
+  2. rollup    — 1m/1h/1d continuous aggregates; one row
+  3. tier0     — gorilla lossless blocks -> ``blocks_all``
+  4. frames    — ATSC frames at the tier-2 error bound -> ``frames_all``
+  5. retention — age-based raw -> tier replacement; one row
+
+tier0 and frames run through :func:`checkpoint.run_stage` with one
+lineage row per day: a rerun recomputes only the days without one.
+Their tables are partitioned by ``partition_key=<day>``, and ``day``
+stays a data column.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from datetime import date
 
 from pyspark.sql import functions as F
 
-from .checkpoint import CheckpointLog
+from .checkpoint import CheckpointLog, run_stage
 from .fixtures import transcripts
 from .frames import compression_report, fit_frames
 from .lossless import fit_lossless
@@ -48,7 +53,7 @@ def run(
 
     def stage(name: str, fn):
         """Skip a whole stage if its lineage row exists (coarse-grained
-        resume; fine-grained per-partition resume is in run_stage)."""
+        resume; the per-day stages resume through run_stage)."""
         if log.completed_keys(name).count() > 0:
             stats[name] = "skipped (checkpoint)"
             return None
@@ -88,88 +93,30 @@ def run(
 
     stage("rollup", s_rollup)
 
-    def per_day_stage(stage_name: str, fit_fn, out_name: str, metric_aggs) -> None:
-        """North-rule mid-tier resume: one lineage row per day
-        partition; a rerun anti-joins completed days and recomputes
-        nothing.  Output appends day-by-day, so a crash mid-stage
-        loses only in-flight days."""
+    # per-day resume: one lineage row per day, so a rerun recomputes
+    # no completed day
+    day_key = F.to_date("bucket_ts").cast("string")
+    for name, fit_fn, out_name, max_err in (
+        ("tier0", fit_lossless, "blocks_all", F.lit(None).cast("double")),
+        ("frames", lambda df: fit_frames(df, max_error=max_error), "frames_all", F.max("error")),
+    ):
         t0 = time.time()
-        keyed = series.withColumn("day", F.to_date("bucket_ts"))
-        all_days = keyed.select(F.col("day").cast("string").alias("partition_key")).distinct()
-        todo = log.pending(all_days, stage_name)
-        todo_days = [r.partition_key for r in todo.collect()]
-        if not todo_days:
-            stats[stage_name] = "skipped (checkpoint, per-day)"
-            return
-        attempt = log.attempt_number(stage_name)
-        pending = keyed.filter(F.col("day").cast("string").isin(todo_days)).drop("day")
-        out = fit_fn(pending)
-        # dynamic partition overwrite: a crash between write and lineage
-        # record reprocesses the day by REPLACING its partition, never
-        # appending a duplicate copy (same fix as checkpoint.run_stage)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("day").parquet(f"{store_base}/{out_name}")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        # stats read-back: compare as strings — with partition-column
-        # type inference disabled the `day` partition reads back as
-        # string and an isin(date) filter silently matches nothing
-        # (rows_out=0 lineage for every day).  The cast-to-string
-        # compare is type-safe either way and Catalyst still prunes
-        # partitions through the cast of a literal-only IN list.
-        written = spark.read.parquet(f"{store_base}/{out_name}").filter(
-            F.col("day").cast("string").isin(todo_days)
+        res = run_stage(
+            log,
+            name,
+            series,
+            day_key,
+            lambda df, fit=fit_fn: fit(df.drop("partition_key")).withColumn(
+                "partition_key", F.col("day").cast("string")
+            ),
+            f"{store_base}/{out_name}",
+            [F.sum("payload_bytes").alias("bytes_out"), max_err.alias("max_err")],
         )
-        per_day = {
-            r.k: r.asDict()
-            for r in written.groupBy(F.col("day").cast("string").alias("k"))
-            .agg(*metric_aggs)
-            .collect()
-        }
-        wall = int((time.time() - t0) * 1000)
-        log.record(
-            [
-                {
-                    "stage": stage_name,
-                    "partition_key": d,
-                    "status": "done",
-                    "rows_out": per_day.get(d, {}).get("rows_out", 0),
-                    "bytes_out": per_day.get(d, {}).get("bytes_out", 0),
-                    "max_err": per_day.get(d, {}).get("max_err"),
-                    "wall_ms": wall,
-                    "attempt": attempt,
-                }
-                for d in todo_days
-            ]
-        )
-        stats[stage_name] = round(time.time() - t0, 2)
+        stats[name] = round(time.time() - t0, 2) if res.processed_keys else "skipped (checkpoint, per-day)"
 
-    per_day_stage(
-        "tier0",
-        fit_lossless,
-        "blocks_all",
-        [
-            F.count(F.lit(1)).alias("rows_out"),
-            F.sum("payload_bytes").alias("bytes_out"),
-            F.lit(None).cast("double").alias("max_err"),
-        ],
-    )
     b = spark.read.parquet(f"{store_base}/blocks_all")
     agg = b.agg(F.sum("raw_bytes").alias("r"), F.sum("payload_bytes").alias("p")).collect()[0]
     stats["gorilla_ratio"] = round(agg.r / max(agg.p, 1), 2)
-
-    per_day_stage(
-        "frames",
-        lambda df: fit_frames(df, max_error=max_error),
-        "frames_all",
-        [
-            F.count(F.lit(1)).alias("rows_out"),
-            F.sum("payload_bytes").alias("bytes_out"),
-            F.max("error").alias("max_err"),
-        ],
-    )
     rep = compression_report(spark.read.parquet(f"{store_base}/frames_all")).collect()
     raw_b = sum(r.raw_bytes for r in rep)
     comp_b = sum(r.payload_bytes for r in rep)

@@ -21,8 +21,13 @@ def test_pipeline_full_and_rerun(spark, tmp_path):
     lineage = CheckpointLog(spark, f"{store}/lineage").read().toPandas()
     frame_rows = lineage[lineage.stage == "frames"]
     assert len(frame_rows) >= 1
+    assert (frame_rows.rows_in > 0).all()
     assert (frame_rows.rows_out > 0).all()
     assert (frame_rows.bytes_out > 0).all()
+    assert frame_rows.rows_out.sum() == spark.read.parquet(f"{store}/frames_all").count()
+    for table in ("frames_all", "blocks_all"):
+        parts = {p.name.split("=")[0] for p in (tmp_path / "p1" / table).iterdir() if p.is_dir()}
+        assert parts == {"partition_key"}, (table, parts)
 
 
 def test_pipeline_mid_tier_resume(spark, tmp_path):

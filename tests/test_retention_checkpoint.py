@@ -143,36 +143,88 @@ def test_retention_rollup_only_tier(spark, series, tmp_path):
 
 
 def test_checkpoint_resume(spark, series, tmp_path):
-    log = CheckpointLog(spark, str(tmp_path / "lineage"))
-    out_path = str(tmp_path / "out")
+    """A rerun recomputes nothing, and each key's lineage row counts
+    its input rows and the rows written for it.  Day-shaped keys are
+    one input: partition inference would read them back as dates, and
+    their rows would then count for no key."""
+    for name, key in (
+        ("metric", F.col("metric")),
+        ("day", F.to_date("bucket_ts").cast("string")),
+    ):
+        log = CheckpointLog(spark, str(tmp_path / f"lineage_{name}"))
+        out_path = str(tmp_path / f"out_{name}")
+        calls = []
 
-    calls = []
+        def process(df):
+            calls.append(1)
+            return df.groupBy("partition_key", "metric").agg(
+                F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
+            )
+
+        keyed = series.withColumn("partition_key", key)
+        want_in = {r.partition_key: r["count"] for r in keyed.groupBy("partition_key").count().collect()}
+        per_key_metrics = keyed.select("partition_key", "metric").distinct().groupBy("partition_key")
+        want_out = {r.partition_key: r["count"] for r in per_key_metrics.count().collect()}
+        assert len(want_in) >= 3
+        if name == "metric":
+            assert set(want_in) == {"turn_rate", "text_len", "tool_calls"}
+
+        r1 = run_stage(log, "agg", series, key, process, out_path)
+        assert r1.processed_keys == len(want_in) and r1.skipped_keys == 0
+
+        # second run: everything already done, nothing recomputed
+        r2 = run_stage(log, "agg", series, key, process, out_path)
+        assert r2.processed_keys == 0 and r2.skipped_keys == len(want_in)
+        assert len(calls) == 1
+
+        lineage = log.read().toPandas()
+        assert (lineage.status == "done").all()
+        assert dict(zip(lineage.partition_key, lineage.rows_in)) == want_in
+        assert dict(zip(lineage.partition_key, lineage.rows_out)) == want_out
+
+
+def test_run_stage_job_budget(spark, series, tmp_path):
+    """A per-day ``fit_frames`` stage runs a fixed number of Spark jobs:
+    one collect of the keys with their input counts, one read of the
+    log, the fit and write, and one read-back of the written rows; a
+    rerun runs only the first two."""
+    from atsc_spark.frames import fit_frames
+
+    log = CheckpointLog(spark, str(tmp_path / "lineage"))
+    sc = spark.sparkContext
 
     def process(df):
-        calls.append(1)
-        return df.groupBy("partition_key", "metric").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
+        return fit_frames(df.drop("partition_key"), max_error=0.03).withColumn(
+            "partition_key", F.col("day").cast("string")
         )
 
-    key = F.col("metric")
-    r1 = run_stage(log, "agg", series, key, process, out_path)
-    assert r1.processed_keys == 3 and r1.skipped_keys == 0
+    def jobs_of_stage(group):
+        sc.setJobGroup(group, group, False)
+        try:
+            res = run_stage(
+                log, "frames", series, F.to_date("bucket_ts").cast("string"), process,
+                str(tmp_path / "frames"), [F.sum("payload_bytes").alias("bytes_out")],
+            )
+        finally:
+            sc.setJobGroup("", "", False)
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # second run: everything already done, nothing recomputed
-    r2 = run_stage(log, "agg", series, key, process, out_path)
-    assert r2.processed_keys == 0 and r2.skipped_keys == 3
-    assert len(calls) == 1
-
+    fresh, fresh_jobs = jobs_of_stage("run-stage-fresh")
+    rerun, rerun_jobs = jobs_of_stage("run-stage-rerun")
+    assert fresh.processed_keys >= 2 and rerun.skipped_keys == fresh.processed_keys
+    assert rerun.processed_keys == 0
+    assert fresh_jobs <= 10, fresh_jobs
+    assert rerun_jobs <= 3, rerun_jobs
     lineage = log.read().toPandas()
-    assert set(lineage.partition_key) == {"turn_rate", "text_len", "tool_calls"}
-    assert (lineage.status == "done").all()
-    assert (lineage.rows_in > 0).all() and (lineage.rows_out > 0).all()
+    assert (lineage.rows_out > 0).all() and (lineage.bytes_out > 0).all()
 
 
 def test_append_rows_writers_read_back_identical(spark, tmp_path, monkeypatch):
-    """The driver-side pyarrow append and the Spark-writer append of
-    the same rows read back identical; a missing ``updated_at`` is
-    filled with the time of the append by both."""
+    """``append_rows`` has one driver-side writer for every master and
+    path scheme: under a local and a cluster master, to a scheme-less
+    and a ``file://`` path, it starts no Spark job, and the rows read
+    back equal to the input, a missing ``updated_at`` filled with the
+    time of the append."""
     from datetime import datetime, timezone
 
     from atsc_spark.checkpoint import LINEAGE_SCHEMA, append_rows
@@ -182,21 +234,25 @@ def test_append_rows_writers_read_back_identical(spark, tmp_path, monkeypatch):
         ("retention:raw->tier0", "2024-01-01", "done", 10, 4, 0, None, 7, 1, at),
         ("cagg:1m", "2024-01-02", "done", 0, 3, 128, 0.0125, 0, 2, None),
     ]
-
-    def read(path):
-        got = spark.read.schema(LINEAGE_SCHEMA).parquet(path).orderBy("partition_key").collect()
-        return [tuple(r) for r in got]
-
+    sc = spark.sparkContext
     floor = datetime.now().replace(microsecond=0)
-    append_rows(spark, str(tmp_path / "arrow"), LINEAGE_SCHEMA, rows)
-    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
-    append_rows(spark, str(tmp_path / "spark"), LINEAGE_SCHEMA, rows)
-    monkeypatch.undo()
-    arrow, spark_written = read(str(tmp_path / "arrow")), read(str(tmp_path / "spark"))
-    assert arrow[0] == spark_written[0]
-    assert arrow[0][-1] == at.astimezone().replace(tzinfo=None)
-    assert arrow[1][:-1] == spark_written[1][:-1] == rows[1][:-1]
-    assert min(arrow[1][-1], spark_written[1][-1]) >= floor
+    for master in ("local[4]", "spark://cluster:7077"):
+        for scheme in ("", "file://"):
+            table = tmp_path / f"{master[:5]}-{scheme[:4] or 'bare'}"
+            group = f"append-rows-{table.name}"
+            monkeypatch.setattr(sc, "master", master)
+            sc.setJobGroup(group, group, False)
+            try:
+                append_rows(spark, f"{scheme}{table}", LINEAGE_SCHEMA, rows)
+            finally:
+                sc.setJobGroup("", "", False)
+                monkeypatch.undo()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], (master, scheme)
+            got = spark.read.schema(LINEAGE_SCHEMA).parquet(str(table)).orderBy("partition_key")
+            got = [tuple(r) for r in got.collect()]
+            assert got[0] == rows[0][:-1] + (at.astimezone().replace(tzinfo=None),)
+            assert got[1][:-1] == rows[1][:-1] and got[1][-1] >= floor
+            assert [p.name[:4] for p in table.glob("*.parquet")] == ["lin-"]
 
 
 def test_retention_tier_progression(spark, series, tmp_path):
